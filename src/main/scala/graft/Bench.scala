@@ -315,7 +315,8 @@ object Bench {
       graft.ops.RelationalOps.pageRankEdges(tiny, 3).count()
       graft.ops.RelationalOps.seededPageRank(tiny, Seq(1L), 3).count()
       graft.ops.RelationalOps.hitsEdges(tiny, 3).count()
-      graft.ops.AdjacencyOps.domainSimilarity(tiny, minCard = 2).count()
+      graft.ops.AdjacencyOps.domainSimilarity(tiny, minCard = 2,
+        maxSourceFanout = graft.ops.AdjacencyOps.ScaleSourceFanout).count()
       (System.nanoTime() - t0) / 1e9
     }
     val results = if (skipSuite) Seq.empty else

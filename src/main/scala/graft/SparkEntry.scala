@@ -163,7 +163,7 @@ object SparkEntry {
         tbl(s, dir, "events").select(
           (col("user_id") % 200).as("src"),
           (abs(floor(col("value") * 13).cast("long")) % 200).as("dst")),
-        minCard = 5)),
+        minCard = 5, maxSourceFanout = AdjacencyOps.ScaleSourceFanout)),
 
     // j12: the reference's production ranking — seeded PR over the j9
     // similarity graph, each similarity row an unweighted bidirectional
@@ -478,7 +478,7 @@ object SparkEntry {
         tbl(s, dir, "events").select(
           (col("user_id") % 200).as("src"),
           (abs(floor(col("value") * 13).cast("long")) % 200).as("dst")),
-        minCard = 5).localCheckpoint()
+        minCard = 5, maxSourceFanout = AdjacencyOps.ScaleSourceFanout).localCheckpoint()
       val focus = sim.agg(min("domain_id")).head().getLong(0)
       val profile = docs(s, dir)
         .groupBy((col("doc_id") % 200).as("domain_id"))

@@ -41,10 +41,10 @@ import org.apache.spark.sql.functions._
   * source's out-degree. The maxCard eligibility cap bounds every VECTOR
   * (so per-pair work and the reference's RAM bound), but hub SOURCES still
   * expand quadratically; the reference tolerates this because it holds the
-  * whole graph in one heap. `maxSourceFanout` (DEFAULT 10 000 — the same
-  * magnitude as maxCard, so pair volume per source is hard-bounded at
-  * 10⁸ and the uncapped quadratic path must be opted into with ≤ 0) drops
-  * hub sources from candidate generation. That is an explicit
+  * whole graph in one heap. `maxSourceFanout` (default 0 = exact, no cap;
+  * callers at scale opt in to [[ScaleSourceFanout]], the same magnitude as
+  * maxCard, which hard-bounds pair volume per source at 10⁸) drops hub
+  * sources from candidate generation. That is an explicit
   * approximation: a pair whose overlap is hub-only loses those candidates
   * — but note such pairs already score 0 on the weighted gate unless the
   * hub is ALSO an eligible dest (source-only ids carry weight 0), so the
@@ -59,12 +59,15 @@ import org.apache.spark.sql.functions._
   */
 object AdjacencyOps {
 
+  /** Source fan-out cap for [[domainSimilarity]] at scale (opt-in). */
+  val ScaleSourceFanout: Int = 10000
+
   def domainSimilarity(links: DataFrame,
                        minCard: Int = 10,
                        maxCard: Int = 10000,
                        topK: Int = 128,
                        threshold: Double = 0.1,
-                       maxSourceFanout: Int = 10000): DataFrame = {
+                       maxSourceFanout: Int = 0): DataFrame = {
     val l = links.select(col("src").cast("long").as("src"),
                          col("dst").cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
@@ -161,7 +164,8 @@ object AdjacencyOps {
     *
     * Scale: [[domainSimilarity]]'s output is topK-bounded per domain, so the
     * derived edge list is ≤ 2·topK·|domains| — strictly smaller than the raw
-    * link graph the textbook variant iterates over.
+    * link graph the textbook variant iterates over. The similarity stage runs
+    * with the [[ScaleSourceFanout]] hub cap.
     */
   def similarityPageRank(links: DataFrame, origins: Seq[Any], iters: Int,
                          minCard: Int = 10): DataFrame = {
@@ -174,7 +178,8 @@ object AdjacencyOps {
     // ~|pairs| rows once and hands PR a leaf-plan input; the blocks are
     // reclaimed by the ContextCleaner once unreferenced (the r3-ADVICE
     // accumulation concern does not apply to checkpoint blocks).
-    val simW = domainSimilarity(links, minCard = minCard).localCheckpoint()
+    val simW = domainSimilarity(links, minCard = minCard,
+      maxSourceFanout = ScaleSourceFanout).localCheckpoint()
     // narrow the (topK-bounded) checkpointed table before the union: the
     // PR entry shuffle's MAP side otherwise launches 2× the checkpoint's
     // partition count in tasks for a few-kB table

@@ -702,6 +702,10 @@ object VectorOps {
   def appendIvfPqIndex(emb: DataFrame, dir: String): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
+    val vecs = emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+    // an empty append batch is a no-op
+    val first = vecs.take(1)
+    if (first.isEmpty) return
     val centers = spark.read.parquet(s"$dir/centroids")
       .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
     val books = spark.read.parquet(s"$dir/books")
@@ -714,12 +718,11 @@ object VectorOps {
     // fail fast on the driver: a dim-mismatched append would otherwise die
     // mid-job with an opaque AIOOBE inside an executor task (short vectors)
     // or silently score tail dims against shorter centroids (long vectors)
-    val dim = emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .head()._2.length
+    val dim = first.head._2.length
     require(dim == centers.head.length && dim == books.length * sub,
       s"appendIvfPqIndex: embedding dim $dim does not match the stored index " +
         s"(coarse dim ${centers.head.length}, m=${books.length} x sub=$sub)")
-    emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+    vecs
       .map { case (id, e) =>
         val cell = nearestCell(bc.value, e)
         val c = bc.value(cell)

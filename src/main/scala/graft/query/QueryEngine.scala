@@ -74,11 +74,13 @@ final case class Subquery(
 /** Full query spec (reference SearchSpecification subset).
   * `pruning` toggles block-max WAND range skipping (exact either way — the
   * toggle exists so tests can assert pruned == unpruned).
-  * `localEvalMaxPostings`: when the pruned candidate universe holds fewer
-  * postings than this, the blocks are collected and the kernel runs on the
-  * driver — no shuffle stage, no executor round-trip (the reference evaluates
-  * every query on one node; we keep the distributed kernel for the long
-  * tail). 0 forces the distributed path. Results are identical either way. */
+  * `localEvalMaxPostings` sizes driver-local evaluation (the reference
+  * evaluates every query on one node): a cached handle fetches a query of
+  * ≤ 16× the cap postings in one job; any other query runs the directory
+  * route — directory job, then one job per range batch (16× the cap, then
+  * 4× larger, WAND-pruned between batches), the rest distributed past 64×
+  * the cap. 0 forces the distributed kernel; multiples saturate, so
+  * Long.MaxValue means no cap. Results are identical on every route. */
 final case class QuerySpec(
     subqueries: Seq[Subquery],
     domains: Seq[Int] = Nil,
@@ -191,19 +193,18 @@ object QueryEngine {
       * index (ForwardIndexReader.java:53-71). With this cache the local-eval
       * fast path collects ONLY the query's posting blobs; bounded by
       * docCount ≤ 4M (≈ tens of MB of encoded blocks). None at larger
-      * scale: the planner then fetches pruned forward blocks per query,
-      * budgeted by [[fwdDir]]. */
+      * scale: each fetch batch then carries its ranges' forward blocks in
+      * the same job as their postings. */
     lazy val fwdRowCache: Option[Map[Long, org.apache.spark.sql.Row]] =
       if (manifest.docCount <= cacheDocLimit)
         Some(QueryEngine.fwdUnified(fwd).collect()
           .map(r => r.getLong(r.fieldIndex("doc_range")) -> r).toMap)
       else None
     /** (doc_range → doc count + doc-meta extremes) directory, cached on the
-      * driver when the range count is bounded (≤1M ranges) — budgets the
-      * local fast path's forward volume AND gives the progressive-fetch
-      * planner real per-range block-max statistics (tight WAND bounds before
-      * anything is fetched). None at larger scale: the planner then runs a
-      * tiny pruned directory job / falls back to optimistic bounds. */
+      * driver when the range count is bounded (≤1M ranges) — gives the
+      * progressive-fetch planner real per-range block-max statistics (tight
+      * WAND bounds before anything is fetched). None at larger scale: the
+      * planner then falls back to optimistic bounds. */
     lazy val fwdDir: Option[Map[Long, QueryEngine.FwdDirEntry]] =
       if (cacheDocLimit > 0 && (manifest.docCount >> manifest.docRangeShift) <= (1L << 20))
         Some(fwd.select("doc_range", "n", "min_rank", "max_asl",
@@ -275,10 +276,12 @@ object QueryEngine {
   }
 
   /** Open with every driver cache OFF — the code paths a >4M-doc snapshot
-    * takes (per-query pruned stats / directory / forward jobs instead of
-    * pinned maps). Results are identical to a cached handle
-    * (RankIdentitySpec extends its path identity here); this exists so the
-    * big-index serving tier is measurable on any snapshot. */
+    * takes: per query, a pruned term-stats job, a block-directory job, and
+    * one job per fetch batch carrying the batch's posting and forward
+    * blocks (three jobs when the query fits one batch), instead of pinned
+    * maps. Results are identical to a cached handle (RankIdentitySpec
+    * extends its path identity here); this exists so the big-index serving
+    * tier is measurable on any snapshot. */
   def openUncached(root: String, spark: SparkSession): Index = {
     val m = Snapshots.currentManifest(root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $root"))
@@ -634,12 +637,6 @@ object QueryEngine {
       }
     }
 
-    def runLocalKernel(postingRows: Array[org.apache.spark.sql.Row],
-                       ranges: Array[Long],
-                       fwdByRange: collection.Map[Long, org.apache.spark.sql.Row]): Array[Candidate] =
-      evalRangesParallel(ranges,
-        postingRows.groupBy(_.getLong(1)), fwdByRange, Double.PositiveInfinity)._1
-
     // ---- single-job fast path: Σ df over every query term is modest and the
     // handle pins stats + forward blocks — fetch ALL of the query's posting
     // blocks in one job, derive the candidate ranges from the fetched rows,
@@ -656,9 +653,10 @@ object QueryEngine {
     // fast path and save the directory + champion-scan + batched-fetch job
     // round-trips that dominate small-query latency in budgeted mode.
     val budgetCannotBite = spec.fetchBudget > 0 && totalDf <= spec.fetchBudget
+    val singleFetchCap = capTimes(spec.localEvalMaxPostings, SingleFetchFactor)
     val singleJobCap =
       if (spec.fetchBudget > 0 && !budgetCannotBite) spec.localEvalMaxPostings
-      else spec.localEvalMaxPostings * 16
+      else singleFetchCap
     if (index.fwdRowCache.isDefined && totalDf <= singleJobCap) {
       val postingRows = postings.select(unifiedPostingCols: _*).collect()
       val byTermRows = postingRows.groupBy(_.getLong(0))
@@ -666,7 +664,8 @@ object QueryEngine {
         .flatMap(h => byTermRows.getOrElse(h, Array.empty).iterator.map(_.getLong(1)))
         .toArray.distinct
       if (ranges.isEmpty) return Nil
-      return selectBest(runLocalKernel(postingRows, ranges, index.fwdRowCache.get), spec)
+      return selectBest(evalRangesParallel(ranges, postingRows.groupBy(_.getLong(1)),
+        index.fwdRowCache.get, Double.PositiveInfinity)._1, spec)
     }
 
     // ---- budgeted single-fetch prefetch (VERDICT r3 task #2) ----------------
@@ -682,7 +681,7 @@ object QueryEngine {
     // latency (BENCH_r03 budgeted p50 752 ms vs exact 172 ms).
     val budgetedPrefetch: Option[Array[org.apache.spark.sql.Row]] =
       if (spec.fetchBudget > 0 && !budgetCannotBite && !QueryEngine.disableBudgetedPrefetch &&
-          index.fwdRowCache.isDefined && totalDf <= spec.localEvalMaxPostings * 16)
+          index.fwdRowCache.isDefined && totalDf <= singleFetchCap)
         Some(postings.select(unifiedPostingCols: _*).collect())
       else None
 
@@ -725,7 +724,7 @@ object QueryEngine {
       dir
     }
 
-    // ---- directory path (big queries / uncached handles) --------------------
+    // ---- directory route (uncached handles, big queries on cached ones) -----
     val blockDir = collectDir()
 
     // candidate universe: ranges of the rarest include term per subquery
@@ -786,7 +785,6 @@ object QueryEngine {
       out.toArray
     }
     if (infos.isEmpty) return Nil
-    val postingsInPlay: Long = infos.iterator.map(_.vol).sum
 
     // planning ranges prune via the shifted range expression; at dirShift 0
     // this is the plain doc_range pushdown
@@ -798,50 +796,50 @@ object QueryEngine {
       else df.join(broadcast(rs.toSeq.toDF("plan_range")),
         planRangeCol(df) === col("plan_range"), "left_semi")
 
-    def fetchPostings(rs: Array[Long]): Array[org.apache.spark.sql.Row] =
-      budgetedPrefetch match {
-        case Some(rows) =>
+    // posting blocks of `rs` in kernel row form, unioned with their forward
+    // blocks (blob_domain non-null marks a forward row) — one scan stage
+    def tagged(rs: Array[Long]): DataFrame =
+      pruneToRanges(postings, rs).select(unifiedPostingCols: _*)
+        .unionByName(fwdUnified(pruneToRanges(index.fwd, rs)), allowMissingColumns = true)
+
+    // distributed kernel: one shuffle of the ranges' blocks by doc_range
+    def distributed(rs: Array[Long], ks: KernelSpec): Array[Candidate] = {
+      val bSpec = spark.sparkContext.broadcast(ks)
+      tagged(rs)
+        .repartition(col("doc_range"))
+        .sortWithinPartitions(col("doc_range"), col("term_hash"))
+        .mapPartitions(QueryKernel.evaluatePartition(bSpec.value))(
+          org.apache.spark.sql.Encoders.product[Candidate])
+        .collect()
+    }
+
+    // one fetch batch in ONE job: (posting rows, forward row) by real range;
+    // uncached handles fetch forward blocks with the postings, cached ones
+    // read the pinned cache (budgeted prefetches slice rows, no job at all)
+    def fetchBatch(rs: Array[Long]): (collection.Map[Long, Array[org.apache.spark.sql.Row]],
+                                      collection.Map[Long, org.apache.spark.sql.Row]) = {
+      val rows = budgetedPrefetch match {
+        case Some(pre) =>
           val set = new java.util.HashSet[java.lang.Long](rs.length * 2)
           rs.foreach(set.add(_))
-          rows.filter(r => set.contains(r.getLong(1) >>> dirShift))
-        case None =>
+          pre.filter(r => set.contains(r.getLong(1) >>> dirShift))
+        case None if index.fwdRowCache.isDefined =>
           pruneToRanges(postings, rs).select(unifiedPostingCols: _*).collect()
+        case None => tagged(rs).collect()
       }
-
-    def fwdFor(rs: Array[Long]): collection.Map[Long, org.apache.spark.sql.Row] =
-      index.fwdRowCache.getOrElse(
-        fwdUnified(pruneToRanges(index.fwd, rs)).collect()
-          .map(r => r.getLong(r.fieldIndex("doc_range")) -> r).toMap)
-
-    // forward volume budget for the one-shot local path (uncached handles)
-    val allRanges: Array[Long] = infos.map(_.range)
-    val fwdInPlay: Long =
-      if (index.fwdRowCache.isDefined) 0L
-      else if (postingsInPlay > spec.localEvalMaxPostings) Long.MaxValue // moot
-      else index.fwdDir.filter(_ => dirShift == 0) match { // real-range keys only
-        case Some(m) => allRanges.iterator.map(r => m.get(r).map(_.n.toLong).getOrElse(0L)).sum
-        case None =>
-          val r = pruneToRanges(index.fwd.select($"doc_range", $"n"), allRanges)
-            .agg(sum($"n")).collect()(0)
-          if (r.isNullAt(0)) 0L else r.getLong(0)
-      }
-
-    if (postingsInPlay + fwdInPlay <= spec.localEvalMaxPostings) {
-      // ---- one-shot driver-local kernel: one posting-fetch job ------------
-      // evaluation runs per REAL range, recovered from the fetched rows
-      val rows = fetchPostings(allRanges)
-      val realRanges = rows.map(_.getLong(1)).distinct
-      return selectBest(runLocalKernel(rows, realRanges, fwdFor(allRanges)), spec)
+      val (fwdRows, postingRows) = rows.partition(r => !r.isNullAt(7))
+      (postingRows.groupBy(_.getLong(1)),
+       index.fwdRowCache.getOrElse(fwdRows.iterator.map(r => r.getLong(1) -> r).toMap))
     }
 
     if (spec.localEvalMaxPostings > 0) {
       // ---- progressive driver-local WAND fetch ----------------------------
-      // Ranges in ascending-bound order; fetch a budget's worth of posting
-      // volume per job, evaluate into ONE selection, drop every remaining
-      // range whose optimistic bound can no longer beat the threshold. A
-      // head-term query touches a couple of batches instead of shuffling its
-      // whole posting list; this is the fetch-budget role of the reference's
-      // IndexQueryExecutor budgets, made deterministic and exact.
+      // Ranges in ascending-bound order; fetch a batch (first 16× the cap,
+      // so most queries take one) per job, evaluate into ONE selection, drop
+      // every remaining range whose optimistic bound can no longer beat the
+      // threshold. A head-term query touches a few batches instead of
+      // shuffling its whole posting list: the fetch-budget role of the
+      // reference's IndexQueryExecutor budgets, made deterministic and exact.
       // budgeted mode (spec.fetchBudget > 0): the reference's deterministic
       // fetch-size early termination (IndexQueryExecutor budgets) — process
       // ranges in RANK order (best documents first, the posting layout's
@@ -878,11 +876,11 @@ object QueryEngine {
         if (budgeted) infos.sortBy(i => (!championRanges.contains(i.range), i.range))
         else infos.sortBy(i => (i.bound, i.range))
       var batchVol: Long =
-        if (budgeted) math.max(spec.fetchBudget * 2, 32768L)
-        else spec.localEvalMaxPostings
+        if (budgeted) math.max(capTimes(spec.fetchBudget, 2), 32768L)
+        else singleFetchCap
       var fetched = 0L
       var scoredTotal = 0L
-      val fetchCap = spec.localEvalMaxPostings * 64
+      val fetchCap = capTimes(spec.localEvalMaxPostings, 64)
       var spill: Array[RInfo] = Array.empty
       while (rest.nonEmpty) {
         val th = sel.nonPrioThreshold
@@ -900,17 +898,15 @@ object QueryEngine {
             }
             val batch = rest.take(cut)
             rest = rest.drop(cut)
-            val brs = batch.map(_.range)
-            val fwdByRange = fwdFor(brs)
-            val byRange = fetchPostings(brs).groupBy(_.getLong(1))
-            // per REAL range (brs are planning ranges when dirShift > 0)
+            val (byRange, fwdByRange) = fetchBatch(batch.map(_.range))
+            // per REAL range (batch ranges are planning ranges when dirShift > 0)
             val (cands, scored) =
               evalRangesParallel(byRange.keys.toArray, byRange, fwdByRange, th)
             cands.foreach(sel.add)
             sel.scored += scored - cands.length // adds counted once already
             scoredTotal += scored
             fetched += volAcc
-            batchVol *= 4 // fewer, bigger jobs when pruning can't converge
+            batchVol = capTimes(batchVol, 4) // fewer, bigger jobs when pruning can't converge
           }
         }
       }
@@ -918,36 +914,24 @@ object QueryEngine {
       if (spill.isEmpty) return selectBest(local, spec)
       // pathological residue (fetch cap blown): finish distributed, seeding
       // the kernel gate with the threshold the local phase already earned
-      val kSpec2 = kSpec.copy(seedThreshold = sel.nonPrioThreshold)
-      val spillRanges = spill.map(_.range)
-      val tagged = pruneToRanges(postings, spillRanges).select(unifiedPostingCols: _*)
-        .unionByName(fwdUnified(pruneToRanges(index.fwd, spillRanges)), allowMissingColumns = true)
-      val bSpec = spark.sparkContext.broadcast(kSpec2)
-      val distCands = tagged
-        .repartition(col("doc_range"))
-        .sortWithinPartitions(col("doc_range"), col("term_hash"))
-        .mapPartitions(QueryKernel.evaluatePartition(bSpec.value))(
-          org.apache.spark.sql.Encoders.product[Candidate])
-        .collect()
-      return selectBest(local ++ distCands, spec)
+      return selectBest(local ++ distributed(spill.map(_.range),
+        kSpec.copy(seedThreshold = sel.nonPrioThreshold)), spec)
     }
 
-    // ---- distributed kernel (localEvalMaxPostings == 0): one shuffle -------
-    val tagged = pruneToRanges(postings, allRanges).select(unifiedPostingCols: _*)
-      .unionByName(fwdUnified(pruneToRanges(index.fwd, allRanges)), allowMissingColumns = true)
-    val bSpec = spark.sparkContext.broadcast(kSpec)
-    val candidates = tagged
-      .repartition(col("doc_range"))
-      .sortWithinPartitions(col("doc_range"), col("term_hash"))
-      .mapPartitions(QueryKernel.evaluatePartition(bSpec.value))(
-        org.apache.spark.sql.Encoders.product[Candidate])
-      .collect()
-    selectBest(candidates, spec)
+    // ---- distributed kernel (localEvalMaxPostings == 0) ---------------------
+    selectBest(distributed(infos.map(_.range), kSpec), spec)
   }
 
   /** One block-directory entry: (term, planning range, postings, block-max
     * position count) — the planner's view of one posting block. */
   private[query] final case class DirRow(term: Long, range: Long, n: Int, maxPc: Int)
+
+  /** Fast-path cap and first batch, in multiples of `localEvalMaxPostings`. */
+  private final val SingleFetchFactor = 16
+
+  /** `v × k` saturating at Long.MaxValue (a cap near it means no cap). */
+  private def capTimes(v: Long, k: Int): Long =
+    if (v > Long.MaxValue / k) Long.MaxValue else v * k
 
   /** Test hook: force budgeted queries down the job-per-batch directory path
     * even when the single-fetch prefetch applies, so OpsSpec can assert the

@@ -114,16 +114,21 @@ class AdjacencySpec extends AnyFunSuite {
     assert(got === bruteForce(links, 2, 10000, 128, 0.1))
   }
 
+  /** Hub source 1 fans out to 15 dests (12..24 share ONLY the hub); source
+    * 2 covers {10, 11} as well. 1 and 2 are dests themselves so their
+    * weights are live and hub-only pairs would otherwise survive the
+    * weighted gate. */
+  private val hubLinks = (10L to 24L).map(d => (1L, d)) ++
+    Seq[(Long, Long)]((2L, 10L), (2L, 11L), (5L, 1L), (5L, 2L))
+
+  private def runFanout(f: Option[Int]) = {
+    val df = hubLinks.toDF("src", "dst")
+    f.fold(AdjacencyOps.domainSimilarity(df, minCard = 2))(fo =>
+      AdjacencyOps.domainSimilarity(df, minCard = 2, maxSourceFanout = fo))
+  }
+
   test("maxSourceFanout drops hub sources from pair generation, keeps norms") {
-    // hub source 1 fans out to 15 dests (12..24 share ONLY the hub); source
-    // 2 covers {10, 11} as well. 1 and 2 are dests themselves so their
-    // weights are live and hub-only pairs would otherwise survive the
-    // weighted gate.
-    val links = (10L to 24L).map(d => (1L, d)) ++
-      Seq[(Long, Long)]((2L, 10L), (2L, 11L), (5L, 1L), (5L, 2L))
-    def runF(f: Int) = AdjacencyOps.domainSimilarity(
-      links.toDF("src", "dst"), minCard = 2, maxSourceFanout = f)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def runF(f: Int) = runFanout(Some(f)).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     // uncapped: quadratic hub expansion — every pair among 12..24 appears
     val uncapped = runF(0)
     assert(uncapped.contains((12L, 13L)) && uncapped.size > 13 * 12)
@@ -132,6 +137,23 @@ class AdjacencySpec extends AnyFunSuite {
     // connect {2, 10, 11}); every hub-only pair among 12..24 is gone
     assert(runF(10).toSet === Set(
       (10L, 11L), (11L, 10L), (2L, 10L), (10L, 2L), (2L, 11L), (11L, 2L)))
+  }
+
+  test("domainSimilarity's default is exact: no source fan-out cap, hubs kept") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val byDefault = runFanout(None)
+    // the default keeps the hub's pairs, exactly as an explicit 0 does
+    assert(rows(byDefault) === rows(runFanout(Some(0))))
+    assert(rows(byDefault).exists(r => r._1 == 12L && r._2 == 13L), "hub-only pair kept")
+    assert(rows(byDefault) === bruteForce(hubLinks, 2, 10000, 128, 0.1))
+    // and its plan holds no fan-out filter at all, so a hub past the
+    // ScaleSourceFanout opt-in (10 000) stays too — a fixture that large
+    // would expand 10^8 pairs
+    def fanoutFilter(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.toString.contains("fo#")
+    assert(!fanoutFilter(byDefault))
+    assert(fanoutFilter(runFanout(Some(AdjacencyOps.ScaleSourceFanout))))
   }
 
   test("exploreSimilar: fwd-wins dedup, per-direction has_more, indexed join") {

@@ -118,6 +118,9 @@ class OpsSpec extends AnyFunSuite {
     assert(cosAC < 0.8, s"fixture broken: cos(a,c)=$cosAC")
   }
 
+  // "one-shot local" is the lifted-cap fast path (a single local job); the
+  // "progressive WAND fetch" covers both the single-batch directory route of
+  // an uncached handle and the multi-batch route under a small cap
   test("query paths agree: one-shot local, progressive WAND fetch, distributed") {
     import graft.build.{IndexBuilder, IndexConf}
     import graft.fixtures.Fixtures
@@ -126,6 +129,7 @@ class OpsSpec extends AnyFunSuite {
     IndexBuilder.buildFromCorpus(spark, Fixtures.tinyCorpus(spark).toDF(), root, "snap-1",
       IndexConf(numBuckets = 8, docRangeShift = 6))
     val idx = QueryEngine.open(root)
+    val uncached = QueryEngine.openUncached(root, spark)
     val queries = Seq("tok000", "tok000 tok001", "tok042 -tok001", "f64 tok002",
       "tok000 ?rl_3_0", "\"alpha beta\" tok000")
     // compare ids/scores/flags; results_from_domain is a clamped diagnostic
@@ -133,20 +137,33 @@ class OpsSpec extends AnyFunSuite {
     // path happened to surface (documented in Selection.emit)
     def key(rs: Seq[graft.query.SearchResult]) =
       rs.map(r => (r.url_id, r.domain_id, r.ranking, r.has_priority_term, r.score))
+    // cap 16: the directory route's first batch (16x the cap) holds 256
+    // postings, below the head-term queries' candidate volume
+    val progressiveCap = 16L
+    var batchJobs = Map.empty[String, Seq[Int]]
+    // pin the handle's driver caches before any job counting
+    assert(idx.fwdRowCache.isDefined && idx.statsCache.isDefined && idx.fwdDir.isDefined)
     queries.foreach { q =>
       val base = QueryParser.parse(q)
-      val oneShot = key(QueryEngine.search(spark, idx,
+      // a cached handle with the cap lifted: the single-job fast path
+      val fastPath = key(QueryEngine.search(spark, idx,
         base.copy(localEvalMaxPostings = Long.MaxValue)))
-      // budget 256 forces multi-batch progressive fetch on head terms
-      val progressive = key(QueryEngine.search(spark, idx,
-        base.copy(localEvalMaxPostings = 256L)))
+      // an uncached handle at the default cap: stats, directory, one batch
+      val singleBatch = key(QueryEngine.search(spark, uncached, base))
+      var progressive: Seq[(Int, Int, Int, Boolean, Double)] = Nil
+      // on a cached handle the route runs the directory job, then one job per batch
+      batchJobs += q -> JobCounter.stagesPerJob(spark) {
+        progressive = key(QueryEngine.search(spark, idx,
+          base.copy(localEvalMaxPostings = progressiveCap)))
+      }.drop(1)
       val progressiveUnpruned = key(QueryEngine.search(spark, idx,
-        base.copy(localEvalMaxPostings = 256L, pruning = false)))
+        base.copy(localEvalMaxPostings = progressiveCap, pruning = false)))
       val distributed = key(QueryEngine.search(spark, idx,
         base.copy(localEvalMaxPostings = 0L)))
-      assert(progressive === oneShot, s"progressive vs one-shot for '$q'")
-      assert(progressiveUnpruned === oneShot, s"unpruned progressive for '$q'")
-      assert(distributed === oneShot, s"distributed vs one-shot for '$q'")
+      assert(singleBatch === fastPath, s"single-batch directory route vs fast path for '$q'")
+      assert(progressive === fastPath, s"progressive vs fast path for '$q'")
+      assert(progressiveUnpruned === fastPath, s"unpruned progressive for '$q'")
+      assert(distributed === fastPath, s"distributed vs fast path for '$q'")
       // budgeted mode must return a rank-order-consistent PREFIX-quality
       // subset: every budgeted hit must be a real doc of the exact result's
       // candidate universe (same subquery semantics), and ids are unique
@@ -157,8 +174,13 @@ class OpsSpec extends AnyFunSuite {
       // budgeted result must EQUAL exact (and takes the single-job fast path)
       val budgetNoBite = key(QueryEngine.search(spark, idx,
         base.copy(fetchBudget = 1L << 30)))
-      assert(budgetNoBite === oneShot, s"no-bite budget vs exact for '$q'")
+      assert(budgetNoBite === fastPath, s"no-bite budget vs exact for '$q'")
     }
+    // stage counts of the batch jobs: at least two, none an exchange
+    // (the distributed spill past 64x the cap would add a shuffle)
+    val headBatches = batchJobs("tok000 tok001")
+    assert(headBatches.size >= 2 && headBatches.forall(_ == 1),
+      s"the progressive cap must leave the head-term query several batches: $batchJobs")
   }
 
   test("budgeted single-fetch path: identical results, no more jobs than exact") {
@@ -191,23 +213,11 @@ class OpsSpec extends AnyFunSuite {
     // 2) job budget (VERDICT r3 task #2 done-criterion): at SERVING settings
     //    (default spec), a budgeted query must launch no more Spark jobs
     //    than the same query in exact mode
-    class JobCounter extends org.apache.spark.scheduler.SparkListener {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    def jobsDuring(f: => Unit): Int = {
-      val l = new JobCounter
-      spark.sparkContext.addSparkListener(l)
-      try { f; Thread.sleep(400); l.n.get } // listener bus drains async
-      finally spark.sparkContext.removeSparkListener(l)
-    }
     queries.foreach { q =>
       val base = QueryParser.parse(q)
       QueryEngine.search(spark, idx, base) // warm any lazy plan state
-      val exactJobs = jobsDuring(QueryEngine.search(spark, idx, base))
-      val budgetedJobs = jobsDuring(
+      val exactJobs = JobCounter.jobsDuring(spark)(QueryEngine.search(spark, idx, base))
+      val budgetedJobs = JobCounter.jobsDuring(spark)(
         QueryEngine.search(spark, idx, base.copy(fetchBudget = 8192L)))
       assert(budgetedJobs <= exactJobs,
         s"'$q': budgeted launched $budgetedJobs jobs > exact's $exactJobs")
@@ -1084,6 +1094,18 @@ class OpsSpec extends AnyFunSuite {
     val brute = VectorOps.annTopK(emb, 0L, 20).collect().map(_.getLong(0)).toSet
     val recall = (brute & prunedIds).size
     assert(recall >= 6, s"IVF-PQ recall@20 at nProbe=4/8 collapsed: $recall")
+  }
+
+  test("appendIvfPqIndex: an empty append batch is a no-op") {
+    import java.nio.file.Files
+    import spark.implicits._
+    val emb = (0 until 64).map(i =>
+      (i.toLong, Array.tabulate(16)(j => math.sin(i * 7.0 + j).toFloat))).toDF("vec_id", "embedding")
+    val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "ivfpqe").toString
+    VectorOps.buildIvfPqIndex(emb, dir, k = 4, iters = 1, m = 8, kSub = 16)
+    val before = spark.read.parquet(s"$dir/codes").count()
+    VectorOps.appendIvfPqIndex(emb.where(lit(false)), dir)
+    assert(spark.read.parquet(s"$dir/codes").count() === before)
   }
 
   test("appendIvfPqIndex: no-retrain append serves identically from stored artifacts") {

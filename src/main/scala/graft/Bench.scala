@@ -3,7 +3,10 @@ package graft
 import graft.build.{IndexBuilder, IndexConf}
 import graft.fixtures.Fixtures
 import graft.query.{QueryEngine, QueryParser}
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import org.apache.spark.sql.SparkSession
+
+import scala.util.control.NonFatal
 
 /** Per-round benchmark (driver contract: ONE JSON line on stdout).
   *
@@ -213,9 +216,13 @@ object Bench {
     * to `scaling` so the record itself carries the VM's same-day scaling
     * ceilings (single shared memory bus: memcpy historically ~0.65 from
     * 2→8 busy cores, spin ~0.94; a real 4×-node cluster multiplies buses
-    * with cores). Child processes are python3 one-liners (present in this
-    * sandbox); any failure degrades to NaN → null in the JSON. */
-  private def probeEff(kind: String, lo: Int, hi: Int, durS: Int): Double = try {
+    * with cores). Child processes are python3 one-liners; any failure
+    * degrades to NaN → null in the JSON, and so does a host with fewer
+    * than `hi` cores. Every child is destroyed before the
+    * probe returns, and its stderr is discarded. */
+  private def probeEff(kind: String, lo: Int, hi: Int, durS: Int): Double =
+    if (Runtime.getRuntime.availableProcessors() < hi) Double.NaN
+    else try {
     val spin =
       "import time,sys\n" +
         "dur=float(sys.argv[1]);t0=time.time();c=0;x=1.0001\n" +
@@ -234,18 +241,58 @@ object Bench {
         "print(c*64/dur)"
     val script = if (kind == "spin") spin else mem
     def run(n: Int): Double = {
-      val procs = (0 until n).map(c =>
-        new ProcessBuilder("taskset", "-c", c.toString, "python3", "-c",
-          script, durS.toString).start())
-      procs.map { p =>
-        val o = new String(p.getInputStream.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        p.waitFor()
-        o.trim.toDouble
-      }.sum
+      val procs = scala.collection.mutable.ArrayBuffer.empty[Process]
+      try {
+        (0 until n).foreach(c => procs += new ProcessBuilder("taskset", "-c", c.toString,
+          "python3", "-c", script, durS.toString)
+          .redirectError(ProcessBuilder.Redirect.DISCARD).start())
+        procs.map { p =>
+          val o = new String(p.getInputStream.readAllBytes(),
+            java.nio.charset.StandardCharsets.UTF_8)
+          p.waitFor()
+          o.trim.toDouble
+        }.sum
+      } finally procs.foreach(_.destroyForcibly())
     }
     (run(hi) / run(lo)) / (hi.toDouble / lo)
-  } catch { case _: Throwable => Double.NaN }
+  } catch { case NonFatal(_) => Double.NaN }
+
+  /** One suite slot's outcome: its time in seconds, the rows it counted,
+    * and the error it threw, if any. A slot that threw has no valid time. */
+  final case class SlotRun(seconds: Double, rows: Long, error: Option[String]) {
+    def json: String = error match {
+      case None    => s"""{"status":"ok","rows":$rows}"""
+      case Some(e) =>
+        val quoted = new String(JsonStringEncoder.getInstance().quoteAsString(e))
+        s"""{"status":"error","error":"$quoted"}"""
+    }
+  }
+
+  /** Runs one slot and counts its rows; a throw is recorded as the slot's
+    * error, never as a timing. */
+  private def runSlot(spark: SparkSession, sfDir: String,
+                      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): SlotRun = {
+    val t0 = System.nanoTime()
+    try {
+      val rows = fn(spark, sfDir).count()
+      SlotRun((System.nanoTime() - t0) / 1e9, rows, None)
+    } catch { case NonFatal(e) => SlotRun((System.nanoTime() - t0) / 1e9, -1L, Some(e.toString)) }
+  }
+
+  /** A slot timed best-of-two when its first sample lies outside
+    * (`resampleUnder`, `episodeOver`); an error in either run makes the
+    * slot an error. */
+  private[graft] def timeSlot(spark: SparkSession, sfDir: String,
+                              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+                              resampleUnder: Double, episodeOver: Double): SlotRun = {
+    val first = runSlot(spark, sfDir, fn)
+    if (first.error.nonEmpty || (first.seconds >= resampleUnder && first.seconds <= episodeOver)) first
+    else {
+      val second = runSlot(spark, sfDir, fn)
+      if (second.error.nonEmpty) second
+      else if (second.seconds < first.seconds) second else first
+    }
+  }
 
   private def percentile(sorted: Array[Double], p: Double): Double =
     if (sorted.isEmpty) 0.0
@@ -321,14 +368,7 @@ object Bench {
     }
     val results = if (skipSuite) Seq.empty else
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          try { fn(sparkSuite, sfDir).count() } catch { case _: Throwable => -1L }
-          (System.nanoTime() - t0) / 1e9
-        }
-        val first = once()
-        name -> (if (first < resampleUnder || first > episodeOver)
-                   math.min(first, once()) else first)
+        name -> timeSlot(sparkSuite, sfDir, fn, resampleUnder, episodeOver)
       }
     // materialize the scaling corpus once (input is a stored table, not a
     // generator — north rule input_hint)
@@ -545,8 +585,13 @@ object Bench {
       if (x.isNaN) "null" else (math.rint(x * 1000) / 1000).toString
     def r4(x: Double): String =
       if (x.isNaN) "null" else (math.rint(x * 10000) / 10000).toString
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    // an errored slot has no time: null in `queries`, its error in `slots`
+    val qs = results.map { case (k, v) =>
+      "\"" + k + "\":" + (if (v.error.isEmpty) r3(v.seconds) else "null")
+    }.mkString("{", ",", "}")
+    val slots = results.map { case (k, v) => "\"" + k + "\":" + v.json }.mkString("{", ",", "}")
+    val slotErrors = results.count(_._2.error.nonEmpty)
+    val total = results.filter(_._2.error.isEmpty).map(_._2.seconds).sum
     def scalingJson(prs: Seq[(Double, Double)], n: Long): String = {
       val pj = prs.map { case (lo, hi) =>
         s"""{"lo":${r1(lo)},"hi":${r1(hi)},"eff":${r4((hi / lo) / (highCores.toDouble / lowCores))}}"""
@@ -564,6 +609,11 @@ object Bench {
     val latencyU = latJson(latU, p50U, p95U)
     val loadJson = loadTest.map(j => s""","load_test":$j""").getOrElse("")
     val probeJson = s""","machine_probe":{"spin_eff":${r4(probeSpin)},"memcpy_eff":${r4(probeMem)},"dur_s":$probeDur,"cores_low":$lowCores,"cores_high":$highCores}"""
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","suite_warmup_s":${r1(suiteWarmupS)},"queries":$qs,"sf":"$sfDir","scaling":$scaling,"scaling_2m":$scaling2m$probeJson,"query_latency":$latency,"query_latency_budgeted":$latencyB,"query_latency_uncached":$latencyU$loadJson}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","slot_errors":$slotErrors,"slots":$slots,"suite_warmup_s":${r1(suiteWarmupS)},"queries":$qs,"sf":"$sfDir","scaling":$scaling,"scaling_2m":$scaling2m$probeJson,"query_latency":$latency,"query_latency_budgeted":$latencyB,"query_latency_uncached":$latencyU$loadJson}""")
+    if (slotErrors > 0) {
+      System.err.println(s"$slotErrors suite slot(s) failed: " +
+        results.filter(_._2.error.nonEmpty).map(_._1).mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -132,23 +132,31 @@ final case class SearchResult(
 
 /** Distributed BM25 top-k query engine over a committed index snapshot.
   *
-  * Physical plan per query (SURVEY §3.1 Spark rebuild):
-  *   1. driver planner: term hashes + df lookup from term_stats (scan pruned
-  *      to the terms' hash buckets — partition pruning is the pushdown)
-  *   2. scan posting blocks of the query's terms only (bucket-pruned),
-  *      further pruned to the doc ranges of the rarest include term
-  *      (the reference orders terms by selectivity the same way,
-  *      SearchIndex.compareKeywords:159-171)
-  *   3. one shuffle of those blocks by docRange co-locates every term's
-  *      postings for the same doc range with the forward block
-  *   4. mapPartitions kernel: block-max WAND over doc ranges — ranges whose
-  *      score upper bound (from per-block max position counts + the range's
-  *      domain rank) cannot beat the partition's current capped top-k are
-  *      skipped without decoding; surviving ranges run galloping sorted
-  *      intersection (J1) with skip-pointer group decode, merge exclusion
-  *      (J2), metadata filter (F7), and exact scoring (R1-R9)
-  *   5. tiny collect of per-partition capped top sets; final comparator +
-  *      per-domain cap (A8/O3) on the driver.
+  * Per query (SURVEY §3.1 Spark rebuild), every index read goes through the
+  * handle's [[BlockReader]]: a plain RDD job over the bucket-pruned parquet
+  * files of one table, each task reading its file with parquet-mr's filter2
+  * API (`term_hash IN`, `doc_range` intervals; row groups pruned by their
+  * statistics). No per-query read is planned by Catalyst.
+  *   1. driver planner: term hashes + df lookup — the handle's pinned stats,
+  *      or one term_stats read over the terms' hash buckets
+  *   2. a cached handle whose query fits 16× the local cap fetches all of
+  *      its posting blocks in one read and evaluates on the driver; every
+  *      other query reads the block directory (term, range, count,
+  *      block-max) of its terms' ranges, narrowed to the rank prefixes of a
+  *      domain restriction
+  *   3. ranges of the rarest include term per subquery bound the candidate
+  *      universe (the reference orders terms by selectivity the same way,
+  *      SearchIndex.compareKeywords:159-171); block-max WAND bounds order
+  *      them, and batches of ranges are fetched — posting and forward
+  *      blocks in one job — and evaluated into one driver-local selection
+  *      whose threshold drops ranges that can no longer qualify
+  *   4. kernel: galloping sorted intersection (J1) with skip-pointer group
+  *      decode, merge exclusion (J2), metadata filter (F7), and exact scoring
+  *      (R1-R9)
+  *   5. past 64× the cap (or with the cap at 0) the rest runs distributed:
+  *      one shuffle of the ranges' blocks by doc_range, the kernel per
+  *      partition, a tiny collect of per-partition capped top sets; final
+  *      comparator + per-domain cap (A8/O3) on the driver.
   *
   * At 1000-executor scale the only data motion is the query's own posting
   * blocks (a few MB for typical terms) — never the corpus. Ranges arrive
@@ -162,10 +170,11 @@ object QueryEngine {
     * (QueryVariants.isOmittableWord:205-210) — shared with PosSegments. */
   private val OmittableWords: Set[String] = PosSegments.OmittableWords
 
-  /** Loaded handle on one snapshot. The table DataFrames are created once per
-    * handle: Spark caches the parquet FileIndex inside the plan, so repeated
-    * queries skip file listing and footer reads — the reference's
-    * memory-mapped always-open readers (SearchIndexReader), Spark-style. */
+  /** Loaded handle on one snapshot. Its [[BlockReader]] lists each serving
+    * table's files once and serves every per-query read as a prepared RDD
+    * job — the reference's always-open readers (SearchIndexReader),
+    * Spark-style. The table DataFrames serve only the one-time driver-cache
+    * pins below, which read whole tables. */
   final class Index(val root: String, val manifest: Snapshots.Manifest,
                     spark: SparkSession,
                     /** Driver-cache budget in docs: handles of snapshots at or
@@ -178,14 +187,16 @@ object QueryEngine {
                     val cacheDocLimit: Long = 1L << 22) {
     def dir: String = Snapshots.stagingDir(root, manifest.snapshotId).toString
     lazy val termStats: DataFrame = spark.read.parquet(s"$dir/term_stats")
-    lazy val postings: DataFrame = spark.read.parquet(s"$dir/postings")
     lazy val fwd: DataFrame = spark.read.parquet(s"$dir/fwd")
+    private[graft] lazy val reader: BlockReader =
+      new BlockReader(spark.sparkContext, dir, manifest.numBuckets)
+    def hasPrioTier: Boolean = manifest.stagesDone.contains("postings_prio")
     /** Priority-tier postings (docIds of flag-carrying occurrences), present
       * when the snapshot was built with IndexConf.buildPrioTier — the
       * budgeted query path reads it as a champion list (reference
       * SearchIndex.createQueries:93-157 scans the prio tier first). */
     lazy val prioPostings: Option[DataFrame] =
-      if (manifest.stagesDone.contains("postings_prio"))
+      if (hasPrioTier)
         Some(spark.read.parquet(s"$dir/postings_prio"))
       else None
     /** Forward blocks pinned on the driver in kernel row form, keyed by
@@ -276,12 +287,13 @@ object QueryEngine {
   }
 
   /** Open with every driver cache OFF — the code paths a >4M-doc snapshot
-    * takes: per query, a pruned term-stats job, a block-directory job, and
-    * one job per fetch batch carrying the batch's posting and forward
-    * blocks (three jobs when the query fits one batch), instead of pinned
-    * maps. Results are identical to a cached handle (RankIdentitySpec
-    * extends its path identity here); this exists so the big-index serving
-    * tier is measurable on any snapshot. */
+    * takes: per query, three or more [[BlockReader]] jobs instead of pinned
+    * maps — a term-stats read, a block-directory read, and one read per
+    * fetch batch carrying the batch's posting and forward blocks (three
+    * single-stage jobs when the query fits one batch). Results are
+    * identical to a cached handle (RankIdentitySpec extends its path
+    * identity here); this exists so the big-index serving tier is
+    * measurable on any snapshot. */
   def openUncached(root: String, spark: SparkSession): Index = {
     val m = Snapshots.currentManifest(root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $root"))
@@ -311,8 +323,6 @@ object QueryEngine {
 
   private def search(spark: SparkSession, index: Index, specIn: QuerySpec,
                      liveStats: Option[LiveStats]): Seq[SearchResult] = {
-    import spark.implicits._
-
     // `near:` resolution (reference DbNearDomainsQuery): the repo's
     // neighborhood (self + linked domains, ≤ the build-time cap) becomes the
     // domain restriction, plus the neighbors' posting-order ranks for scan
@@ -457,7 +467,6 @@ object QueryEngine {
     // hash set for the STATS lookup — includes gate candidates; the postings
     // scan's hash set is derived after gating, from live subqueries only
     val statsHashes = termHash.values.toSeq.distinct
-    val statsBuckets = statsHashes.map(h => IndexBuilderRef.bucketOf(h, index.manifest.numBuckets)).distinct
 
     // ---- planner metadata ---------------------------------------------------
     // With the handle's pinned stats (small snapshots): df lookups are
@@ -479,12 +488,8 @@ object QueryEngine {
           (statsHashes.flatMap(h => m.get(h).filter(_._1 > 0L).map(h -> _._1)).toMap,
            statsHashes.flatMap(h => m.get(h).map(h -> _._2)).toMap)
         case None =>
-          val rows = index.termStats
-            .where($"bucket".isin(statsBuckets: _*) && $"term_hash".isin(statsHashes: _*))
-            .select($"term_hash", $"df_full", $"df_prio")
-            .collect()
-          (rows.iterator.map(r => r.getLong(0) -> r.getLong(1)).toMap,
-           rows.iterator.map(r => r.getLong(0) -> r.getLong(2)).toMap)
+          val rows = index.reader.termStats(statsHashes).rows
+          (rows.iterator.map(r => r._1 -> r._2).toMap, rows.iterator.map(r => r._1 -> r._3).toMap)
       }
     }
     val docCount = liveStats.map(_.docCount).getOrElse(index.manifest.docCount)
@@ -537,7 +542,6 @@ object QueryEngine {
     val hashes: Seq[Long] = liveSubqueries.flatMap(sq =>
       sq.include ++ sq.exclude ++ sq.priority ++ sq.advice ++ sq.coherences.flatten)
       .distinct.map(termHash).distinct
-    val buckets = hashes.map(h => IndexBuilderRef.bucketOf(h, index.manifest.numBuckets)).distinct
 
     // Domain restriction with known ranks (near:/site:/search-set
     // resolution) prunes the posting SCAN: doc_range = (rank << 32 | urlId)
@@ -545,19 +549,15 @@ object QueryEngine {
     // [rank << (32-shift), (rank+1) << (32-shift)) — a site-restricted query
     // touches only its neighborhood's rank prefixes (the same locality the
     // reference gets from its rank-encoded posting order). Expressed as
-    // RANGE predicates on the raw column (not a shift expression) so they
-    // push into the parquet scan and prune row groups by doc_range min/max
-    // stats. The kernel's exact per-doc domain filter remains the backstop
-    // for rank collisions.
+    // doc_range intervals (not a shift expression) so they prune row
+    // groups by doc_range min/max stats. The kernel's exact per-doc domain
+    // filter remains the backstop for rank collisions.
     val rankPrefix = 32 - index.manifest.docRangeShift
-    val postings0 = index.postings
-      .where($"bucket".isin(buckets: _*) && $"term_hash".isin(hashes: _*))
-    val postings =
-      if (spec.domainRanks.isEmpty || rankPrefix < 0) postings0
-      else postings0.where(spec.domainRanks.map { r =>
-        val lo = r.toLong << rankPrefix
-        $"doc_range" >= lo && $"doc_range" < lo + (1L << rankPrefix)
-      }.reduce(_ || _))
+    val rankRanges: Seq[BlockReader.Ranges] =
+      if (spec.domainRanks.isEmpty || rankPrefix < 0) Nil
+      else Seq(BlockReader.Ranges.of(spec.domainRanks.map(_.toLong), rankPrefix))
+    def postingBlocks(): Array[org.apache.spark.sql.Row] =
+      index.reader.blocks(hashes, rankRanges, fwd = None).rows
 
     // ---- head-term directory guard (VERDICT r2 task #3) ---------------------
     // The planner's block directory is one row per (query term, doc range);
@@ -599,13 +599,6 @@ object QueryEngine {
       docRangeShift = index.manifest.docRangeShift,
       pruning = spec.pruning,
       strategy = spec.strategy)
-
-    val unifiedPostingCols = Seq(
-      col("term_hash"), col("doc_range"), col("n"), col("max_pos_count"),
-      col("blob"), col("skip_docs"), col("skip_offs"),
-      lit(null).cast("binary").as("blob_domain"),
-      lit(null).cast("array<bigint>").as("dom_skip_docs"),
-      lit(null).cast("array<int>").as("dom_skip_offs"))
 
     // Parallel driver-local evaluation: ranges are interleaved across worker
     // threads (rank order spreads evenly), each thread runs its own Selection
@@ -658,7 +651,7 @@ object QueryEngine {
       if (spec.fetchBudget > 0 && !budgetCannotBite) spec.localEvalMaxPostings
       else singleFetchCap
     if (index.fwdRowCache.isDefined && totalDf <= singleJobCap) {
-      val postingRows = postings.select(unifiedPostingCols: _*).collect()
+      val postingRows = postingBlocks()
       val byTermRows = postingRows.groupBy(_.getLong(0))
       val ranges = rarestTerms.iterator
         .flatMap(h => byTermRows.getOrElse(h, Array.empty).iterator.map(_.getLong(1)))
@@ -682,7 +675,7 @@ object QueryEngine {
     val budgetedPrefetch: Option[Array[org.apache.spark.sql.Row]] =
       if (spec.fetchBudget > 0 && !budgetCannotBite && !QueryEngine.disableBudgetedPrefetch &&
           index.fwdRowCache.isDefined && totalDf <= singleFetchCap)
-        Some(postings.select(unifiedPostingCols: _*).collect())
+        Some(postingBlocks())
       else None
 
     // (term_hash, doc_range, n, max_pos_count): block directory — everything
@@ -692,33 +685,10 @@ object QueryEngine {
     def collectDir(): Array[QueryEngine.DirRow] = {
       val dir = budgetedPrefetch match {
         case Some(rows) =>
-          if (dirShift == 0)
-            rows.map(r => QueryEngine.DirRow(r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3)))
-          else {
-            val m = new java.util.HashMap[(Long, Long), Array[Int]]()
-            rows.foreach { r =>
-              val k = (r.getLong(0), r.getLong(1) >>> dirShift)
-              val acc = m.computeIfAbsent(k, _ => Array(0, 0))
-              acc(0) += r.getInt(2)
-              acc(1) = math.max(acc(1), r.getInt(3))
-            }
-            val out = new Array[QueryEngine.DirRow](m.size())
-            var i = 0
-            m.forEach { (k, v) => out(i) = QueryEngine.DirRow(k._1, k._2, v(0), v(1)); i += 1 }
-            out
-          }
-        case None =>
-          val df0 =
-            if (dirShift == 0)
-              postings.select($"term_hash", $"doc_range", $"n", $"max_pos_count")
-            else postings
-              .select($"term_hash",
-                shiftrightunsigned($"doc_range", dirShift).as("doc_range"),
-                $"n", $"max_pos_count")
-              .groupBy($"term_hash", $"doc_range")
-              .agg(sum($"n").cast("int").as("n"), max($"max_pos_count").as("max_pos_count"))
-              .select($"term_hash", $"doc_range", $"n", $"max_pos_count")
-          df0.collect().map(r => QueryEngine.DirRow(r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3)))
+          val dir = rows.iterator.map(r =>
+            QueryEngine.DirRow(r.getLong(0), r.getLong(1) >>> dirShift, r.getInt(2), r.getInt(3)))
+          if (dirShift == 0) dir.toArray else BlockReader.DirEmit.merge(dir)
+        case None => index.reader.directory(hashes, rankRanges, dirShift).rows
       }
       QueryEngine.lastDirStats = (dirShift, dir.length)
       dir
@@ -786,32 +756,13 @@ object QueryEngine {
     }
     if (infos.isEmpty) return Nil
 
-    // planning ranges prune via the shifted range expression; at dirShift 0
-    // this is the plain doc_range pushdown
-    def planRangeCol(df: DataFrame): org.apache.spark.sql.Column =
-      if (dirShift == 0) df("doc_range")
-      else shiftrightunsigned(df("doc_range"), dirShift)
-    def pruneToRanges(df: DataFrame, rs: Array[Long]): DataFrame =
-      if (rs.length <= 8192) df.where(planRangeCol(df).isin(rs.toSeq: _*))
-      else df.join(broadcast(rs.toSeq.toDF("plan_range")),
-        planRangeCol(df) === col("plan_range"), "left_semi")
-
-    // posting blocks of `rs` in kernel row form, unioned with their forward
-    // blocks (blob_domain non-null marks a forward row) — one scan stage
-    def tagged(rs: Array[Long]): DataFrame =
-      pruneToRanges(postings, rs).select(unifiedPostingCols: _*)
-        .unionByName(fwdUnified(pruneToRanges(index.fwd, rs)), allowMissingColumns = true)
+    // planning ranges `rs` as doc_range intervals (real ranges at dirShift 0)
+    def planned(rs: Array[Long]): BlockReader.Ranges = BlockReader.Ranges.of(rs, dirShift)
 
     // distributed kernel: one shuffle of the ranges' blocks by doc_range
-    def distributed(rs: Array[Long], ks: KernelSpec): Array[Candidate] = {
-      val bSpec = spark.sparkContext.broadcast(ks)
-      tagged(rs)
-        .repartition(col("doc_range"))
-        .sortWithinPartitions(col("doc_range"), col("term_hash"))
-        .mapPartitions(QueryKernel.evaluatePartition(bSpec.value))(
-          org.apache.spark.sql.Encoders.product[Candidate])
-        .collect()
-    }
+    def distributed(rs: Array[Long], ks: KernelSpec): Array[Candidate] =
+      index.reader.distributed(hashes, rankRanges, planned(rs), ks,
+        spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
     // one fetch batch in ONE job: (posting rows, forward row) by real range;
     // uncached handles fetch forward blocks with the postings, cached ones
@@ -823,9 +774,10 @@ object QueryEngine {
           val set = new java.util.HashSet[java.lang.Long](rs.length * 2)
           rs.foreach(set.add(_))
           pre.filter(r => set.contains(r.getLong(1) >>> dirShift))
-        case None if index.fwdRowCache.isDefined =>
-          pruneToRanges(postings, rs).select(unifiedPostingCols: _*).collect()
-        case None => tagged(rs).collect()
+        case None =>
+          val batch = planned(rs)
+          index.reader.blocks(hashes, rankRanges :+ batch,
+            fwd = if (index.fwdRowCache.isDefined) None else Some(batch)).rows
       }
       val (fwdRows, postingRows) = rows.partition(r => !r.isNullAt(7))
       (postingRows.groupBy(_.getLong(1)),
@@ -861,15 +813,9 @@ object QueryEngine {
           case Some(m) =>
             hashes.iterator.flatMap(h => m.getOrElse(h, Array.empty[Long]).iterator)
               .map(_ >>> dirShift).toSet
-          case None => index.prioPostings match {
-            case Some(pp) =>
-              val rc =
-                if (dirShift == 0) col("doc_range")
-                else shiftrightunsigned(col("doc_range"), dirShift)
-              pp.where($"bucket".isin(buckets: _*) && $"term_hash".isin(hashes: _*))
-                .select(rc.as("r")).distinct().collect().map(_.getLong(0)).toSet
-            case None => Set.empty
-          }
+          case None =>
+            if (!index.hasPrioTier) Set.empty
+            else index.reader.prioRanges(hashes, dirShift).rows.toSet
         }
       QueryEngine.lastChampionRanges = championRanges.size
       var rest: Array[RInfo] =
@@ -924,7 +870,7 @@ object QueryEngine {
 
   /** One block-directory entry: (term, planning range, postings, block-max
     * position count) — the planner's view of one posting block. */
-  private[query] final case class DirRow(term: Long, range: Long, n: Int, maxPc: Int)
+  private[graft] final case class DirRow(term: Long, range: Long, n: Int, maxPc: Int)
 
   /** Fast-path cap and first batch, in multiples of `localEvalMaxPostings`. */
   private final val SingleFetchFactor = 16
@@ -1058,13 +1004,7 @@ object QueryEngine {
           p.statsCache match {
             case Some(m) => hs.flatMap(h => m.get(h).map(h -> _)).toMap
             case None =>
-              val buckets = hs.map(h =>
-                IndexBuilderRef.bucketOf(h, p.manifest.numBuckets)).distinct
-              p.termStats
-                .where(col("bucket").isin(buckets: _*) && col("term_hash").isin(hs: _*))
-                .select(col("term_hash"), col("df_full"), col("df_prio"))
-                .collect()
-                .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+              p.reader.termStats(hs).rows.map { case (h, f, pr) => h -> ((f, pr)) }.toMap
           }
         }.reduce { (a, b) =>
           (a.keySet ++ b.keySet).map { h =>

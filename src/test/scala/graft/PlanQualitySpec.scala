@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan assertions: the scale story depends on predicates reaching
   * the parquet scans (PushedFilters), partition pruning on `bucket`, and
@@ -69,6 +70,69 @@ class PlanQualitySpec extends AnyFunSuite {
       s"doc_range upper bound not pushed:\n$plan")
   }
 
+  /** The tiny corpus written with ~1 KB row groups, so every bucket file of
+    * postings and every forward file holds several: the prepared reader's
+    * statistics pruning then shows as row groups skipped. */
+  private lazy val smallGroups: QueryEngine.Index = {
+    val root = Files.createTempDirectory(java.nio.file.Paths.get("target"), "rowgroups").toString
+    val small = Seq("parquet.block.size" -> "1024", "parquet.page.size.row.check.min" -> "4")
+    small.foreach { case (k, v) => spark.conf.set(k, v) }
+    try IndexBuilder.buildFromCorpus(spark, Fixtures.tinyCorpus(spark).toDF(), root, "snap-1",
+      IndexConf(numBuckets = 8, docRangeShift = 6))
+    finally small.foreach { case (k, _) => spark.conf.unset(k) }
+    QueryEngine.open(root, spark)
+  }
+
+  test("prepared reader opens only the query's bucket files") {
+    val idx = smallGroups
+    val h = graft.core.Hashes.termHash("tok000")
+    val bucket = (((h % 8) + 8) % 8).toInt
+    def files(table: String) = {
+      val d = java.nio.file.Paths.get(idx.dir, table, s"bucket=$bucket")
+      Files.list(d).iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".parquet")).toSeq.sorted
+    }
+    val postings = idx.reader.blocks(Seq(h), Nil, fwd = None)
+    assert(postings.files.map(f => new org.apache.hadoop.fs.Path(f).getName).sorted === files("postings"))
+    assert(postings.files.forall(_.contains(s"/postings/bucket=$bucket/")), postings.files)
+    val want = spark.read.parquet(s"${idx.dir}/postings").where(col("term_hash") === h).count()
+    assert(postings.rows.length === want && postings.rows.forall(_.getLong(0) == h))
+    val stats = idx.reader.termStats(Seq(h))
+    assert(stats.files.nonEmpty && stats.files.forall(_.contains(s"/term_stats/bucket=$bucket/")),
+      stats.files)
+    assert(stats.rows.map(_._1).toSeq === Seq(h))
+  }
+
+  test("prepared reader skips row groups by term_hash and rank-prefix doc_range statistics") {
+    import BlockReader.Ranges
+    val idx = smallGroups
+    val h = graft.core.Hashes.termHash("tok000")
+    val term = idx.reader.blocks(Seq(h), Nil, fwd = None)
+    assert(term.rowGroups >= 4, s"fixture: ${term.rowGroups} row groups in the bucket")
+    assert(term.rowGroupsRead < term.rowGroups,
+      s"term_hash statistics pruned nothing: ${term.rowGroupsRead}/${term.rowGroups}")
+
+    // a rank prefix (near:/site: restriction) as a doc_range interval
+    val rankPrefix = 32 - 6
+    val ranks = term.rows.map(_.getLong(1) >>> rankPrefix).distinct.sorted
+    val rank = ranks(ranks.length / 2)
+    val prefix = Ranges.of(Seq(rank), rankPrefix)
+    val narrowed = idx.reader.blocks(Seq(h), Seq(prefix), fwd = None)
+    assert(narrowed.rows.map(_.getLong(1)).sorted.toSeq ===
+      term.rows.map(_.getLong(1)).filter(prefix.contains).sorted.toSeq)
+    assert(narrowed.rowGroupsRead < term.rowGroupsRead,
+      s"rank prefix pruned no posting row group: ${narrowed.rowGroupsRead}/${term.rowGroupsRead}")
+
+    // forward blocks are sorted by doc_range within each file
+    val fwd = idx.reader.blocks(Nil, Nil, fwd = Some(prefix))
+    val wantFwd = spark.read.parquet(s"${idx.dir}/fwd")
+      .where(col("doc_range") >= (rank << rankPrefix) && col("doc_range") < ((rank + 1) << rankPrefix))
+      .select("doc_range").collect().map(_.getLong(0)).sorted.toSeq
+    assert(fwd.rows.map(_.getLong(1)).sorted.toSeq === wantFwd)
+    assert(fwd.rowGroupsRead < fwd.rowGroups,
+      s"rank prefix pruned no forward row group: ${fwd.rowGroupsRead}/${fwd.rowGroups}")
+  }
+
   test("persisted IVF probe scan prunes cell partitions") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "ivfplan").toString
@@ -103,6 +167,9 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("whole-stage codegen covers the relational operator chain") {
+    // the test JVM turns the interpreted fallback off (build.sbt), so a
+    // method past the 64 KB limit fails its test instead of running slowly
+    assert(spark.conf.get("spark.sql.codegen.fallback") === "false")
     val df = spark.read.parquet(s"$indexDir/postings")
       .groupBy("bucket").agg(sum("n").as("postings"))
     df.collect() // finalize the adaptive plan — codegen spans appear post-AQE

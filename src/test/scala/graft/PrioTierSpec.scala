@@ -66,5 +66,9 @@ class PrioTierSpec extends AnyFunSuite {
     val prio = QueryEngine.search(spark, QueryEngine.open(rootPrio, spark), spec)
     assert(QueryEngine.lastChampionRanges === 1)
     assert(prio.exists(_.url_id == N), "champion range evaluated inside the budget")
+    // an uncached handle reads the champion ranges from the prio tier per query
+    val uncached = QueryEngine.search(spark, QueryEngine.openUncached(rootPrio, spark), spec)
+    assert(QueryEngine.lastChampionRanges === 1)
+    assert(uncached === prio)
   }
 }

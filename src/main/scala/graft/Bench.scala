@@ -22,11 +22,10 @@ import scala.util.control.NonFatal
   *      measured on this VM, ≥24 concurrent threads incur 7-10% hypervisor
   *      steal + erratic multi-10s stalls, so 8 is the widest level the
   *      sandbox serves honestly. The VM's own MEMORY BUS scales memcpy at
-  *      only ~0.65 from 2→8 busy cores (scripts/bandwidth_probe.sh) — a
+  *      only ~0.65 from 2→8 busy cores (the record's `machine_probe`) — a
   *      hard ceiling on any bandwidth-bound workload measured this way that
   *      a real 4×-node cluster does not have (nodes bring buses) — see
-  *      BASELINE.md "Scaling methodology" for the bracket construction
-  *      (raw = lower bound, SPARK_GRAFT_BUS_EQUALIZE control = upper).
+  *      BASELINE.md "Scaling methodology".
   *   3. `query_latency` — p50/p95 ms over the 32-query reference set
   *      (RankIdentitySpec's list) against the built index, budgets disabled.
   *
@@ -88,87 +87,6 @@ object Bench {
     ()
   }
 
-  /** Bus-equalized control (opt-in, SPARK_GRAFT_BUS_EQUALIZE): while the lo
-    * side builds on its `lo` pinned cores, saturate the other `hi − lo`
-    * cores with memcpy hogs (dd from tmpfs), so BOTH sides of the pair run
-    * at the SAME memory-bus operating point. Rationale: this VM's bus is the
-    * binding resource — pure memcpy itself scales at only ~0.65 from 2→8
-    * busy cores (scripts/bandwidth_probe.sh), while pure compute scales at
-    * ~0.94 — and a real cluster at 4× the NODES brings 4× the buses, so the
-    * raw thread-scaled ratio under-reports cluster scaling by construction.
-    * Holding total bus pressure constant isolates what the criterion is
-    * after: does the ENGINE add coordination/serial overhead at 4× the
-    * parallelism? Reported as `efficiency_bus_equalized`, never as the
-    * headline number. */
-  private def startHogs(loCores: Int, hiCores: Int): Seq[Process] = {
-    val big = s"$workDir/hogfile"
-    val p = java.nio.file.Paths.get(big)
-    if (!java.nio.file.Files.exists(p)) {
-      val buf = new Array[Byte](1 << 20)
-      val out = java.nio.file.Files.newOutputStream(p)
-      (0 until 512).foreach(_ => out.write(buf)); out.close()
-    }
-    (loCores until hiCores).map { c =>
-      new ProcessBuilder("taskset", "-c", c.toString, "sh", "-c",
-        s"while :; do dd if=$big of=/dev/null bs=1M 2>/dev/null; done").start()
-    }
-  }
-
-  private def stopHogs(hogs: Seq[Process]): Unit = hogs.foreach { h =>
-    h.descendants().forEach(d => { d.destroyForcibly(); () })
-    h.destroyForcibly(); h.waitFor()
-  }
-
-  /** Child-JVM build (opt-in, SPARK_GRAFT_CHILD_JVM): run one timed build in
-    * a FRESH JVM pinned to cores 0..n-1 with -XX:ActiveProcessorCount=n, so
-    * GC worker counts, Spark's internal thread pools, and
-    * availableProcessors-derived sizing all match the advertised core count
-    * — the faithful model of "a cluster of N cores". In-process pinning
-    * (taskset alone) still leaves GC/pool sizing at the launch-time 32, which
-    * mis-sizes BOTH sides. The child does one small untimed build first so
-    * pair 1 isn't JIT-cold. */
-  private def childBuild(cores: Int, corpusPath: String, nDocs: Long,
-                         root: String): Double = {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val addOpens = Seq("java.lang", "java.lang.invoke", "java.lang.reflect",
-      "java.io", "java.net", "java.nio", "java.util", "java.util.concurrent",
-      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-      "sun.security.action", "sun.util.calendar")
-      .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-    val cmd = Seq("taskset", "-c", s"0-${cores - 1}", javaBin) ++ addOpens ++ Seq(
-      s"-XX:ActiveProcessorCount=$cores", "-Xmx24g",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.Bench", "--build-once", corpusPath, root, cores.toString,
-      nDocs.toString, workDir)
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    val p = pb.start()
-    val out = new String(p.getInputStream.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val code = p.waitFor()
-    require(code == 0, s"child build exited $code")
-    out.linesIterator.collectFirst {
-      case l if l.startsWith("DOCS_PER_SEC=") => l.stripPrefix("DOCS_PER_SEC=").toDouble
-    }.getOrElse(sys.error(s"child build printed no DOCS_PER_SEC: $out"))
-  }
-
-  /** Entry point of the child JVM spawned by [[childBuild]]. */
-  private def buildOnceMain(args: Array[String]): Unit = {
-    val Array(corpusPath, root, coresS, nDocsS, work) = args
-    workDir = work
-    val spark = session(coresS.toInt)
-    spark.sparkContext.setLogLevel("ERROR")
-    // untimed warm-up: JIT the tokenize/encode hot paths in THIS JVM
-    Fixtures.corpus(spark, 32, 256).toDF()
-      .write.mode("overwrite").parquet(s"$work/warm-child-$coresS")
-    IndexBuilder.buildFromCorpus(spark, spark.read.parquet(s"$work/warm-child-$coresS"),
-      s"$work/warm-child-idx-$coresS", "snap-1", IndexConf(8, 8))
-    val dps = timedBuild(spark, corpusPath, nDocsS.toLong, root)
-    spark.stop()
-    println(s"DOCS_PER_SEC=$dps")
-  }
-
   private def timedBuild(spark: SparkSession, corpusPath: String, nDocs: Long,
                          root: String): Double = {
     // Size the index shuffle to the DATA, not the core count: at ~50 postings
@@ -209,8 +127,7 @@ object Bench {
     nDocs / wall
   }
 
-  /** In-record machine-ceiling probes (VERDICT r4 task #5): the same two
-    * measurements scripts/bandwidth_probe.sh takes out-of-band — pure
+  /** In-record machine-ceiling probes (VERDICT r4 task #5): pure
     * register-bound compute and 64 MB-buffer memcpy, each run on `lo` and
     * then `hi` taskset-pinned processes — emitted INTO the bench JSON next
     * to `scaling` so the record itself carries the VM's same-day scaling
@@ -299,7 +216,6 @@ object Bench {
     else sorted(math.min(sorted.length - 1, (p * sorted.length).toInt))
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("--build-once")) return buildOnceMain(args.tail)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val suiteCores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val lowCores = sys.env.getOrElse("SPARK_GRAFT_SCALE_LOW", "2").toInt
@@ -415,23 +331,15 @@ object Bench {
     // capture before any pinning: availableProcessors() reflects the current
     // affinity mask once restricted
     val allCores = Runtime.getRuntime.availableProcessors()
-    val busEqualize = sys.env.contains("SPARK_GRAFT_BUS_EQUALIZE")
-    val childJvm = sys.env.contains("SPARK_GRAFT_CHILD_JVM")
     var rootHi = ""
     def sideBuild(cores: Int, root: String, corpus: String, n: Long): Double = {
-      val hogs = if (busEqualize && cores == lowCores) startHogs(lowCores, highCores) else Nil
-      try {
-        if (childJvm) childBuild(cores, corpus, n, root)
-        else {
-          val s = session(cores)
-          s.sparkContext.setLogLevel("ERROR")
-          if (pinCores) setAffinity(cores)
-          val v = timedBuild(s, corpus, n, root)
-          if (pinCores) setAffinity(allCores)
-          s.stop() // one session per side: getOrCreate ignores a new master
-          v
-        }
-      } finally stopHogs(hogs)
+      val s = session(cores)
+      s.sparkContext.setLogLevel("ERROR")
+      if (pinCores) setAffinity(cores)
+      val v = timedBuild(s, corpus, n, root)
+      if (pinCores) setAffinity(allCores)
+      s.stop() // one session per side: getOrCreate ignores a new master
+      v
     }
     // ABBA ordering: odd pairs run (lo, hi), even pairs (hi, lo), so any
     // residual monotone drift (JIT tail, page cache, VM thermal state)
@@ -598,7 +506,7 @@ object Bench {
       }.mkString("[", ",", "]")
       s"""{"docs":$n,"cores_low":$lowCores,"cores_high":$highCores,""" +
       s""""docs_per_sec_low":${r1(median(prs.map(_._1)))},"docs_per_sec_high":${r1(median(prs.map(_._2)))},"efficiency":${r4(effOf(prs))},""" +
-      s""""child_jvm":$childJvm,"pinned":$pinCores,"bus_equalized":$busEqualize,"pairs":$pj}"""
+      s""""pinned":$pinCores,"pairs":$pj}"""
     }
     val scaling = scalingJson(pairResults, nDocs)
     val scaling2m = scalingJson(pair2mResults, nDocs2m)

@@ -75,12 +75,15 @@ final case class Subquery(
   * `pruning` toggles block-max WAND range skipping (exact either way — the
   * toggle exists so tests can assert pruned == unpruned).
   * `localEvalMaxPostings` sizes driver-local evaluation (the reference
-  * evaluates every query on one node): a cached handle fetches a query of
-  * ≤ 16× the cap postings in one job; any other query runs the directory
-  * route — directory job, then one job per range batch (16× the cap, then
-  * 4× larger, WAND-pruned between batches), the rest distributed past 64×
-  * the cap. 0 forces the distributed kernel; multiples saturate, so
-  * Long.MaxValue means no cap. Results are identical on every route. */
+  * evaluates every query on one node): every query runs one planner and
+  * one progressive loop over range batches (16× the cap, then 4× larger,
+  * WAND-pruned between batches), the rest distributed past 64× the cap.
+  * The cap also picks where the batches come from: a cached handle
+  * prefetches a query of ≤ 16× the cap postings in one job; any other
+  * query runs a directory job, then one job per batch. 0 forces the
+  * distributed kernel; multiples saturate, so Long.MaxValue means no cap.
+  * Exact results are identical on every route; `fetchBudget` is the only
+  * setting that changes an answer. */
 final case class QuerySpec(
     subqueries: Seq[Subquery],
     domains: Seq[Int] = Nil,
@@ -139,17 +142,18 @@ final case class SearchResult(
   * statistics). No per-query read is planned by Catalyst.
   *   1. driver planner: term hashes + df lookup — the handle's pinned stats,
   *      or one term_stats read over the terms' hash buckets
-  *   2. a cached handle whose query fits 16× the local cap fetches all of
-  *      its posting blocks in one read and evaluates on the driver; every
-  *      other query reads the block directory (term, range, count,
-  *      block-max) of its terms' ranges, narrowed to the rank prefixes of a
-  *      domain restriction
+  *   2. the block directory (term, range, count, block-max) of the terms'
+  *      ranges, narrowed to the rank prefixes of a domain restriction: a
+  *      cached handle whose query fits 16× the local cap prefetches all of
+  *      its posting blocks in one read and derives the directory from them;
+  *      every other query reads the directory alone
   *   3. ranges of the rarest include term per subquery bound the candidate
   *      universe (the reference orders terms by selectivity the same way,
   *      SearchIndex.compareKeywords:159-171); block-max WAND bounds order
-  *      them, and batches of ranges are fetched — posting and forward
-  *      blocks in one job — and evaluated into one driver-local selection
-  *      whose threshold drops ranges that can no longer qualify
+  *      them, and batches of ranges are looked up in the prefetch or
+  *      fetched — posting and forward blocks in one job — and evaluated
+  *      into one driver-local selection whose threshold drops ranges that
+  *      can no longer qualify
   *   4. kernel: galloping sorted intersection (J1) with skip-pointer group
   *      decode, merge exclusion (J2), metadata filter (F7), and exact scoring
   *      (R1-R9)
@@ -201,11 +205,12 @@ object QueryEngine {
       else None
     /** Forward blocks pinned on the driver in kernel row form, keyed by
       * doc_range — the Spark analog of the reference's always-in-RAM forward
-      * index (ForwardIndexReader.java:53-71). With this cache the local-eval
-      * fast path collects ONLY the query's posting blobs; bounded by
-      * docCount ≤ 4M (≈ tens of MB of encoded blocks). None at larger
-      * scale: each fetch batch then carries its ranges' forward blocks in
-      * the same job as their postings. */
+      * index (ForwardIndexReader.java:53-71). With this cache a query's
+      * prefetch or batch jobs collect ONLY its posting blobs, and its
+      * presence permits the one-job prefetch; bounded by docCount ≤ 4M
+      * (≈ tens of MB of encoded blocks). None at larger scale: each fetch
+      * batch then carries its ranges' forward blocks in the same job as
+      * their postings. */
     lazy val fwdRowCache: Option[Map[Long, org.apache.spark.sql.Row]] =
       if (manifest.docCount <= cacheDocLimit)
         Some(QueryEngine.fwdUnified(fwd).collect()
@@ -214,15 +219,20 @@ object QueryEngine {
     /** (doc_range → doc count + doc-meta extremes) directory, cached on the
       * driver when the range count is bounded (≤1M ranges) — gives the
       * progressive-fetch planner real per-range block-max statistics (tight
-      * WAND bounds before anything is fetched). None at larger scale: the
-      * planner then falls back to optimistic bounds. */
+      * WAND bounds before anything is fetched). Read from the pinned
+      * forward blocks when the handle has them, so a fresh handle's first
+      * query reads `fwd` once. None at larger scale: the planner then falls
+      * back to optimistic bounds. */
     lazy val fwdDir: Option[Map[Long, QueryEngine.FwdDirEntry]] =
-      if (cacheDocLimit > 0 && (manifest.docCount >> manifest.docRangeShift) <= (1L << 20))
-        Some(fwd.select("doc_range", "n", "min_rank", "max_asl",
-            "min_quality", "max_topology").collect()
-          .map(r => r.getLong(0) -> QueryEngine.FwdDirEntry(r.getInt(1),
-            QueryKernel.RangeStats(r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5)))).toMap)
-      else None
+      if (cacheDocLimit > 0 && (manifest.docCount >> manifest.docRangeShift) <= (1L << 20)) {
+        val rows = fwdRowCache.map(_.values.toArray).getOrElse(fwd.select("doc_range", "n",
+          "min_rank", "max_asl", "min_quality", "max_topology").collect())
+        Some(rows.map { r =>
+          def int(c: String) = r.getInt(r.fieldIndex(c))
+          r.getLong(r.fieldIndex("doc_range")) -> QueryEngine.FwdDirEntry(int("n"),
+            QueryKernel.RangeStats(int("min_rank"), int("max_asl"), int("min_quality"), int("max_topology")))
+        }.toMap)
+      } else None
     /** term_hash → (df_full, df_prio), pinned on the driver when the
       * vocabulary is bounded — the reference keeps its lexicon in RAM the
       * same way. Removes BOTH planner metadata jobs from small-df queries:
@@ -323,31 +333,7 @@ object QueryEngine {
 
   private def search(spark: SparkSession, index: Index, specIn: QuerySpec,
                      liveStats: Option[LiveStats]): Seq[SearchResult] = {
-    // `near:` resolution (reference DbNearDomainsQuery): the repo's
-    // neighborhood (self + linked domains, ≤ the build-time cap) becomes the
-    // domain restriction, plus the neighbors' posting-order ranks for scan
-    // pruning. One filter+collect on the tiny neighbors table, bounded by
-    // the build-time maxNeighbors cap. Snapshots without the table degrade
-    // to the site restriction itself via the repo's synthetic advice term.
-    val specNear: QuerySpec = specIn.nearRepo match {
-      case None => specIn
-      case Some(r) => index.domainNeighbors match {
-        case Some(nb) =>
-          val rows = nb.where(col("repo") === r)
-            .select(col("neighbor_id"), col("neighbor_rank")).collect()
-          if (rows.isEmpty) return Nil // unknown site ⇒ empty neighborhood
-          specIn.copy(nearRepo = None,
-            domains = (specIn.domains ++ rows.map(_.getInt(0))).distinct,
-            // rank pruning is sound only when the rank set covers ALL
-            // restricted domains — i.e. when `near:` is the sole restriction
-            domainRanks =
-              if (specIn.domains.nonEmpty) Nil
-              else rows.map(_.getInt(1)).distinct.toSeq)
-        case None =>
-          specIn.copy(nearRepo = None, subqueries = specIn.subqueries.map(sq =>
-            sq.copy(advice = (sq.advice :+ s"repo:$r").distinct)))
-      }
-    }
+    val specNear = resolveNear(specIn, index.domainNeighbors).getOrElse(return Nil)
 
     // Explicit domain restrictions (search sets, S8) get the same rank-
     // prefix scan pruning via the pinned domain→rank map: ranks of the
@@ -556,8 +542,6 @@ object QueryEngine {
     val rankRanges: Seq[BlockReader.Ranges] =
       if (spec.domainRanks.isEmpty || rankPrefix < 0) Nil
       else Seq(BlockReader.Ranges.of(spec.domainRanks.map(_.toLong), rankPrefix))
-    def postingBlocks(): Array[org.apache.spark.sql.Row] =
-      index.reader.blocks(hashes, rankRanges, fwd = None).rows
 
     // ---- head-term directory guard (VERDICT r2 task #3) ---------------------
     // The planner's block directory is one row per (query term, doc range);
@@ -571,8 +555,6 @@ object QueryEngine {
     val numRanges = (docCount >> index.manifest.docRangeShift) + 1
     val dirShift = dirShiftFor(
       hashes.map(h => dfFull.getOrElse(h, 0L)), numRanges, spec.dirRowBudget)
-    // (the block-directory collector is defined below, after the budgeted
-    // prefetch decision it depends on)
 
     // doc ranges of the rarest include term per subquery bound the candidate
     // universe (the reference orders terms by selectivity the same way,
@@ -630,72 +612,31 @@ object QueryEngine {
       }
     }
 
-    // ---- single-job fast path: Σ df over every query term is modest and the
-    // handle pins stats + forward blocks — fetch ALL of the query's posting
-    // blocks in one job, derive the candidate ranges from the fetched rows,
-    // evaluate on the driver with the parallel kernel. This is the common
-    // interactive query against a served snapshot. The cap is 16× the
-    // collect budget for exact queries (one fetch job beats a directory job
-    // + batched fetches when score-pruning can't bite — a few tens of MB on
-    // the driver, the reference holds the whole index in RAM); budgeted
-    // queries keep the tight cap so early termination can skip fetch volume.
+    // ---- fetch source: one prefetch job, or a directory job + batch jobs ----
+    // A cached handle (stats and forward blocks pinned) whose query holds at
+    // most 16× the local cap postings fetches ALL of its posting blocks in
+    // ONE job up front — one job beats a directory job plus batched fetches
+    // at that size (a few tens of MB on the driver; the reference holds its
+    // whole index in RAM). The block directory is then derived from the
+    // fetched rows and every batch below is a driver-local lookup. Every
+    // other query reads the pruned directory in one job and fetches each
+    // batch in one more. Either way the same planner and loop run, so the
+    // choice moves job counts, never results.
     val totalDf = hashes.iterator.map(h => dfFull.getOrElse(h, 0L)).sum
-    // A budgeted query whose ENTIRE candidate volume fits inside the budget
-    // can never early-terminate (candidates scored ≤ Σ df ≤ fetchBudget), so
-    // its result is provably the exact result — route it through the exact
-    // fast path and save the directory + champion-scan + batched-fetch job
-    // round-trips that dominate small-query latency in budgeted mode.
-    val budgetCannotBite = spec.fetchBudget > 0 && totalDf <= spec.fetchBudget
     val singleFetchCap = capTimes(spec.localEvalMaxPostings, SingleFetchFactor)
-    val singleJobCap =
-      if (spec.fetchBudget > 0 && !budgetCannotBite) spec.localEvalMaxPostings
-      else singleFetchCap
-    if (index.fwdRowCache.isDefined && totalDf <= singleJobCap) {
-      val postingRows = postingBlocks()
-      val byTermRows = postingRows.groupBy(_.getLong(0))
-      val ranges = rarestTerms.iterator
-        .flatMap(h => byTermRows.getOrElse(h, Array.empty).iterator.map(_.getLong(1)))
-        .toArray.distinct
-      if (ranges.isEmpty) return Nil
-      return selectBest(evalRangesParallel(ranges, postingRows.groupBy(_.getLong(1)),
-        index.fwdRowCache.get, Double.PositiveInfinity)._1, spec)
-    }
-
-    // ---- budgeted single-fetch prefetch (VERDICT r3 task #2) ----------------
-    // A budgeted query on a cached handle whose candidate volume fits the
-    // SAME 16× cap the exact path enjoys fetches all of its posting blocks in
-    // ONE job up front; the directory/champion/batched-fetch machinery below
-    // then runs over the prefetched rows as driver-local slices — identical
-    // control flow, identical batching, identical results (OpsSpec asserts
-    // byte-identity against the job-per-batch path), but the number of Spark
-    // jobs drops to the exact path's one. Early termination still skips
-    // EVALUATION work; what it no longer buys is fetch volume — on a served
-    // snapshot the round-trips it was paying for dominated mid-size-query
-    // latency (BENCH_r03 budgeted p50 752 ms vs exact 172 ms).
-    val budgetedPrefetch: Option[Array[org.apache.spark.sql.Row]] =
-      if (spec.fetchBudget > 0 && !budgetCannotBite && !QueryEngine.disableBudgetedPrefetch &&
-          index.fwdRowCache.isDefined && totalDf <= singleFetchCap)
-        Some(postingBlocks())
+    val prefetched: Option[Prefetch] =
+      if (index.fwdRowCache.isDefined && totalDf <= singleFetchCap)
+        Some(new Prefetch(index.reader.blocks(hashes, rankRanges, fwd = None).rows, dirShift))
       else None
 
-    // (term_hash, doc_range, n, max_pos_count): block directory — everything
-    // the WAND planner needs, no blobs; doc_range is the PLANNING range
-    // (real range >> dirShift). Prefetched queries derive it from the rows
-    // already on the driver; everyone else runs the pruned directory job.
-    def collectDir(): Array[QueryEngine.DirRow] = {
-      val dir = budgetedPrefetch match {
-        case Some(rows) =>
-          val dir = rows.iterator.map(r =>
-            QueryEngine.DirRow(r.getLong(0), r.getLong(1) >>> dirShift, r.getInt(2), r.getInt(3)))
-          if (dirShift == 0) dir.toArray else BlockReader.DirEmit.merge(dir)
-        case None => index.reader.directory(hashes, rankRanges, dirShift).rows
-      }
-      QueryEngine.lastDirStats = (dirShift, dir.length)
-      dir
+    // (term, planning range, n, max_pos_count): the block directory —
+    // everything the WAND planner needs, no blobs; the planning range is the
+    // real range >> dirShift
+    val blockDir: Array[DirRow] = prefetched match {
+      case Some(p) => p.dir
+      case None    => index.reader.directory(hashes, rankRanges, dirShift).rows
     }
-
-    // ---- directory route (uncached handles, big queries on cached ones) -----
-    val blockDir = collectDir()
+    QueryEngine.lastDirStats = (dirShift, blockDir.length)
 
     // candidate universe: ranges of the rarest include term per subquery
     val rangeSet: java.util.HashSet[java.lang.Long] = {
@@ -764,34 +705,34 @@ object QueryEngine {
       index.reader.distributed(hashes, rankRanges, planned(rs), ks,
         spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
-    // one fetch batch in ONE job: (posting rows, forward row) by real range;
-    // uncached handles fetch forward blocks with the postings, cached ones
-    // read the pinned cache (budgeted prefetches slice rows, no job at all)
-    def fetchBatch(rs: Array[Long]): (collection.Map[Long, Array[org.apache.spark.sql.Row]],
-                                      collection.Map[Long, org.apache.spark.sql.Row]) = {
-      val rows = budgetedPrefetch match {
-        case Some(pre) =>
-          val set = new java.util.HashSet[java.lang.Long](rs.length * 2)
-          rs.foreach(set.add(_))
-          pre.filter(r => set.contains(r.getLong(1) >>> dirShift))
+    // one fetch batch: its real ranges with their posting rows and forward
+    // row. A prefetched query looks the ranges up in the rows already on
+    // the driver; otherwise the batch is ONE job — uncached handles fetch
+    // forward blocks with the postings, cached ones read the pinned cache.
+    def fetchBatch(rs: Array[Long]): (Array[Long],
+                                      collection.Map[Long, Array[org.apache.spark.sql.Row]],
+                                      collection.Map[Long, org.apache.spark.sql.Row]) =
+      prefetched match {
+        case Some(p) => (rs.flatMap(p.rangesOf), p.byRange, index.fwdRowCache.get)
         case None =>
           val batch = planned(rs)
-          index.reader.blocks(hashes, rankRanges :+ batch,
+          val rows = index.reader.blocks(hashes, rankRanges :+ batch,
             fwd = if (index.fwdRowCache.isDefined) None else Some(batch)).rows
+          val (fwdRows, postingRows) = rows.partition(r => !r.isNullAt(7))
+          val byRange = postingRows.groupBy(_.getLong(1))
+          (byRange.keys.toArray, byRange,
+           index.fwdRowCache.getOrElse(fwdRows.iterator.map(r => r.getLong(1) -> r).toMap))
       }
-      val (fwdRows, postingRows) = rows.partition(r => !r.isNullAt(7))
-      (postingRows.groupBy(_.getLong(1)),
-       index.fwdRowCache.getOrElse(fwdRows.iterator.map(r => r.getLong(1) -> r).toMap))
-    }
 
     if (spec.localEvalMaxPostings > 0) {
       // ---- progressive driver-local WAND fetch ----------------------------
-      // Ranges in ascending-bound order; fetch a batch (first 16× the cap,
-      // so most queries take one) per job, evaluate into ONE selection, drop
-      // every remaining range whose optimistic bound can no longer beat the
-      // threshold. A head-term query touches a few batches instead of
-      // shuffling its whole posting list: the fetch-budget role of the
-      // reference's IndexQueryExecutor budgets, made deterministic and exact.
+      // Ranges in ascending-bound order; take a batch (first 16× the cap,
+      // so most queries take one) from the prefetch or in one job each,
+      // evaluate into ONE selection, drop every remaining range whose
+      // optimistic bound can no longer beat the threshold. A head-term
+      // query touches a few batches instead of shuffling its whole posting
+      // list: the fetch-budget role of the reference's IndexQueryExecutor
+      // budgets, made deterministic and exact.
       // budgeted mode (spec.fetchBudget > 0): the reference's deterministic
       // fetch-size early termination (IndexQueryExecutor budgets) — process
       // ranges in RANK order (best documents first, the posting layout's
@@ -844,10 +785,10 @@ object QueryEngine {
             }
             val batch = rest.take(cut)
             rest = rest.drop(cut)
-            val (byRange, fwdByRange) = fetchBatch(batch.map(_.range))
-            // per REAL range (batch ranges are planning ranges when dirShift > 0)
-            val (cands, scored) =
-              evalRangesParallel(byRange.keys.toArray, byRange, fwdByRange, th)
+            // evaluated per REAL range (batch ranges are planning ranges
+            // when dirShift > 0)
+            val (ranges, byRange, fwdByRange) = fetchBatch(batch.map(_.range))
+            val (cands, scored) = evalRangesParallel(ranges, byRange, fwdByRange, th)
             cands.foreach(sel.add)
             sel.scored += scored - cands.length // adds counted once already
             scoredTotal += scored
@@ -872,17 +813,24 @@ object QueryEngine {
     * position count) — the planner's view of one posting block. */
   private[graft] final case class DirRow(term: Long, range: Long, n: Int, maxPc: Int)
 
-  /** Fast-path cap and first batch, in multiples of `localEvalMaxPostings`. */
+  /** Prefetch cap and first batch, in multiples of `localEvalMaxPostings`. */
   private final val SingleFetchFactor = 16
+
+  /** A query's posting blocks fetched in one job, grouped once: by real doc
+    * range, the real ranges of each planning range (real range >> dirShift),
+    * and the block directory derived from them. */
+  private final class Prefetch(rows: Array[org.apache.spark.sql.Row], dirShift: Int) {
+    val byRange: Map[Long, Array[org.apache.spark.sql.Row]] = rows.groupBy(_.getLong(1))
+    val rangesOf: Map[Long, Array[Long]] = byRange.keys.toArray.groupBy(_ >>> dirShift)
+    val dir: Array[DirRow] = {
+      val d = rows.iterator.map(r => DirRow(r.getLong(0), r.getLong(1) >>> dirShift, r.getInt(2), r.getInt(3)))
+      if (dirShift == 0) d.toArray else BlockReader.DirEmit.merge(d)
+    }
+  }
 
   /** `v × k` saturating at Long.MaxValue (a cap near it means no cap). */
   private def capTimes(v: Long, k: Int): Long =
     if (v > Long.MaxValue / k) Long.MaxValue else v * k
-
-  /** Test hook: force budgeted queries down the job-per-batch directory path
-    * even when the single-fetch prefetch applies, so OpsSpec can assert the
-    * two paths return identical results. */
-  @volatile private[graft] var disableBudgetedPrefetch: Boolean = false
 
   /** Diagnostics for specs: (dirShift, directory rows collected) by the most
     * recent directory-path query in this JVM. */
@@ -907,6 +855,34 @@ object QueryEngine {
     s
   }
 
+  /** `near:` resolution (reference DbNearDomainsQuery) against a snapshot's
+    * neighbors table: the repo's neighborhood (self + linked domains, ≤ the
+    * build-time cap) becomes the domain restriction, plus the neighbors'
+    * posting-order ranks for scan pruning — one filter+collect on the tiny
+    * table. Without a table the query degrades to the site restriction
+    * itself via the repo's synthetic advice term. None: the repo is
+    * unknown, so its neighborhood is empty. */
+  private def resolveNear(spec: QuerySpec, neighbors: => Option[DataFrame]): Option[QuerySpec] =
+    spec.nearRepo match {
+      case None => Some(spec)
+      case Some(r) => neighbors match {
+        case Some(nb) =>
+          val rows = nb.where(col("repo") === r)
+            .select(col("neighbor_id"), col("neighbor_rank")).collect()
+          if (rows.isEmpty) None
+          else Some(spec.copy(nearRepo = None,
+            domains = (spec.domains ++ rows.map(_.getInt(0))).distinct,
+            // rank pruning is sound only when the rank set covers ALL
+            // restricted domains — i.e. when `near:` is the sole restriction
+            domainRanks =
+              if (spec.domains.nonEmpty) Nil
+              else rows.map(_.getInt(1)).distinct.toSeq))
+        case None =>
+          Some(spec.copy(nearRepo = None, subqueries = spec.subqueries.map(sq =>
+            sq.copy(advice = (sq.advice :+ s"repo:$r").distinct))))
+      }
+    }
+
   /** Final selection (reference selectBestResults): comparator order,
     * greedy per-domain cap, global limit. `results_from_domain` counts within
     * the RETURNED top-k — deterministic across evaluation paths; the
@@ -914,7 +890,7 @@ object QueryEngine {
     * which depends on how many beyond-cap candidates a path surfaced and
     * does not distribute (documented deviation). */
   private def selectBest(candidates: Array[Candidate], spec: QuerySpec): Seq[SearchResult] = {
-    val ordered = candidates.sortBy(c => (!c.hasPrio, c.score, c.ranking, c.urlId))
+    val ordered = candidates.sorted(Candidate.Order)
     val domainCounts = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
     val selected = scala.collection.mutable.ArrayBuffer.empty[Candidate]
     ordered.foreach { c =>
@@ -976,24 +952,10 @@ object QueryEngine {
     }
 
     // `near:` must resolve against ONE neighbors table (deltas usually lack
-    // it); resolve on the first part that has one so every part sees the
-    // same restriction, same rules as the single-snapshot path
-    val spec: QuerySpec = specIn.nearRepo match {
-      case Some(r) =>
-        parts.find(_.domainNeighbors.nonEmpty).flatMap(_.domainNeighbors) match {
-          case Some(nb) =>
-            val rows = nb.where(col("repo") === r)
-              .select(col("neighbor_id"), col("neighbor_rank")).collect()
-            if (rows.isEmpty) return Nil
-            specIn.copy(nearRepo = None,
-              domains = (specIn.domains ++ rows.map(_.getInt(0))).distinct,
-              domainRanks =
-                if (specIn.domains.nonEmpty) Nil
-                else rows.map(_.getInt(1)).distinct.toSeq)
-          case None => specIn // every part degrades identically via advice
-        }
-      case None => specIn
-    }
+    // it): the first part that has one, so every part sees the same
+    // restriction
+    val spec = resolveNear(specIn,
+      parts.iterator.flatMap(_.domainNeighbors).nextOption()).getOrElse(return Nil)
 
     // global stats = per-part sums for the query's hashes; memoized — every
     // part resolves the same term set, so the cross-part lookup runs once
@@ -1016,26 +978,9 @@ object QueryEngine {
       })
     val live = LiveStats(statsFor, parts.map(_.manifest.docCount).sum)
 
-    val perPart = parts.map(p => search(spark, p, spec, Some(live)))
-    mergePartResults(perPart, spec)
-  }
-
-  /** Re-apply the final selection (comparator order, per-domain cap, total
-    * limit, per-domain recount) across parts — [[selectBest]] on
-    * already-selected part results. */
-  private def mergePartResults(perPart: Seq[Seq[SearchResult]],
-                               spec: QuerySpec): Seq[SearchResult] = {
-    val ordered = perPart.flatten
-      .sortBy(r => (!r.has_priority_term, r.score, r.ranking, r.url_id))
-    val domainCounts = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
-    val selected = scala.collection.mutable.ArrayBuffer.empty[SearchResult]
-    ordered.foreach { r =>
-      domainCounts(r.domain_id) += 1
-      if (domainCounts(r.domain_id) <= spec.limitByDomain) selected += r
-    }
-    val top = selected.take(spec.limitTotal)
-    val topCounts = top.groupBy(_.domain_id).map { case (d, rs) => d -> rs.size.toLong }
-    top.map(r => r.copy(results_from_domain = topCounts(r.domain_id))).toSeq
+    // one final selection over every part's top set
+    selectBest(parts.flatMap(p => search(spark, p, spec, Some(live))).map(r =>
+      Candidate(r.url_id, r.domain_id, r.ranking, r.has_priority_term, r.score)).toArray, spec)
   }
 }
 
@@ -1066,6 +1011,21 @@ final case class KernelSpec(
 
 final case class Candidate(urlId: Int, domainId: Int, ranking: Int,
                            hasPrio: Boolean, score: Double)
+
+object Candidate {
+  /** The final comparator ([[SearchResult]]): priority-term hit first, then
+    * ascending score, ranking and urlId — without a key tuple per element. */
+  val Order: Ordering[Candidate] = (a, b) =>
+    if (a.hasPrio != b.hasPrio) (if (a.hasPrio) -1 else 1)
+    else {
+      val s = java.lang.Double.compare(a.score, b.score)
+      if (s != 0) s
+      else {
+        val r = Integer.compare(a.ranking, b.ranking)
+        if (r != 0) r else Integer.compare(a.urlId, b.urlId)
+      }
+    }
+}
 
 /** Per-partition evaluation: block-max WAND over doc ranges; surviving ranges
   * are intersected with skip-pointer group decode, filtered, and scored. */
@@ -1205,7 +1165,7 @@ object QueryKernel {
       if (limitTotal <= 0) return Double.NegativeInfinity // degenerate: nothing can enter
       if (!dirty) return math.min(cachedThreshold, seed)
       dirty = false
-      val ordered = all.sortBy(c => (!c.hasPrio, c.score, c.ranking, c.urlId))
+      val ordered = all.sorted(Candidate.Order)
       val perDomain = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
       var kept = 0
       var last: Candidate = null
@@ -1229,7 +1189,7 @@ object QueryKernel {
       * reference counts the full candidate list (IndexQueryService:252-282),
       * which doesn't distribute; documented. */
     def emit(): Iterator[Candidate] = {
-      val byScore = all.sortBy(c => (!c.hasPrio, c.score, c.ranking, c.urlId))
+      val byScore = all.sorted(Candidate.Order)
       val perDomain = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
       val keep = scala.collection.mutable.ArrayBuffer.empty[Candidate]
       byScore.foreach { c =>

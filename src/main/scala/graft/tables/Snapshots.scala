@@ -2,6 +2,9 @@ package graft.tables
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-style snapshot layer: Parquet data dirs + JSON manifest with an
@@ -12,8 +15,8 @@ import scala.jdk.CollectionConverters._
   * SearchIndex.switchIndex:64-85): a new index is built off to the side and
   * becomes visible in one atomic pointer move, so readers never observe a
   * half-built index and a killed build resumes from the last committed
-  * snapshot. No Iceberg runtime jar ships in this environment, so the
-  * manifest format is our own minimal JSON.
+  * snapshot. No Iceberg runtime jar ships with Spark, so the manifest
+  * format is our own minimal JSON.
   */
 object Snapshots {
 
@@ -40,48 +43,37 @@ object Snapshots {
       postingBytes: Long,
       wallClockMs: Long)
 
-  // -- tiny hand-rolled JSON (no deps beyond Spark's jars) -------------------
-  private def esc(s: String) = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  }
+  // -- manifest JSON (json4s, shipped with Spark) ----------------------------
+  // Field order and the 0/1 encoding of the boolean flags are the on-disk
+  // format. A manifest without the flags (written before they existed) reads
+  // them as false; a missing required field throws.
 
   def manifestJson(m: Manifest): String = {
-    val rows = m.lineage.map { r =>
-      s"""{"stage":"${esc(r.stage)}","partitionId":${r.partitionId},"termRangeLo":${r.termRangeLo},"termRangeHi":${r.termRangeHi},"docCount":${r.docCount},"postingBytes":${r.postingBytes},"wallClockMs":${r.wallClockMs}}"""
-    }.mkString("[", ",", "]")
-    val stages = m.stagesDone.map(s => "\"" + esc(s) + "\"").mkString("[", ",", "]")
-    s"""{"snapshotId":"${esc(m.snapshotId)}","docCount":${m.docCount},"numBuckets":${m.numBuckets},"docRangeShift":${m.docRangeShift},"stemming":${if (m.stemming) 1 else 0},"ngrams":${if (m.ngrams) 1 else 0},"stagesDone":$stages,"lineage":$rows}"""
+    val rows = m.lineage.map(r =>
+      ("stage" -> r.stage) ~ ("partitionId" -> r.partitionId) ~
+        ("termRangeLo" -> r.termRangeLo) ~ ("termRangeHi" -> r.termRangeHi) ~
+        ("docCount" -> r.docCount) ~ ("postingBytes" -> r.postingBytes) ~
+        ("wallClockMs" -> r.wallClockMs))
+    compact(render(("snapshotId" -> m.snapshotId) ~ ("docCount" -> m.docCount) ~
+      ("numBuckets" -> m.numBuckets) ~ ("docRangeShift" -> m.docRangeShift) ~
+      ("stemming" -> (if (m.stemming) 1 else 0)) ~ ("ngrams" -> (if (m.ngrams) 1 else 0)) ~
+      ("stagesDone" -> m.stagesDone) ~ ("lineage" -> rows)))
   }
 
   def parseManifest(json: String): Manifest = {
-    def field(name: String): String = {
-      val p = ("\"" + name + "\"\\s*:\\s*").r
-      p.findFirstMatchIn(json) match {
-        case Some(m) =>
-          val rest = json.substring(m.end)
-          if (rest.startsWith("\"")) rest.drop(1).takeWhile(_ != '"')
-          else if (rest.startsWith("[")) {
-            var depth = 0; var i = 0
-            while ({ val c = rest(i); if (c == '[') depth += 1 else if (c == ']') depth -= 1; depth > 0 }) i += 1
-            rest.substring(1, i)
-          }
-          else rest.takeWhile(c => c.isDigit || c == '-' || c == '.')
-        case None => ""
-      }
+    implicit val formats: Formats = DefaultFormats
+    val j = parse(json)
+    def long(v: JValue): Long = v.extract[Long]
+    def flag(name: String): Boolean = (j \ name).extractOrElse[Int](0) == 1
+    val rows = (j \ "lineage").children.map { r =>
+      LineageRow((r \ "stage").extract[String], long(r \ "partitionId").toInt,
+        long(r \ "termRangeLo"), long(r \ "termRangeHi"), long(r \ "docCount"),
+        long(r \ "postingBytes"), long(r \ "wallClockMs"))
     }
-    val lineageStr = field("lineage")
-    val rows = "\\{[^}]*\\}".r.findAllIn(lineageStr).map { obj =>
-      def num(n: String): Long = ("\"" + n + "\":(-?\\d+)").r.findFirstMatchIn(obj).map(_.group(1).toLong).getOrElse(0L)
-      def str(n: String): String = ("\"" + n + "\":\"([^\"]*)\"").r.findFirstMatchIn(obj).map(_.group(1)).getOrElse("")
-      LineageRow(str("stage"), num("partitionId").toInt, num("termRangeLo"), num("termRangeHi"),
-        num("docCount"), num("postingBytes"), num("wallClockMs"))
-    }.toSeq
-    val stages = "\"([^\"]+)\"".r.findAllMatchIn(field("stagesDone")).map(_.group(1)).toSeq
-    Manifest(field("snapshotId"), field("docCount").toLong, field("numBuckets").toInt,
-      field("docRangeShift").toInt, stages, rows,
-      stemming = field("stemming") == "1",
-      ngrams = field("ngrams") == "1")
+    Manifest((j \ "snapshotId").extract[String], long(j \ "docCount"),
+      long(j \ "numBuckets").toInt, long(j \ "docRangeShift").toInt,
+      (j \ "stagesDone").extract[List[String]], rows,
+      stemming = flag("stemming"), ngrams = flag("ngrams"))
   }
 
   // -- snapshot lifecycle ----------------------------------------------------

@@ -49,16 +49,16 @@ class DirectoryGuardSpec extends AnyFunSuite {
   }
 
   test("coarsened directory: bounded driver collect, identical results") {
-    // ground truth: fast path (no directory at all)
-    val fast = QueryEngine.search(spark, index, spec(1L << 20, 262144L))
-    assert(fast.nonEmpty)
+    // ground truth: one prefetch job (the directory derived from its rows)
+    val oneJob = QueryEngine.search(spark, index, spec(1L << 20, 262144L))
+    assert(oneJob.nonEmpty)
 
     // directory path at full granularity (localEval small enough that the
-    // single-job fast path's 16× cap can't swallow the query, forcing the
-    // progressive fetch; budget large keeps dirShift 0)
+    // prefetch's 16× cap can't swallow the query, forcing the directory job
+    // and batch jobs; budget large keeps dirShift 0)
     val full = QueryEngine.search(spark, index, spec(1L << 20, 16L))
     assert(QueryEngine.lastDirStats._1 === 0)
-    assert(full === fast)
+    assert(full === oneJob)
 
     // directory path with a budget far below the head terms' range span —
     // the collect must coarsen and stay within budget
@@ -66,13 +66,13 @@ class DirectoryGuardSpec extends AnyFunSuite {
     val (shift, rows) = QueryEngine.lastDirStats
     assert(shift > 0, "guard must engage below the head-term range span")
     assert(rows <= 40, s"collected $rows directory rows for budget 40")
-    assert(coarse === fast)
+    assert(coarse === oneJob)
   }
 
   test("coarsened directory: distributed kernel path identical too") {
-    val fast = QueryEngine.search(spark, index, spec(1L << 20, 262144L))
+    val oneJob = QueryEngine.search(spark, index, spec(1L << 20, 262144L))
     val dist = QueryEngine.search(spark, index, spec(40L, 0L))
     assert(QueryEngine.lastDirStats._1 > 0)
-    assert(dist === fast)
+    assert(dist === oneJob)
   }
 }

@@ -124,4 +124,23 @@ class NearSpec extends AnyFunSuite {
     assert(got.toSet === explicit.toSet)
     assert(got.exists(_.domain_id == 20))
   }
+
+  test("live view: near: resolves on the part that has the table, as on the union") {
+    // two staged parts split by url_id, so each holds every domain; only the
+    // second carries domain_neighbors
+    val root = Files.createTempDirectory(java.nio.file.Paths.get("target"), "nearparts").toString
+    val conf = IndexConf(numBuckets = 4, docRangeShift = 4)
+    IndexBuilder.buildFromJournal(spark, journal.where(col("url_id") < 256), root, "lo", conf,
+      commitSnapshot = false)
+    IndexBuilder.buildFromJournal(spark, journal.where(col("url_id") >= 256), root, "hi", conf,
+      commitSnapshot = false)
+    IndexBuilder.writeDomainNeighbors(spark, root, "hi", links)
+    val parts = Seq("lo", "hi").map(QueryEngine.openSnapshot(root, _, spark))
+    assert(parts.map(_.domainNeighbors.isDefined) === Seq(false, true))
+    val near = wide.copy(nearRepo = Some("domain5"))
+    val live = QueryEngine.searchParts(spark, parts, near)
+    assert(live.nonEmpty)
+    assert(live === QueryEngine.search(spark, index, near))
+    assert(QueryEngine.searchParts(spark, parts, wide.copy(nearRepo = Some("domain99"))).isEmpty)
+  }
 }

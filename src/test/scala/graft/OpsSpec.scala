@@ -118,9 +118,10 @@ class OpsSpec extends AnyFunSuite {
     assert(cosAC < 0.8, s"fixture broken: cos(a,c)=$cosAC")
   }
 
-  // "one-shot local" is the lifted-cap fast path (a single local job); the
-  // "progressive WAND fetch" covers both the single-batch directory route of
-  // an uncached handle and the multi-batch route under a small cap
+  // "one-shot local" is a cached handle with the cap lifted (one prefetch
+  // job, the directory derived from it); the "progressive WAND fetch" covers
+  // both the single-batch directory route of an uncached handle and the
+  // multi-batch route under a small cap
   test("query paths agree: one-shot local, progressive WAND fetch, distributed") {
     import graft.build.{IndexBuilder, IndexConf}
     import graft.fixtures.Fixtures
@@ -145,8 +146,8 @@ class OpsSpec extends AnyFunSuite {
     assert(idx.fwdRowCache.isDefined && idx.statsCache.isDefined && idx.fwdDir.isDefined)
     queries.foreach { q =>
       val base = QueryParser.parse(q)
-      // a cached handle with the cap lifted: the single-job fast path
-      val fastPath = key(QueryEngine.search(spark, idx,
+      // a cached handle with the cap lifted: one prefetch job
+      val oneJob = key(QueryEngine.search(spark, idx,
         base.copy(localEvalMaxPostings = Long.MaxValue)))
       // an uncached handle at the default cap: stats, directory, one batch
       val singleBatch = key(QueryEngine.search(spark, uncached, base))
@@ -160,21 +161,21 @@ class OpsSpec extends AnyFunSuite {
         base.copy(localEvalMaxPostings = progressiveCap, pruning = false)))
       val distributed = key(QueryEngine.search(spark, idx,
         base.copy(localEvalMaxPostings = 0L)))
-      assert(singleBatch === fastPath, s"single-batch directory route vs fast path for '$q'")
-      assert(progressive === fastPath, s"progressive vs fast path for '$q'")
-      assert(progressiveUnpruned === fastPath, s"unpruned progressive for '$q'")
-      assert(distributed === fastPath, s"distributed vs fast path for '$q'")
+      assert(singleBatch === oneJob, s"single-batch directory route vs prefetch for '$q'")
+      assert(progressive === oneJob, s"progressive vs prefetch for '$q'")
+      assert(progressiveUnpruned === oneJob, s"unpruned progressive for '$q'")
+      assert(distributed === oneJob, s"distributed vs prefetch for '$q'")
       // budgeted mode must return a rank-order-consistent PREFIX-quality
       // subset: every budgeted hit must be a real doc of the exact result's
       // candidate universe (same subquery semantics), and ids are unique
       val budgeted = QueryEngine.search(spark, idx,
         base.copy(localEvalMaxPostings = 256L, fetchBudget = 64L))
       assert(budgeted.map(_.url_id).distinct.size === budgeted.size, s"budget dups for '$q'")
-      // a budget the whole candidate volume fits under cannot bite: the
-      // budgeted result must EQUAL exact (and takes the single-job fast path)
+      // a budget the whole candidate volume fits under never stops the
+      // loop: the budgeted result must EQUAL exact
       val budgetNoBite = key(QueryEngine.search(spark, idx,
         base.copy(fetchBudget = 1L << 30)))
-      assert(budgetNoBite === fastPath, s"no-bite budget vs exact for '$q'")
+      assert(budgetNoBite === oneJob, s"no-bite budget vs exact for '$q'")
     }
     // stage counts of the batch jobs: at least two, none an exchange
     // (the distributed spill past 64x the cap would add a shuffle)
@@ -198,17 +199,23 @@ class OpsSpec extends AnyFunSuite {
       rs.map(r => (r.url_id, r.domain_id, r.ranking, r.has_priority_term, r.score,
         r.results_from_domain))
     val queries = Seq("tok000", "tok000 tok001", "tok002 ?rl_3_0", "f64 tok002")
-    // 1) identity: the single-fetch prefetch must reproduce the job-per-batch
-    //    directory path EXACTLY (same champion ordering, same batch cuts,
-    //    same early termination) — localEvalMaxPostings lowered so the budget
-    //    genuinely bites and multiple batches run
+    // 1) identity: for a budgeted query the local cap only decides whether
+    //    it prefetches. At cap 2^20 (16x holds every query's postings) it
+    //    runs ONE prefetch job; at cap 1 a directory job and batch jobs.
+    //    Both must return EXACTLY the same (same champion ordering, same
+    //    batch cuts, same early termination) under a budget that bites.
     queries.foreach { q =>
-      val spec = QueryParser.parse(q).copy(localEvalMaxPostings = 64L, fetchBudget = 32L)
-      val fast = key(QueryEngine.search(spark, idx, spec))
-      QueryEngine.disableBudgetedPrefetch = true
-      val slow = try key(QueryEngine.search(spark, idx, spec))
-      finally QueryEngine.disableBudgetedPrefetch = false
-      assert(fast === slow, s"prefetch vs directory path for '$q'")
+      val spec = QueryParser.parse(q).copy(fetchBudget = 32L)
+      var prefetched, perBatch = Seq.empty[(Int, Int, Int, Boolean, Double, Long)]
+      val prefetchJobs = JobCounter.jobsDuring(spark) {
+        prefetched = key(QueryEngine.search(spark, idx, spec.copy(localEvalMaxPostings = 1L << 20)))
+      }
+      val batchJobs = JobCounter.jobsDuring(spark) {
+        perBatch = key(QueryEngine.search(spark, idx, spec.copy(localEvalMaxPostings = 1L)))
+      }
+      assert(prefetchJobs === 1, s"'$q': the prefetch route ran $prefetchJobs jobs")
+      assert(batchJobs >= 2, s"'$q': the batch route ran $batchJobs jobs")
+      assert(prefetched === perBatch, s"prefetch vs directory path for '$q'")
     }
     // 2) job budget (VERDICT r3 task #2 done-criterion): at SERVING settings
     //    (default spec), a budgeted query must launch no more Spark jobs

@@ -45,15 +45,19 @@ class PrioTierSpec extends AnyFunSuite {
     }.toDF()
   }
 
-  test("champion list: prio-tier ranges jump the budgeted fetch queue") {
-    val spec = QuerySpec(Seq(Subquery(include = Seq("t"))),
-      limitByDomain = 100, limitTotal = 10,
-      localEvalMaxPostings = 1024L, fetchBudget = 1000L)
-    val j = journal
-
-    val rootPlain = Files.createTempDirectory(java.nio.file.Paths.get("target"), "prio0").toString
-    IndexBuilder.buildFromJournal(spark, j, rootPlain, "snap-1",
+  /** The journal built without the priority tier. */
+  private lazy val rootPlain: String = {
+    val root = Files.createTempDirectory(java.nio.file.Paths.get("target"), "prio0").toString
+    IndexBuilder.buildFromJournal(spark, journal, root, "snap-1",
       IndexConf(numBuckets = 4, docRangeShift = 6))
+    root
+  }
+
+  private val spec = QuerySpec(Seq(Subquery(include = Seq("t"))),
+    limitByDomain = 100, limitTotal = 10,
+    localEvalMaxPostings = 1024L, fetchBudget = 1000L)
+
+  test("champion list: prio-tier ranges jump the budgeted fetch queue") {
     val plain = QueryEngine.search(spark, QueryEngine.open(rootPlain, spark), spec)
     assert(QueryEngine.lastChampionRanges === 0)
     assert(plain.nonEmpty)
@@ -61,7 +65,7 @@ class PrioTierSpec extends AnyFunSuite {
       "without the tier, rank order exhausts the budget before the flagged doc")
 
     val rootPrio = Files.createTempDirectory(java.nio.file.Paths.get("target"), "prio1").toString
-    IndexBuilder.buildFromJournal(spark, j, rootPrio, "snap-1",
+    IndexBuilder.buildFromJournal(spark, journal, rootPrio, "snap-1",
       IndexConf(numBuckets = 4, docRangeShift = 6, buildPrioTier = true))
     val prio = QueryEngine.search(spark, QueryEngine.open(rootPrio, spark), spec)
     assert(QueryEngine.lastChampionRanges === 1)
@@ -70,5 +74,19 @@ class PrioTierSpec extends AnyFunSuite {
     val uncached = QueryEngine.search(spark, QueryEngine.openUncached(rootPrio, spark), spec)
     assert(QueryEngine.lastChampionRanges === 1)
     assert(uncached === prio)
+  }
+
+  test("a fetch budget bites the same on every route: the local cap only picks the fetch") {
+    // cap 2^20: a cached handle prefetches the query's 48 Ki postings in one
+    // job; cap 1024: 16x the cap is below them, so the cached handle runs
+    // batch jobs; an uncached handle always runs batch jobs
+    val big = spec.copy(localEvalMaxPostings = 1L << 20)
+    val cachedBig = QueryEngine.search(spark, QueryEngine.open(rootPlain, spark), big)
+    val cachedSmall = QueryEngine.search(spark, QueryEngine.open(rootPlain, spark), spec)
+    val uncachedBig = QueryEngine.search(spark, QueryEngine.openUncached(rootPlain, spark), big)
+    assert(cachedBig.nonEmpty)
+    assert(!cachedBig.exists(_.url_id == N), "the budget must stop before the flagged doc")
+    assert(cachedBig === cachedSmall)
+    assert(cachedBig === uncachedBig)
   }
 }

@@ -264,4 +264,26 @@ class SnapshotMergeSpec extends AnyFunSuite {
     assert(e.getMessage.contains("no manifest"))
     assert(Snapshots.currentSnapshotId(rootM).contains("merged"))
   }
+
+  test("manifest JSON: quoted ids and lineage round-trip, the on-disk format still opens") {
+    val rows = Seq(
+      Snapshots.LineageRow("postings", 0, Long.MinValue, Long.MaxValue, 12L, 345L, 67L),
+      Snapshots.LineageRow("fwd \"x\"", 3, -1L, 1L, 0L, 0L, 1L))
+    val m = Snapshots.Manifest("snap \"q\" \\ c:\\d\n", 1024L, 8, 6,
+      Seq("journal", "postings"), rows, stemming = true)
+    assert(Snapshots.parseManifest(Snapshots.manifestJson(m)) === m)
+    // a manifest as written to disk, byte for byte, and one from before the
+    // stemming/ngrams flags existed
+    val onDisk = """{"snapshotId":"snap-1","docCount":1024,"numBuckets":8,"docRangeShift":6,""" +
+      """"stemming":0,"ngrams":1,"stagesDone":["journal","postings"],"lineage":[{"stage":"postings",""" +
+      """"partitionId":0,"termRangeLo":-9223372036854775808,"termRangeHi":9223372036854775807,""" +
+      """"docCount":12,"postingBytes":345,"wallClockMs":67}]}"""
+    val plain = Snapshots.Manifest("snap-1", 1024L, 8, 6, Seq("journal", "postings"),
+      rows.take(1), ngrams = true)
+    assert(Snapshots.parseManifest(onDisk) === plain)
+    assert(Snapshots.manifestJson(plain) === onDisk)
+    val older = """{"snapshotId":"s","docCount":3,"numBuckets":4,"docRangeShift":2,""" +
+      """"stagesDone":[],"lineage":[]}"""
+    assert(Snapshots.parseManifest(older) === Snapshots.Manifest("s", 3L, 4, 2, Nil, Nil))
+  }
 }

@@ -5,7 +5,7 @@ import graft.core._
 import graft.tables.Snapshots
 import graft.tables.Snapshots.LineageRow
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -34,11 +34,35 @@ final case class BucketedPosting(bucket: Int, term_hash: Long, doc_range: Long, 
 final case class FwdInput(doc_range: Long, rank_doc_id: Long, doc_meta: Long, domain_id: Long)
 
 /** Encoded posting block for one (term, docRange). `max_pos_count` is the
-  * block-max bound used by WAND pruning. */
+  * block-max bound used by WAND pruning. The build and the merge both make
+  * blocks with [[PostingBlock.encode]]. */
 final case class PostingBlock(
     bucket: Int, term_hash: Long, doc_range: Long, n: Int, n_prio: Int,
     max_pos_count: Int,
     blob: Array[Byte], skip_docs: Array[Long], skip_offs: Array[Int])
+
+object PostingBlock {
+  /** Encodes the rank_doc_id-sorted run `docs`/`metas` and derives its
+    * block statistics: `max_pos_count` and `n_prio`, the count of
+    * priority-flagged postings. A priority-tier block keeps doc ids only
+    * (metas zeroed), and every posting in it is priority by construction. */
+  def encode(bucket: Int, termHash: Long, docRange: Long, docs: Array[Long],
+             metas: Array[Long], prioTier: Boolean): PostingBlock = {
+    val ms = if (prioTier) new Array[Long](docs.length) else metas
+    var maxPc = 0
+    var nPrio = 0
+    var i = 0
+    while (i < ms.length) {
+      val pc = WordMeta.positionCount(ms(i))
+      if (pc > maxPc) maxPc = pc
+      if ((ms(i) & WordFlags.PriorityMask) != 0L) nPrio += 1
+      i += 1
+    }
+    val (blob, skip) = PostingCodec.encode(docs, ms)
+    PostingBlock(bucket, termHash, docRange, docs.length, if (prioTier) docs.length else nPrio,
+      maxPc, blob, skip.docIds, skip.offsets)
+  }
+}
 
 /** Forward-index block for one docRange: rank_doc_id → (doc_meta, domain_id)
   * (the reference's in-RAM forward index, ForwardIndexReader.java:53-71,
@@ -47,14 +71,33 @@ final case class PostingBlock(
   * document-metadata extremes — block-max statistics that let WAND bound the
   * document-level score part tightly. min_rank is the DOC-META rank (what
   * the valuator reads), not the posting-order rank of the range id — the
-  * two coincide in the corpus path but not in journal-level fixtures. */
+  * two coincide in the corpus path but not in journal-level fixtures. The
+  * build and the merge both make blocks with [[FwdBlock.encode]]. */
 final case class FwdBlock(
     doc_range: Long, n: Int,
     min_rank: Int, max_asl: Int, min_quality: Int, max_topology: Int,
     blob_meta: Array[Byte], meta_skip_docs: Array[Long], meta_skip_offs: Array[Int],
     blob_domain: Array[Byte], dom_skip_docs: Array[Long], dom_skip_offs: Array[Int])
 
-final case class TermStatsRow(bucket: Int, term_hash: Long, df_full: Long, df_prio: Long)
+object FwdBlock {
+  /** Encodes the rank_doc_id-sorted run's doc metas and domain ids and
+    * derives the range's four doc-meta extremes. */
+  def encode(docRange: Long, docs: Array[Long], metas: Array[Long], doms: Array[Long]): FwdBlock = {
+    var minRank = 255; var maxAsl = 0; var minQual = 15; var maxTopo = 0
+    var i = 0
+    while (i < metas.length) {
+      minRank = math.min(minRank, DocMeta.rank(metas(i)))
+      maxAsl = math.max(maxAsl, DocMeta.asl(metas(i)))
+      minQual = math.min(minQual, DocMeta.quality(metas(i)))
+      maxTopo = math.max(maxTopo, DocMeta.topology(metas(i)))
+      i += 1
+    }
+    val (bm, sm) = PostingCodec.encode(docs, metas)
+    val (bd, sd) = PostingCodec.encode(docs, doms)
+    FwdBlock(docRange, docs.length, minRank, maxAsl, minQual, maxTopo,
+      bm, sm.docIds, sm.offsets, bd, sd.docIds, sd.offsets)
+  }
+}
 
 /** Index build configuration.
   *
@@ -107,8 +150,14 @@ object IndexBuilder {
   final val StageSite     = "journal_site"
   final val StageNeighbors = "domain_neighbors"
 
+  /** The bucket of a term: its hash mod `numBuckets`, non-negative. The
+    * build partitions postings and term_stats by [[bucketCol]]; a query
+    * finds a term's files by this scalar form of the same function. */
   def bucketOf(termHash: Long, numBuckets: Int): Int =
     (((termHash % numBuckets) + numBuckets) % numBuckets).toInt
+
+  def bucketCol(termHash: Column, numBuckets: Int): Column =
+    pmod(termHash, lit(numBuckets.toLong)).cast("int")
 
   /** Deterministic repo (domain) rank 1..255, 0 best is reserved for
     * explicitly-ranked domains (DomainRankings.java:27-38; unknown=255).
@@ -290,23 +339,25 @@ object IndexBuilder {
       spark.read.parquet(s"$dir/documents").count()
     }
 
-    // Exploded postings: one row per (term, doc). rank_doc_id is the posting
-    // sort key — (domainRank << 32) | urlId, best-ranked docs first
-    // (ReverseIndexFullConverter.java:160-182).
+    // rank_doc_id is the posting sort key — (domainRank << 32) | urlId,
+    // best-ranked docs first (ReverseIndexFullConverter.java:160-182) — and
+    // doc_range its top bits
+    val rankDocId = DocId.rankEncodeCol($"rank", $"url_id")
+    val docRange = shiftrightunsigned(rankDocId, conf.docRangeShift)
+
+    // Exploded postings: one row per (term, doc).
     def explodedPostings: Dataset[RawPosting] = journal
       .select($"url_id", $"rank", explode($"keywords").as("kw"))
       .select(
         xxhash64($"kw.term").as("term_hash"),
-        shiftrightunsigned(
-          shiftleft($"rank".cast("long"), 32).bitwiseOR($"url_id".cast("long")),
-          conf.docRangeShift).as("doc_range"),
-        shiftleft($"rank".cast("long"), 32).bitwiseOR($"url_id".cast("long")).as("rank_doc_id"),
+        docRange.as("doc_range"),
+        rankDocId.as("rank_doc_id"),
         $"kw.meta".as("term_meta"))
       .as[RawPosting]
 
     // -- stage: full-tier posting blocks --------------------------------------
     val stagePostingsF = Future { if (!Snapshots.isStageDone(root, snapshotId, StagePostings)) {
-      encodeBlocks(explodedPostings, conf, StagePostings, lineageAcc, keepMeta = true)
+      encodeBlocks(explodedPostings, conf, StagePostings, lineageAcc, prioTier = false)
         .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/postings")
       Snapshots.markStageDone(root, snapshotId, StagePostings)
     }}
@@ -324,41 +375,20 @@ object IndexBuilder {
     val stagePrioF = Future { if (conf.buildPrioTier &&
         !Snapshots.isStageDone(root, snapshotId, StagePrio)) {
       val prio = explodedPostings.filter(p => (p.term_meta & WordFlags.PriorityMask) != 0L)
-      encodeBlocks(prio, conf, StagePrio, lineageAcc, keepMeta = false, allPrio = true)
+      encodeBlocks(prio, conf, StagePrio, lineageAcc, prioTier = true)
         .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/postings_prio")
       Snapshots.markStageDone(root, snapshotId, StagePrio)
     }}
 
     // -- stage: term stats (df per tier; A1/A6) -------------------------------
-    // Derived FROM THE ENCODED BLOCKS, not by a second journal explode: each
-    // block already counts its distinct docs (n) and its priority-flagged
-    // postings (n_prio, counted during encode), so Σ per term over ~100k
-    // block rows replaces a full journal scan + 52M-row explode+aggregate
-    // per build (SnapshotMerge re-derives stats from merged blocks the same
-    // way — this is the equivalence its tombstone path already relies on).
     // Chained after the postings future; still concurrent with docs/fwd.
-    val stageStatsF = stagePostingsF.map { _ =>
-      if (!Snapshots.isStageDone(root, snapshotId, StageStats)) {
-        spark.read.parquet(s"$dir/postings")
-          .groupBy($"term_hash")
-          .agg(sum($"n").as("df_full"), sum($"n_prio").as("df_prio"))
-          .withColumn("bucket", pmod($"term_hash", lit(conf.numBuckets.toLong)).cast("int"))
-          .select($"bucket", $"term_hash", $"df_full", $"df_prio")
-          .repartition(conf.numBuckets, $"bucket") // one output file per bucket dir
-          .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/term_stats")
-        Snapshots.markStageDone(root, snapshotId, StageStats)
-      }
-    }
+    val stageStatsF = stagePostingsF.map(_ => writeTermStats(spark, root, snapshotId, conf.numBuckets))
 
     // -- stage: forward blocks ------------------------------------------------
     val stageFwdF = Future { if (!Snapshots.isStageDone(root, snapshotId, StageFwd)) {
       val t0 = System.currentTimeMillis()
       journal
-        .select($"url_id", $"rank", $"domain_id", $"doc_meta")
-        .select(
-          shiftrightunsigned(shiftleft($"rank".cast("long"), 32)
-            .bitwiseOR($"url_id".cast("long")), conf.docRangeShift).as("doc_range"),
-          shiftleft($"rank".cast("long"), 32).bitwiseOR($"url_id".cast("long")).as("rank_doc_id"),
+        .select(docRange.as("doc_range"), rankDocId.as("rank_doc_id"),
           $"doc_meta", $"domain_id".cast("long").as("domain_id"))
         .as[FwdInput]
         .repartition($"doc_range")
@@ -369,22 +399,13 @@ object IndexBuilder {
           val metas = scala.collection.mutable.ArrayBuffer.empty[Long]
           val doms = scala.collection.mutable.ArrayBuffer.empty[Long]
           var curRange = Long.MinValue
-          var minRank = 255; var maxAsl = 0; var minQual = 15; var maxTopo = 0
           def flush(): Unit = if (docs.nonEmpty) {
-            val (bm, sm) = PostingCodec.encode(docs.toArray, metas.toArray)
-            val (bd, sd) = PostingCodec.encode(docs.toArray, doms.toArray)
-            out += FwdBlock(curRange, docs.length, minRank, maxAsl, minQual, maxTopo,
-              bm, sm.docIds, sm.offsets, bd, sd.docIds, sd.offsets)
+            out += FwdBlock.encode(curRange, docs.toArray, metas.toArray, doms.toArray)
             docs.clear(); metas.clear(); doms.clear()
-            minRank = 255; maxAsl = 0; minQual = 15; maxTopo = 0
           }
           it.foreach { r =>
             if (r.doc_range != curRange) { flush(); curRange = r.doc_range }
             docs += r.rank_doc_id; metas += r.doc_meta; doms += r.domain_id
-            minRank = math.min(minRank, DocMeta.rank(r.doc_meta))
-            maxAsl = math.max(maxAsl, DocMeta.asl(r.doc_meta))
-            minQual = math.min(minQual, DocMeta.quality(r.doc_meta))
-            maxTopo = math.max(maxTopo, DocMeta.topology(r.doc_meta))
           }
           flush()
           out.iterator
@@ -458,6 +479,27 @@ object IndexBuilder {
     Snapshots.markStageDone(root, snapshotId, StageNeighbors)
   }
 
+  /** term_stats (df per tier; A1/A6) of a staged snapshot: Σ n and Σ n_prio
+    * per term over its full-tier posting blocks, which count their distinct
+    * docs and their priority-flagged postings. Derived from the encoded
+    * blocks rather than a second journal explode, so Σ per term over ~100k
+    * block rows replaces a full journal scan + 52M-row explode+aggregate
+    * per build; and the merge writes it the same way from the merged
+    * blocks, so its df counts equal a rebuild's. */
+  private[build] def writeTermStats(spark: SparkSession, root: String, snapshotId: String,
+                                    numBuckets: Int): Unit =
+    if (!Snapshots.isStageDone(root, snapshotId, StageStats)) {
+      val dir = Snapshots.stagingDir(root, snapshotId).toString
+      spark.read.parquet(s"$dir/postings")
+        .groupBy(col("term_hash"))
+        .agg(sum(col("n")).as("df_full"), sum(col("n_prio")).as("df_prio"))
+        .select(bucketCol(col("term_hash"), numBuckets).as("bucket"), col("term_hash"),
+          col("df_full"), col("df_prio"))
+        .repartition(numBuckets, col("bucket")) // one output file per bucket dir
+        .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/term_stats")
+      Snapshots.markStageDone(root, snapshotId, StageStats)
+    }
+
   /** The single wide shuffle of the index build: distribute by
     * (bucket, docRange) — docRange doubles as head-term salt — then sort
     * within partitions by (term, docId) and encode one block per run.
@@ -465,13 +507,12 @@ object IndexBuilder {
     * segment-sort layout (ReverseIndexFullConverter.java:70-103). */
   private def encodeBlocks(postings: Dataset[RawPosting], conf: IndexConf, stage: String,
                            lineage: org.apache.spark.util.CollectionAccumulator[LineageRow],
-                           keepMeta: Boolean,
-                           allPrio: Boolean = false): Dataset[PostingBlock] = {
+                           prioTier: Boolean): Dataset[PostingBlock] = {
     val spark = postings.sparkSession
     import spark.implicits._
     val nb = conf.numBuckets
     val bucketed = postings
-      .withColumn("bucket", pmod($"term_hash", lit(nb.toLong)).cast("int"))
+      .withColumn("bucket", bucketCol($"term_hash", nb))
       .select($"bucket", $"term_hash", $"doc_range", $"rank_doc_id", $"term_meta")
       .as[BucketedPosting]
     val distributed =
@@ -494,23 +535,10 @@ object IndexBuilder {
         var termLo = Long.MaxValue
         var termHi = Long.MinValue
         def flush(): Unit = if (docs.nonEmpty) {
-          val (blob, skip) = PostingCodec.encode(docs.toArray, metas.toArray)
-          var maxPc = 0
-          var nPrio = 0
-          var i = 0
-          while (i < metas.length) {
-            val pc = WordMeta.positionCount(metas(i))
-            if (pc > maxPc) maxPc = pc
-            if ((metas(i) & WordFlags.PriorityMask) != 0L) nPrio += 1
-            i += 1
-          }
-          // a prio-tier block zeroes its metas (keepMeta=false), but every
-          // posting in it carries a priority flag by construction
-          if (allPrio) nPrio = docs.length
-          out += PostingBlock(curBucket, curTerm, curRange, docs.length, nPrio, maxPc,
-            blob, skip.docIds, skip.offsets)
-          totalPostings += docs.length
-          totalBytes += blob.length
+          val b = PostingBlock.encode(curBucket, curTerm, curRange, docs.toArray, metas.toArray, prioTier)
+          out += b
+          totalPostings += b.n
+          totalBytes += b.blob.length
           docs.clear(); metas.clear()
         }
         it.foreach { p =>
@@ -518,7 +546,7 @@ object IndexBuilder {
             flush(); curTerm = p.term_hash; curRange = p.doc_range; curBucket = p.bucket; started = true
           }
           docs += p.rank_doc_id
-          metas += (if (keepMeta) p.term_meta else 0L)
+          metas += p.term_meta
           termLo = math.min(termLo, p.term_hash)
           termHi = math.max(termHi, p.term_hash)
         }

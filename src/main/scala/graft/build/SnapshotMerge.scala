@@ -1,7 +1,8 @@
 package graft.build
 
-import graft.core.{DocMeta, PostingCodec}
+import graft.core.{DocId, PostingCodec}
 import graft.tables.Snapshots
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,29 +25,26 @@ import org.apache.spark.sql.functions._
   * Deletion (takedowns / contamination removal — a need the reference never
   * had, but a training-data pipeline does) follows the LSM model: deletes
   * are TOMBSTONES applied at compaction. `tombstones` docs are dropped from
-  * documents/journal, filtered out of posting and forward blocks (only
+  * documents/journal and filtered out of posting and forward blocks (only
   * blocks in an affected docRange are decoded; the rest pass through
-  * byte-identical), forward block-max statistics are recomputed from the
-  * surviving documents, and term_stats is re-derived from the merged
-  * postings so df counts shrink exactly. The merged snapshot equals a full
-  * rebuild over (union of corpora) MINUS the tombstoned docs — pinned in
-  * SnapshotMergeSpec. Tombstoned ids are resolved through the inputs'
-  * documents tables and collected to the driver (guarded by
-  * [[MaxTombstones]]); bulk deletions beyond the guard should full-rebuild.
+  * byte-identical). The merged snapshot equals a full rebuild over (union
+  * of corpora) MINUS the tombstoned docs — pinned in SnapshotMergeSpec.
+  * Tombstoned ids are resolved through the inputs' documents tables and
+  * collected to the driver (guarded by [[MaxTombstones]]); bulk deletions
+  * beyond the guard should full-rebuild.
   *
   * Scale shape per table:
-  *  - postings (and postings_prio): union of the block tables → one exchange
-  *    ON ENCODED BLOCKS hashed by (bucket, docRange) →
-  *    sortWithinPartitions(term, range) → single-pass run merge (≤N blocks
-  *    share a (term, range) key — each input contributes at most one).
-  *    Decode + merge-sort + re-encode happens only for keys present on >1
-  *    input or in a tombstoned docRange; other blocks pass through
-  *    byte-identical.
-  *  - fwd: same pattern keyed by doc_range; block extremes (min_rank &c.)
-  *    combine by min/max, or are recomputed from doc metas when a block is
-  *    filtered.
-  *  - term_stats: df counters add per term (deltas are append-only); with
-  *    tombstones they are re-derived from the merged posting blocks.
+  *  - postings (and postings_prio), fwd: union of the block tables → one
+  *    exchange ON ENCODED BLOCKS hashed by the block key ((bucket, docRange)
+  *    for postings, docRange for fwd) → sortWithinPartitions(key) →
+  *    single-pass run merge (≤N blocks share a key — each input contributes
+  *    at most one). One rule for both: a key on a single input outside any
+  *    tombstoned docRange passes through byte-identical; any other run is
+  *    decoded, merge-sorted, stripped of tombstoned docs and rebuilt by the
+  *    build's own constructor ([[PostingBlock.encode]], [[FwdBlock.encode]]),
+  *    which derives the block statistics from the surviving docs.
+  *  - term_stats: derived from the merged posting blocks by the build's
+  *    [[IndexBuilder.writeTermStats]].
   *  - journal/documents: parquet union append (anti-joined to tombstones).
   *
   * Because each input's block arrays are sorted by rank_doc_id and the
@@ -119,8 +117,7 @@ object SnapshotMerge {
       case None => Array.empty[Long]
       case Some(t) =>
         val resolved = docsAll.join(t.select($"doc_id"), "doc_id")
-          .select(shiftleft($"rank".cast("long"), 32)
-            .bitwiseOR($"url_id".cast("long")).as("rid"))
+          .select(DocId.rankEncodeCol($"rank", $"url_id").as("rid"))
           .limit(MaxTombstones + 1).as[Long].collect()
         require(resolved.length <= MaxTombstones,
           s"more than $MaxTombstones tombstoned docs — use a full rebuild for bulk deletion")
@@ -160,28 +157,7 @@ object SnapshotMerge {
       Snapshots.markStageDone(root, outId, IndexBuilder.StagePrio)
     }
 
-    if (!Snapshots.isStageDone(root, outId, IndexBuilder.StageStats)) {
-      val stats =
-        if (delSet.isEmpty)
-          // append-only: df counters add per term
-          dirs.map(d => spark.read.parquet(s"$d/term_stats")).reduce(_ unionByName _)
-            .groupBy($"term_hash")
-            .agg(sum($"df_full").as("df_full"), sum($"df_prio").as("df_prio"))
-        else
-          // with deletions: re-derive df from the merged posting blocks —
-          // each full-tier block counts its distinct docs (n) and its
-          // priority-flagged postings (n_prio), so Σ per term equals the
-          // build-side derivation exactly (IndexBuilder stats stage)
-          spark.read.parquet(s"$outDir/postings")
-            .groupBy($"term_hash")
-            .agg(sum($"n").as("df_full"), sum($"n_prio").as("df_prio"))
-      stats
-        .withColumn("bucket", pmod($"term_hash", lit(nb.toLong)).cast("int"))
-        .select($"bucket", $"term_hash", $"df_full", $"df_prio")
-        .repartition(nb, $"bucket")
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$outDir/term_stats")
-      Snapshots.markStageDone(root, outId, IndexBuilder.StageStats)
-    }
+    IndexBuilder.writeTermStats(spark, root, outId, nb)
 
     if (!Snapshots.isStageDone(root, outId, IndexBuilder.StageFwd)) {
       mergedFwd(spark, dirs.map(d => s"$d/fwd"), bcDel)
@@ -204,14 +180,9 @@ object SnapshotMerge {
   }
 
   /** Union N posting-block tables and merge the ≤N blocks sharing each
-    * (bucket, term, range) key, dropping tombstoned docs. Keys on one input
-    * outside any tombstoned range pass through without decode. Every input
-    * was encoded from a rank_doc_id-sorted disjoint run, so folding
-    * two-pointer merges reproduces the exact array a full rebuild sorts —
-    * the re-encoded blob is byte-identical to the rebuilt one. */
+    * (term, range) key by [[mergeRuns]]. */
   private[graft] def mergedPostings(spark: SparkSession, paths: Seq[String],
-      bcDel: org.apache.spark.broadcast.Broadcast[(Set[Long], Set[Long])],
-      prioTier: Boolean): Dataset[PostingBlock] = {
+      bcDel: Broadcast[(Set[Long], Set[Long])], prioTier: Boolean): Dataset[PostingBlock] = {
     import spark.implicits._
     val cols = Seq("bucket", "term_hash", "doc_range", "n", "n_prio",
       "max_pos_count", "blob", "skip_docs", "skip_offs").map(col)
@@ -224,155 +195,86 @@ object SnapshotMerge {
       // exists for the same reason)
       .repartition($"bucket", $"doc_range")
       .sortWithinPartitions($"bucket", $"term_hash", $"doc_range")
-      .mapPartitions { it =>
-        val (delSet, delRanges) = bcDel.value
-        val buf = it.buffered
-        def sameKey(a: PostingBlock, b: PostingBlock): Boolean =
-          a.bucket == b.bucket && a.term_hash == b.term_hash && a.doc_range == b.doc_range
-        // merge one key's run; None when every surviving doc was tombstoned
-        def mergeRun(): Option[PostingBlock] = {
-          val a = buf.next()
-          val affected = delRanges.contains(a.doc_range)
-          if (!affected && (!buf.hasNext || !sameKey(buf.head, a))) Some(a)
-          else {
-            val pa = PostingCodec.decode(a.blob)
-            var docs = pa.docIds; var metas = pa.metas
-            var maxPos = a.max_pos_count
-            var nPrio = a.n_prio
-            while (buf.hasNext && sameKey(buf.head, a)) {
-              val b = buf.next()
-              val pb = PostingCodec.decode(b.blob)
-              val m = mergeSorted(docs, metas, pb.docIds, pb.metas)
-              docs = m._1; metas = m._2
-              maxPos = math.max(maxPos, b.max_pos_count)
-              nPrio += b.n_prio // doc sets are disjoint: prio counts add
-            }
-            if (affected) {
-              val keep = docs.indices.filterNot(i => delSet.contains(docs(i)))
-              docs = keep.map(i => docs(i)).toArray; metas = keep.map(i => metas(i)).toArray
-              // recompute the block-max WAND bound and the prio count over
-              // survivors — the build derives both from the same metas, so
-              // the merged block stays byte/stat-identical to a rebuild.
-              // A prio-tier block zeroes its metas, but there every posting
-              // is priority by construction: survivors count directly.
-              maxPos = 0
-              nPrio = if (prioTier) docs.length else 0
-              metas.foreach { m =>
-                val pc = graft.core.WordMeta.positionCount(m)
-                if (pc > maxPos) maxPos = pc
-                if (!prioTier && (m & graft.core.WordFlags.PriorityMask) != 0L) nPrio += 1
-              }
-            }
-            if (docs.isEmpty) None
-            else {
-              val (blob, skip) = PostingCodec.encode(docs, metas)
-              Some(PostingBlock(a.bucket, a.term_hash, a.doc_range, docs.length,
-                nPrio, maxPos, blob, skip.docIds, skip.offsets))
-            }
-          }
-        }
-        new Iterator[PostingBlock] {
-          private var pending: Option[PostingBlock] = None
-          private def advance(): Unit = {
-            pending = None
-            while (pending.isEmpty && buf.hasNext) pending = mergeRun()
-          }
-          advance()
-          def hasNext: Boolean = pending.nonEmpty
-          def next(): PostingBlock = { val r = pending.get; advance(); r }
-        }
-      }
+      .mapPartitions(it => mergeRuns(it, bcDel.value)(b => (b.term_hash, b.doc_range), _.doc_range,
+        b => { val p = PostingCodec.decode(b.blob); Seq(p.docIds, p.metas) },
+        (b, c) => PostingBlock.encode(b.bucket, b.term_hash, b.doc_range, c(0), c(1), prioTier)))
   }
 
   /** Same run merge for forward blocks, keyed by doc_range; the doc-meta and
-    * domain blobs merge in lockstep. Block-max document statistics combine
-    * by min/max, or are recomputed from surviving doc metas when the range
-    * is tombstone-affected (keeping them EXACT, not just conservative, so
-    * the merged snapshot stays byte-equivalent to a rebuild). */
+    * domain blobs merge in lockstep. */
   private[graft] def mergedFwd(spark: SparkSession, paths: Seq[String],
-      bcDel: org.apache.spark.broadcast.Broadcast[(Set[Long], Set[Long])]): Dataset[FwdBlock] = {
+      bcDel: Broadcast[(Set[Long], Set[Long])]): Dataset[FwdBlock] = {
     import spark.implicits._
     paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
       .as[FwdBlock]
       .repartition($"doc_range")
       .sortWithinPartitions($"doc_range")
-      .mapPartitions { it =>
-        val (delSet, delRanges) = bcDel.value
-        val buf = it.buffered
-        def mergeRun(): Option[FwdBlock] = {
-          val a = buf.next()
-          val affected = delRanges.contains(a.doc_range)
-          if (!affected && (!buf.hasNext || buf.head.doc_range != a.doc_range)) Some(a)
-          else {
-            val ma = PostingCodec.decode(a.blob_meta)
-            val da = PostingCodec.decode(a.blob_domain)
-            var docs = ma.docIds; var metas = ma.metas; var doms = da.metas
-            var minRank = a.min_rank; var maxAsl = a.max_asl
-            var minQ = a.min_quality; var maxTopo = a.max_topology
-            while (buf.hasNext && buf.head.doc_range == a.doc_range) {
-              val b = buf.next()
-              val mb = PostingCodec.decode(b.blob_meta)
-              val db = PostingCodec.decode(b.blob_domain)
-              val mm = mergeSorted(docs, metas, mb.docIds, mb.metas)
-              val dm = mergeSorted(docs, doms, db.docIds, db.metas)
-              docs = mm._1; metas = mm._2; doms = dm._2
-              minRank = math.min(minRank, b.min_rank)
-              maxAsl = math.max(maxAsl, b.max_asl)
-              minQ = math.min(minQ, b.min_quality)
-              maxTopo = math.max(maxTopo, b.max_topology)
-            }
-            if (affected) {
-              val keep = docs.indices.filterNot(i => delSet.contains(docs(i)))
-              docs = keep.map(i => docs(i)).toArray
-              metas = keep.map(i => metas(i)).toArray
-              doms = keep.map(i => doms(i)).toArray
-              // recompute extremes over survivors (same init values as the
-              // build's fwd stage)
-              minRank = 255; maxAsl = 0; minQ = 15; maxTopo = 0
-              metas.foreach { m =>
-                minRank = math.min(minRank, DocMeta.rank(m))
-                maxAsl = math.max(maxAsl, DocMeta.asl(m))
-                minQ = math.min(minQ, DocMeta.quality(m))
-                maxTopo = math.max(maxTopo, DocMeta.topology(m))
-              }
-            }
-            if (docs.isEmpty) None
-            else {
-              val (bm, sm) = PostingCodec.encode(docs, metas)
-              val (bd, sd) = PostingCodec.encode(docs, doms)
-              Some(FwdBlock(a.doc_range, docs.length, minRank, maxAsl, minQ, maxTopo,
-                bm, sm.docIds, sm.offsets, bd, sd.docIds, sd.offsets))
-            }
-          }
-        }
-        new Iterator[FwdBlock] {
-          private var pending: Option[FwdBlock] = None
-          private def advance(): Unit = {
-            pending = None
-            while (pending.isEmpty && buf.hasNext) pending = mergeRun()
-          }
-          advance()
-          def hasNext: Boolean = pending.nonEmpty
-          def next(): FwdBlock = { val r = pending.get; advance(); r }
-        }
-      }
+      .mapPartitions(it => mergeRuns(it, bcDel.value)(_.doc_range, _.doc_range,
+        b => {
+          val m = PostingCodec.decode(b.blob_meta)
+          Seq(m.docIds, m.metas, PostingCodec.decode(b.blob_domain).metas)
+        },
+        (b, c) => FwdBlock.encode(b.doc_range, c(0), c(1), c(2))))
   }
 
-  /** Two-pointer merge of two docId-sorted (id, payload) runs with disjoint
-    * ids. */
-  private def mergeSorted(d1: Array[Long], m1: Array[Long],
-                          d2: Array[Long], m2: Array[Long]): (Array[Long], Array[Long]) = {
-    val n = d1.length + d2.length
-    val docs = new Array[Long](n)
-    val metas = new Array[Long](n)
-    var i = 0; var j = 0; var k = 0
-    while (i < d1.length && j < d2.length) {
-      if (d1(i) <= d2(j)) { docs(k) = d1(i); metas(k) = m1(i); i += 1 }
-      else { docs(k) = d2(j); metas(k) = m2(j); j += 1 }
-      k += 1
+  /** A decoded block: its rank_doc_ids ascending, then the payload columns
+    * parallel to them. */
+  private type Run = Seq[Array[Long]]
+
+  /** The merge rule of both block tables, over `blocks` sorted by `key` and
+    * `del` = (tombstoned rank_doc_ids, their doc_ranges). A key held by one
+    * block outside every tombstoned range passes through byte-identical.
+    * Any other key's blocks are decoded, merged by rank_doc_id, stripped of
+    * tombstoned docs and rebuilt by `encode`, the build's constructor: every
+    * input was encoded from a rank_doc_id-sorted disjoint run, so the merged
+    * arrays are the ones a full rebuild sorts, and the rebuilt block and its
+    * statistics are byte-identical to the rebuilt one. A key left with no
+    * docs is dropped. */
+  private def mergeRuns[B](blocks: Iterator[B], del: (Set[Long], Set[Long]))(
+      key: B => Any, range: B => Long, decode: B => Run, encode: (B, Run) => B): Iterator[B] = {
+    val (delSet, delRanges) = del
+    val buf = blocks.buffered
+    val runs = new Iterator[Seq[B]] {
+      def hasNext: Boolean = buf.hasNext
+      def next(): Seq[B] = {
+        val k = key(buf.head)
+        val run = Seq.newBuilder[B]
+        while (buf.hasNext && key(buf.head) == k) run += buf.next()
+        run.result()
+      }
     }
-    while (i < d1.length) { docs(k) = d1(i); metas(k) = m1(i); i += 1; k += 1 }
-    while (j < d2.length) { docs(k) = d2(j); metas(k) = m2(j); j += 1; k += 1 }
-    (docs, metas)
+    runs.flatMap { run =>
+      val affected = delRanges.contains(range(run.head))
+      if (run.size == 1 && !affected) run
+      else {
+        val merged = run.map(decode).reduce(mergeSorted)
+        val cols = if (!affected) merged else {
+          val docs = merged.head
+          val keep = docs.indices.filterNot(i => delSet.contains(docs(i))).toArray
+          merged.map(gather(_, keep))
+        }
+        if (cols.head.isEmpty) Nil else Seq(encode(run.head, cols))
+      }
+    }
+  }
+
+  /** Two-pointer merge of two rank_doc_id-sorted runs with disjoint ids. */
+  private def mergeSorted(a: Run, b: Run): Run = {
+    val (d1, d2) = (a.head, b.head)
+    val from = new Array[Int](d1.length + d2.length) // positions in a ++ b by ascending id
+    var i = 0; var j = 0
+    while (i + j < from.length) {
+      if (j == d2.length || (i < d1.length && d1(i) <= d2(j))) { from(i + j) = i; i += 1 }
+      else { from(i + j) = d1.length + j; j += 1 }
+    }
+    a.zip(b).map { case (x, y) => gather(x ++ y, from) }
+  }
+
+  /** The elements of `c` at the positions `idx`. */
+  private def gather(c: Array[Long], idx: Array[Int]): Array[Long] = {
+    val out = new Array[Long](idx.length)
+    var k = 0
+    while (k < idx.length) { out(k) = c(idx(k)); k += 1 }
+    out
   }
 }

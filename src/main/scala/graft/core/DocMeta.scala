@@ -1,5 +1,8 @@
 package graft.core
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.shiftleft
+
 /** Per-document metadata packed into one 64-bit long, bit-compatible with the
   * reference layout
   * (/root/reference/code/common/model/src/main/java/nu/marginalia/model/idx/DocumentMetadata.java:34-56):
@@ -83,4 +86,8 @@ object DocId {
   def ranking(rankEncodedId: Long): Int = (rankEncodedId >>> 32).toInt
   def rankEncode(rank: Int, urlId: Int): Long =
     (rank.toLong << 32) | (urlId.toLong & 0xFFFF_FFFFL)
+  /** Column form of [[rankEncode]] over non-negative url ids: the build's
+    * posting-order key, `doc_range` being its top bits. */
+  def rankEncodeCol(rank: Column, urlId: Column): Column =
+    shiftleft(rank.cast("long"), 32).bitwiseOR(urlId.cast("long"))
 }

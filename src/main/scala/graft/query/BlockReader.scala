@@ -23,6 +23,7 @@ import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
+import graft.build.IndexBuilder
 import QueryEngine.DirRow
 
 /** Per-query reads of one snapshot's serving tables, each a plain RDD job —
@@ -34,11 +35,7 @@ import QueryEngine.DirRow
   * `term_hash`/`doc_range` statistics, records filtered exactly), reads only
   * the columns it needs, and its result returns through
   * `SparkContext.runJob`. No per-query plan passes through Catalyst, and the
-  * job's function is a top-level object the closure cleaner skips.
-  *
-  * Forward-block rows carry the schema of `QueryEngine.fwdUnified`, the
-  * pinned forward cache's rows, so [[QueryKernel]] reads rows from either
-  * source alike. */
+  * job's function is a top-level object the closure cleaner skips. */
 private[graft] final class BlockReader(sc: SparkContext, dir: String, numBuckets: Int) {
   import BlockReader._
 
@@ -66,7 +63,7 @@ private[graft] final class BlockReader(sc: SparkContext, dir: String, numBuckets
   /** Files of `table` in the buckets of `hashes`, one task each. */
   private def tasks[T](table: Map[Int, Seq[String]], hashes: Seq[Long],
                        emit: Emit[T], filter: Filter): Seq[(String, Emit[T], Filter)] =
-    hashes.map(h => IndexBuilderRef.bucketOf(h, numBuckets)).distinct.sorted
+    hashes.map(h => IndexBuilder.bucketOf(h, numBuckets)).distinct.sorted
       .flatMap(b => table.getOrElse(b, Nil)).map((_, emit, filter))
 
   /** (term_hash, df_full, df_prio) of the `hashes` present in term_stats. */
@@ -91,7 +88,13 @@ private[graft] final class BlockReader(sc: SparkContext, dir: String, numBuckets
   private def blockTasks(hashes: Seq[Long], ranges: Seq[Ranges],
                          fwd: Option[Ranges]): Seq[(String, Emit[Row], Filter)] =
     tasks(postingFiles, hashes, PostingEmit, Filter(hashes, ranges)) ++
-      fwd.toSeq.flatMap(r => fwdFiles.map(f => (f, FwdEmit: Emit[Row], Filter(Nil, Seq(r)))))
+      fwd.toSeq.flatMap(r => fwdTasks(Seq(r)))
+
+  private def fwdTasks(ranges: Seq[Ranges]): Seq[(String, Emit[Row], Filter)] =
+    fwdFiles.map((_, FwdEmit, Filter(Nil, ranges)))
+
+  /** Every forward block in kernel row form: the pinned forward cache. */
+  def fwdBlocks: Scan[Row] = run(fwdTasks(Nil))
 
   /** Distinct planning ranges (doc_range >>> shift) holding priority-tier
     * blocks of `hashes`. */

@@ -213,8 +213,7 @@ object QueryEngine {
       * their postings. */
     lazy val fwdRowCache: Option[Map[Long, org.apache.spark.sql.Row]] =
       if (manifest.docCount <= cacheDocLimit)
-        Some(QueryEngine.fwdUnified(fwd).collect()
-          .map(r => r.getLong(r.fieldIndex("doc_range")) -> r).toMap)
+        Some(reader.fwdBlocks.rows.map(r => r.getLong(1) -> r).toMap)
       else None
     /** (doc_range → doc count + doc-meta extremes) directory, cached on the
       * driver when the range count is bounded (≤1M ranges) — gives the
@@ -277,16 +276,6 @@ object QueryEngine {
 
   /** One forward-directory entry: range doc count + doc-meta extremes. */
   final case class FwdDirEntry(n: Int, stats: QueryKernel.RangeStats)
-
-  /** Forward-block rows renamed into the kernel's unified posting-row schema
-    * (term_hash 0 sentinel; blob_domain non-null marks the forward row). */
-  private[query] def fwdUnified(df: DataFrame): DataFrame =
-    df.select(lit(0L).as("term_hash"), col("doc_range"), col("n"),
-      lit(-1).as("max_pos_count"),
-      col("blob_meta").as("blob"), col("meta_skip_docs").as("skip_docs"),
-      col("meta_skip_offs").as("skip_offs"),
-      col("blob_domain"), col("dom_skip_docs"), col("dom_skip_offs"),
-      col("min_rank"), col("max_asl"), col("min_quality"), col("max_topology"))
 
   def open(root: String): Index = open(root, SparkSession.active)
 
@@ -982,12 +971,6 @@ object QueryEngine {
     selectBest(parts.flatMap(p => search(spark, p, spec, Some(live))).map(r =>
       Candidate(r.url_id, r.domain_id, r.ranking, r.has_priority_term, r.score)).toArray, spec)
   }
-}
-
-/** Just the bucket function, re-exported to avoid a package cycle. */
-private[query] object IndexBuilderRef {
-  def bucketOf(termHash: Long, numBuckets: Int): Int =
-    (((termHash % numBuckets) + numBuckets) % numBuckets).toInt
 }
 
 // ---- kernel-side plan (broadcast) ------------------------------------------

@@ -142,6 +142,29 @@ class CodecSpec extends AnyFunSuite {
     assert(Hashes.termHash("a") != Hashes.termHash("b"))
   }
 
+  test("the query's scalar bucket equals the build's bucket column, negative hashes too") {
+    import graft.build.IndexBuilder
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    val spark = SparkSession.builder().master("local[4]").appName("graft-test")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    import spark.implicits._
+    val r = rng
+    val hashes = Seq(Long.MinValue, Long.MinValue + 1, -65L, -64L, -1L, 0L, 1L, 63L,
+      Long.MaxValue) ++ Seq.fill(500)(r.nextLong())
+    val terms = (0 until 500).map(i => s"t$i")
+    assert(hashes.exists(_ < 0) && terms.exists(t => Hashes.termHash(t) < 0))
+    for (nb <- Seq(1, 7, 8, 32, 64)) {
+      val built = hashes.toDF("h").select(col("h"), IndexBuilder.bucketCol(col("h"), nb))
+        .as[(Long, Int)].collect()
+      built.foreach { case (h, b) => assert(IndexBuilder.bucketOf(h, nb) == b, s"hash $h, $nb buckets") }
+      // the build hashes terms with xxhash64, the query with Hashes.termHash
+      val byTerm = terms.toDF("t")
+        .select(col("t"), IndexBuilder.bucketCol(xxhash64(col("t")), nb)).as[(String, Int)].collect()
+      byTerm.foreach { case (t, b) => assert(IndexBuilder.bucketOf(Hashes.termHash(t), nb) == b, t) }
+    }
+  }
+
   test("sha256Hex matches a known vector") {
     assert(Hashes.sha256Hex("abc") ==
       "ba7816bf8f01cfea414140de5dae2223b00361a396177a9cb410ff61f20015ad")

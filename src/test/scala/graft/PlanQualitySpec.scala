@@ -240,6 +240,12 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(exchanges == 1, s"expected 1 shuffle in the merge, saw $exchanges:\n$plan")
     // and the union stays below the exchange: no per-input shuffle
     assert(plan.contains("Union"), s"expected a pre-shuffle Union:\n$plan")
+    // the forward-block merge has the same shape
+    val fwdPlan = planOf(SnapshotMerge.mergedFwd(spark,
+      Seq(s"$root/snapshots/a/fwd", s"$root/snapshots/b/fwd"), bcNone).toDF())
+    val fwdExchanges = "Exchange".r.findAllIn(fwdPlan).size
+    assert(fwdExchanges == 1, s"expected 1 shuffle in the fwd merge, saw $fwdExchanges:\n$fwdPlan")
+    assert(fwdPlan.contains("Union"), s"expected a pre-shuffle Union:\n$fwdPlan")
   }
 
   test("window top-k gets Spark's group-limit pushdown below the exchange") {

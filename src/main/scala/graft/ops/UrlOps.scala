@@ -282,7 +282,8 @@ object UrlOps {
     *     dropped.
     *
     * Output: one row per surviving href/src — (doc_id, src_domain, kind
-    * ('a' | 'frame'), href, url, proto…canonical). `src_domain` is the
+    * ('a' | 'frame'), href, url, proto…canonical), unordered: a caller
+    * that needs an order sorts (w5 does; w7/w8 need none). `src_domain` is the
     * document URL's registered domain, so a link-graph derivation is a
     * projection away ([[linkGraph]]).
     *
@@ -403,7 +404,6 @@ object UrlOps {
 
     urlCanonical(barrier)
       .where(col("canonical").isNotNull)
-      .orderBy("doc_id", "href", "canonical")
   }
 
   /** W6: link-graph derivation — [[extractLinks]] projected to DISTINCT
@@ -414,14 +414,13 @@ object UrlOps {
     *
     * Scale: extraction rides the scan; the only shuffle is the DISTINCT
     * hash-aggregate on (src, dst), whose output is the (much smaller)
-    * domain graph. */
+    * domain graph. The edges come unordered. */
   def linkGraph(docs: DataFrame, urlCol: String = "url",
                 textCol: String = "text"): DataFrame =
     extractLinks(docs, urlCol, textCol)
       .select(col("src_domain").as("src"), col("domain").as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
-      .orderBy("src", "dst")
 
   /** W3: crawl-frontier assembly — the crawl-queue feeding workflow the
     * reference runs across CRAWL_QUEUE + `suggestForCrawling`

@@ -130,7 +130,7 @@ class LinkExtractSpec extends AnyFunSuite {
       (1L, "http://beta.com/y", """<a href="http://alpha.com/z">5</a>"""))
       .toDF("doc_id", "url", "text")
     val edges = UrlOps.linkGraph(docs).collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
+      .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
     assert(edges === Seq(
       ("alpha.com", "beta.com"), ("alpha.com", "gamma.com"),
       ("beta.com", "alpha.com")))

@@ -248,6 +248,25 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(fwdPlan.contains("Union"), s"expected a pre-shuffle Union:\n$fwdPlan")
   }
 
+  test("link extraction and the link graph run no range-partition sort") {
+    // extractLinks/linkGraph leave ordering to the caller (the w5/w6 slots
+    // sort; w7/w8 consume the edges unordered), so neither operator's plan
+    // may carry a global sort's range-partitioning exchange
+    import graft.ops.UrlOps
+    import spark.implicits._
+    val docs = Seq(
+      (0L, "http://alpha.com/x", """<a href="http://beta.com/p">1</a> <a href="/local">2</a>"""),
+      (1L, "http://beta.com/y", """<a href="http://alpha.com/z">3</a>"""))
+      .toDF("doc_id", "url", "text")
+    for ((name, df) <- Seq("extractLinks" -> UrlOps.extractLinks(docs),
+                           "linkGraph" -> UrlOps.linkGraph(docs))) {
+      df.collect() // finalize the adaptive plan
+      val plan = planOf(df)
+      assert("(?i)rangepartitioning".r.findFirstIn(plan).isEmpty,
+        s"$name plans a range-partition sort:\n$plan")
+    }
+  }
+
   test("window top-k gets Spark's group-limit pushdown below the exchange") {
     // the a8 shape: rank-filter over a window. Spark 4's InferWindowGroupLimit
     // must insert a PARTIAL WindowGroupLimit below the shuffle (map-side ≤k

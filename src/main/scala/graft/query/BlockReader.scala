@@ -14,19 +14,18 @@ import org.apache.parquet.schema.MessageType
 import org.apache.spark.{HashPartitioner, Partition, SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
-import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
 import graft.build.IndexBuilder
+import graft.core.PostingCodec
 import QueryEngine.DirRow
+import QueryKernel.{FwdPiece, Piece, PostingPiece}
 
-/** Per-query reads of one snapshot's serving tables, each a plain RDD job —
+/** Reads of one snapshot's serving tables — per query, and the one-time
+  * [[SnapshotImage]] of a cached handle — each a plain RDD job —
   * the Spark analog of the reference's always-open index readers
   * (SearchIndexReader). The reader lists each table's parquet files per
   * `bucket=` partition once and broadcasts one Hadoop conf. A read is then a
@@ -44,12 +43,17 @@ private[graft] final class BlockReader(sc: SparkContext, dir: String, numBuckets
   private lazy val statsFiles = bucketFiles("term_stats")
   private lazy val postingFiles = bucketFiles("postings")
   private lazy val prioFiles = bucketFiles("postings_prio")
-  private lazy val fwdFiles: Seq[String] = {
-    val p = new Path(dir, "fwd")
+  private lazy val fwdFiles: Seq[Listed] = tableFiles("fwd")
+
+  /** Bytes of the listed posting files: what pinning the postings costs. */
+  lazy val postingBytes: Long = postingFiles.valuesIterator.flatten.map(_.bytes).sum
+
+  private def tableFiles(table: String): Seq[Listed] = {
+    val p = new Path(dir, table)
     parquetFiles(p.getFileSystem(sc.hadoopConfiguration), p)
   }
 
-  private def bucketFiles(table: String): Map[Int, Seq[String]] = {
+  private def bucketFiles(table: String): Map[Int, Seq[Listed]] = {
     val p = new Path(dir, table)
     val fs = p.getFileSystem(sc.hadoopConfiguration)
     if (!fs.exists(p)) Map.empty
@@ -61,10 +65,10 @@ private[graft] final class BlockReader(sc: SparkContext, dir: String, numBuckets
   }
 
   /** Files of `table` in the buckets of `hashes`, one task each. */
-  private def tasks[T](table: Map[Int, Seq[String]], hashes: Seq[Long],
+  private def tasks[T](table: Map[Int, Seq[Listed]], hashes: Seq[Long],
                        emit: Emit[T], filter: Filter): Seq[(String, Emit[T], Filter)] =
     hashes.map(h => IndexBuilder.bucketOf(h, numBuckets)).distinct.sorted
-      .flatMap(b => table.getOrElse(b, Nil)).map((_, emit, filter))
+      .flatMap(b => table.getOrElse(b, Nil)).map(f => (f.path, emit, filter))
 
   /** (term_hash, df_full, df_prio) of the `hashes` present in term_stats. */
   def termStats(hashes: Seq[Long]): Scan[(Long, Long, Long)] =
@@ -79,22 +83,32 @@ private[graft] final class BlockReader(sc: SparkContext, dir: String, numBuckets
     if (shift == 0) scan else scan.copy(rows = DirEmit.merge(scan.rows.iterator))
   }
 
-  /** Posting blocks of `hashes` over `ranges` in kernel row form; with
-    * `fwd`, the same job also reads the forward blocks over those ranges
-    * (rows whose `blob_domain` is non-null). */
-  def blocks(hashes: Seq[Long], ranges: Seq[Ranges], fwd: Option[Ranges]): Scan[Row] =
+  /** Posting blocks of `hashes` over `ranges`; with `fwd`, the same job also
+    * reads the forward blocks over those ranges. */
+  def blocks(hashes: Seq[Long], ranges: Seq[Ranges], fwd: Option[Ranges]): Scan[Piece] =
     run(blockTasks(hashes, ranges, fwd))
 
   private def blockTasks(hashes: Seq[Long], ranges: Seq[Ranges],
-                         fwd: Option[Ranges]): Seq[(String, Emit[Row], Filter)] =
+                         fwd: Option[Ranges]): Seq[(String, Emit[Piece], Filter)] =
     tasks(postingFiles, hashes, PostingEmit, Filter(hashes, ranges)) ++
       fwd.toSeq.flatMap(r => fwdTasks(Seq(r)))
 
-  private def fwdTasks(ranges: Seq[Ranges]): Seq[(String, Emit[Row], Filter)] =
-    fwdFiles.map((_, FwdEmit, Filter(Nil, ranges)))
+  private def fwdTasks(ranges: Seq[Ranges]): Seq[(String, Emit[Piece], Filter)] =
+    fwdFiles.map(f => (f.path, FwdEmit, Filter(Nil, ranges)))
 
-  /** Every forward block in kernel row form: the pinned forward cache. */
-  def fwdBlocks: Scan[Row] = run(fwdTasks(Nil))
+  /** The whole snapshot as a [[SnapshotImage]], read in ONE job: every
+    * posting file, the prio-tier files with `prio`, every forward file and,
+    * with `neighbors`, the domain_neighbors files — a task per file, each
+    * returning its file as one part. */
+  def image(prio: Boolean, neighbors: Boolean): SnapshotImage = {
+    def all(files: Iterable[Listed], emit: Emit[SnapshotImage.Part]) =
+      files.toSeq.map(f => (f.path, emit, Filter(Nil, Nil)))
+    SnapshotImage(run(all(postingFiles.values.flatten, PostingPartEmit) ++
+      (if (prio) all(prioFiles.values.flatten, PrioPartEmit) else Nil) ++
+      all(fwdFiles, FwdPartEmit) ++
+      (if (neighbors) all(tableFiles("domain_neighbors"), NeighborPartEmit) else Nil)).rows,
+      prio, neighbors)
+  }
 
   /** Distinct planning ranges (doc_range >>> shift) holding priority-tier
     * blocks of `hashes`. */
@@ -214,61 +228,84 @@ private[graft] object BlockReader {
     }
   }
 
-  /** Kernel schema of a posting block (the forward-block columns null). */
-  val PostingSchema: StructType = StructType(Seq(
-    StructField("term_hash", LongType), StructField("doc_range", LongType),
-    StructField("n", IntegerType), StructField("max_pos_count", IntegerType),
-    StructField("blob", BinaryType),
-    StructField("skip_docs", ArrayType(LongType)), StructField("skip_offs", ArrayType(IntegerType)),
-    StructField("blob_domain", BinaryType),
-    StructField("dom_skip_docs", ArrayType(LongType)), StructField("dom_skip_offs", ArrayType(IntegerType))))
-
-  /** Kernel schema of a forward block: term_hash 0, max_pos_count -1. */
-  val FwdSchema: StructType = StructType(PostingSchema.fields ++ Seq(
-    StructField("min_rank", IntegerType), StructField("max_asl", IntegerType),
-    StructField("min_quality", IntegerType), StructField("max_topology", IntegerType)))
-
-  case object PostingEmit extends Emit[Row] {
+  case object PostingEmit extends Emit[Piece] {
     val columns = Seq("term_hash", "doc_range", "n", "max_pos_count", "blob", "skip_docs", "skip_offs")
-    def apply(records: Iterator[Group]): Array[Row] = records.map { g =>
-      new GenericRowWithSchema(Array[Any](g.getLong(0, 0), g.getLong(1, 0), g.getInteger(2, 0),
-        g.getInteger(3, 0), g.getBinary(4, 0).getBytes, longs(g, 5), ints(g, 6), null, null, null),
-        PostingSchema): Row
-    }.toArray
+    def apply(records: Iterator[Group]): Array[Piece] = records.map(piece(_): Piece).toArray
+    def piece(g: Group): PostingPiece =
+      PostingPiece(g.getLong(0, 0), g.getLong(1, 0), g.getInteger(2, 0), g.getInteger(3, 0),
+        g.getBinary(4, 0).getBytes, PostingCodec.SkipIndex(longArray(g, 5), intArray(g, 6)))
   }
 
-  case object FwdEmit extends Emit[Row] {
+  case object FwdEmit extends Emit[Piece] {
     val columns = Seq("doc_range", "n", "blob_meta", "meta_skip_docs", "meta_skip_offs",
       "blob_domain", "dom_skip_docs", "dom_skip_offs",
       "min_rank", "max_asl", "min_quality", "max_topology")
-    def apply(records: Iterator[Group]): Array[Row] = records.map { g =>
-      new GenericRowWithSchema(Array[Any](0L, g.getLong(0, 0), g.getInteger(1, 0), -1,
-        g.getBinary(2, 0).getBytes, longs(g, 3), ints(g, 4),
-        g.getBinary(5, 0).getBytes, longs(g, 6), ints(g, 7),
-        g.getInteger(8, 0), g.getInteger(9, 0), g.getInteger(10, 0), g.getInteger(11, 0)),
-        FwdSchema): Row
+    def apply(records: Iterator[Group]): Array[Piece] = records.map { g =>
+      FwdPiece(g.getLong(0, 0), new QueryKernel.FwdRange(g.getInteger(1, 0),
+        g.getBinary(2, 0).getBytes, PostingCodec.SkipIndex(longArray(g, 3), intArray(g, 4)),
+        g.getBinary(5, 0).getBytes, PostingCodec.SkipIndex(longArray(g, 6), intArray(g, 7)),
+        QueryKernel.RangeStats(g.getInteger(8, 0), g.getInteger(9, 0), g.getInteger(10, 0),
+          g.getInteger(11, 0)))): Piece
     }.toArray
   }
 
-  /** A parquet LIST column (list → element) as the Seq a DataFrame row holds. */
-  private def longs(g: Group, field: Int): Seq[Long] = {
-    val list = g.getGroup(field, 0)
-    ArraySeq.unsafeWrapArray(Array.tabulate(list.getFieldRepetitionCount(0))(
-      i => list.getGroup(0, i).getLong(0, 0)))
+  /** A whole posting file as one part of the image. */
+  case object PostingPartEmit extends Emit[SnapshotImage.Part] {
+    val columns: Seq[String] = PostingEmit.columns :+ "n_prio"
+    def apply(records: Iterator[Group]): Array[SnapshotImage.Part] = {
+      val rows = records.map(g => (PostingEmit.piece(g), g.getInteger(7, 0))).toArray
+      Array(SnapshotImage.PostingPart(rows.map(_._1), rows.map(_._2)))
+    }
   }
 
-  private def ints(g: Group, field: Int): Seq[Int] = {
-    val list = g.getGroup(field, 0)
-    ArraySeq.unsafeWrapArray(Array.tabulate(list.getFieldRepetitionCount(0))(
-      i => list.getGroup(0, i).getInteger(0, 0)))
+  case object PrioPartEmit extends Emit[SnapshotImage.Part] {
+    val columns = Seq("term_hash", "doc_range")
+    def apply(records: Iterator[Group]): Array[SnapshotImage.Part] = {
+      val rows = records.map(g => (g.getLong(0, 0), g.getLong(1, 0))).toArray
+      Array(SnapshotImage.PrioPart(rows.map(_._1), rows.map(_._2)))
+    }
   }
 
-  private def parquetFiles(fs: FileSystem, p: Path): Seq[String] =
+  /** A forward file's blocks, and the (domain, rank) pairs of its docs. */
+  case object FwdPartEmit extends Emit[SnapshotImage.Part] {
+    val columns: Seq[String] = FwdEmit.columns
+    def apply(records: Iterator[Group]): Array[SnapshotImage.Part] = {
+      val pieces = FwdEmit(records).collect { case f: FwdPiece => f }
+      val domainRanks = pieces.iterator.flatMap { f =>
+        val p = f.fwd.domains
+        p.docIds.indices.iterator.map(i => (p.metas(i) << 32) | (p.docIds(i) >>> 32))
+      }.toArray.distinct
+      Array(SnapshotImage.FwdPart(pieces, domainRanks))
+    }
+  }
+
+  case object NeighborPartEmit extends Emit[SnapshotImage.Part] {
+    val columns = Seq("repo", "neighbor_id", "neighbor_rank")
+    def apply(records: Iterator[Group]): Array[SnapshotImage.Part] =
+      Array(SnapshotImage.NeighborPart(records.map(g =>
+        (g.getString(0, 0), g.getInteger(1, 0), g.getInteger(2, 0))).toArray))
+  }
+
+  /** A parquet LIST column (list → element) as an array. */
+  private def longArray(g: Group, field: Int): Array[Long] = {
+    val list = g.getGroup(field, 0)
+    Array.tabulate(list.getFieldRepetitionCount(0))(i => list.getGroup(0, i).getLong(0, 0))
+  }
+
+  private def intArray(g: Group, field: Int): Array[Int] = {
+    val list = g.getGroup(field, 0)
+    Array.tabulate(list.getFieldRepetitionCount(0))(i => list.getGroup(0, i).getInteger(0, 0))
+  }
+
+  /** A listed parquet file and its length. */
+  private final case class Listed(path: String, bytes: Long)
+
+  private def parquetFiles(fs: FileSystem, p: Path): Seq[Listed] =
     if (!fs.exists(p)) Nil
-    else fs.listStatus(p).iterator.map(_.getPath)
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".") &&
-        !f.getName.startsWith("_"))
-      .map(_.toString).toSeq.sorted
+    else fs.listStatus(p).iterator
+      .filter(f => f.getPath.getName.endsWith(".parquet") && !f.getPath.getName.startsWith(".") &&
+        !f.getPath.getName.startsWith("_"))
+      .map(f => Listed(f.getPath.toString, f.getLen)).toSeq.sortBy(_.path)
 
   /** One file of a read: partition `index` of its [[ScanRDD]]. */
   private final class FileTask[T](val index: Int, val path: String, val emit: Emit[T],
@@ -290,9 +327,9 @@ private[graft] object BlockReader {
     def apply(context: TaskContext, it: Iterator[T]): T = it.next()
   }
 
-  private def evaluateDistributed(scan: RDD[Scan[Row]], spec: Broadcast[KernelSpec],
+  private def evaluateDistributed(scan: RDD[Scan[Piece]], spec: Broadcast[KernelSpec],
                                   partitions: Int): Array[Candidate] =
-    scan.flatMap(_.rows).keyBy(_.getLong(1))
+    scan.flatMap(_.rows).keyBy(_.range)
       .repartitionAndSortWithinPartitions(new HashPartitioner(partitions))
       .mapPartitions(it => QueryKernel.evaluatePartition(spec.value)(it.map(_._2)))
       .collect()

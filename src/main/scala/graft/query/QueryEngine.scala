@@ -78,10 +78,10 @@ final case class Subquery(
   * evaluates every query on one node): every query runs one planner and
   * one progressive loop over range batches (16× the cap, then 4× larger,
   * WAND-pruned between batches), the rest distributed past 64× the cap.
-  * The cap also picks where the batches come from: a cached handle
-  * prefetches a query of ≤ 16× the cap postings in one job; any other
-  * query runs a directory job, then one job per batch. 0 forces the
-  * distributed kernel; multiples saturate, so Long.MaxValue means no cap.
+  * A handle with a snapshot image takes the directory and every batch from
+  * it and runs no Spark job; any other handle runs a stats job, a directory
+  * job, then one job per batch. 0 forces the distributed kernel on either;
+  * multiples saturate, so Long.MaxValue means no cap.
   * Exact results are identical on every route; `fetchBudget` is the only
   * setting that changes an answer. */
 final case class QuerySpec(
@@ -135,22 +135,22 @@ final case class SearchResult(
 
 /** Distributed BM25 top-k query engine over a committed index snapshot.
   *
-  * Per query (SURVEY §3.1 Spark rebuild), every index read goes through the
-  * handle's [[BlockReader]]: a plain RDD job over the bucket-pruned parquet
-  * files of one table, each task reading its file with parquet-mr's filter2
-  * API (`term_hash IN`, `doc_range` intervals; row groups pruned by their
-  * statistics). No per-query read is planned by Catalyst.
-  *   1. driver planner: term hashes + df lookup — the handle's pinned stats,
-  *      or one term_stats read over the terms' hash buckets
+  * Per query (SURVEY §3.1 Spark rebuild), a handle that pins a
+  * [[SnapshotImage]] answers every read below from it without a Spark job.
+  * Any other handle reads through its [[BlockReader]]: a plain RDD job over
+  * the bucket-pruned parquet files of one table, each task reading its file
+  * with parquet-mr's filter2 API (`term_hash IN`, `doc_range` intervals; row
+  * groups pruned by their statistics). No per-query read is planned by
+  * Catalyst.
+  *   1. driver planner: term hashes + df lookup — the image's stats, or one
+  *      term_stats read over the terms' hash buckets
   *   2. the block directory (term, range, count, block-max) of the terms'
   *      ranges, narrowed to the rank prefixes of a domain restriction: a
-  *      cached handle whose query fits 16× the local cap prefetches all of
-  *      its posting blocks in one read and derives the directory from them;
-  *      every other query reads the directory alone
+  *      slice of the image, or one read of the directory alone
   *   3. ranges of the rarest include term per subquery bound the candidate
   *      universe (the reference orders terms by selectivity the same way,
   *      SearchIndex.compareKeywords:159-171); block-max WAND bounds order
-  *      them, and batches of ranges are looked up in the prefetch or
+  *      them, and batches of ranges are looked up in the image's slice or
   *      fetched — posting and forward blocks in one job — and evaluated
   *      into one driver-local selection whose threshold drops ranges that
   *      can no longer qualify
@@ -174,108 +174,75 @@ object QueryEngine {
     * (QueryVariants.isOmittableWord:205-210) — shared with PosSegments. */
   private val OmittableWords: Set[String] = PosSegments.OmittableWords
 
-  /** Loaded handle on one snapshot. Its [[BlockReader]] lists each serving
-    * table's files once and serves every per-query read as a prepared RDD
-    * job — the reference's always-open readers (SearchIndexReader),
-    * Spark-style. The table DataFrames serve only the one-time driver-cache
-    * pins below, which read whole tables. */
+  /** Loaded handle on one snapshot. A handle within the driver-cache
+    * budget (`docCount ≤ cacheDocLimit`, posting files ≤ [[ImageMaxBytes]])
+    * pins one [[SnapshotImage]] on its first query — posting and forward
+    * blocks, term stats, domain ranks, the prio directory and the `near:`
+    * neighbours, read in one job — and serves every query from it without a
+    * Spark job, as the reference serves from its in-RAM index; only the
+    * distributed kernel (a cap of 0, or the spill past 64× the cap) still
+    * reads the files. Any other handle serves as [[openUncached]] does: its
+    * [[BlockReader]] lists each table's files once and runs each per-query
+    * read as a prepared RDD job (the reference's always-open readers,
+    * SearchIndexReader, Spark-style). */
   final class Index(val root: String, val manifest: Snapshots.Manifest,
                     spark: SparkSession,
-                    /** Driver-cache budget in docs: handles of snapshots at or
-                      * under this size pin forward blocks / term stats / prio
-                      * directory on the driver (the reference holds its whole
-                      * index in RAM the same way). 0 = caches off — the
-                      * 10^12-doc serving tier, openable explicitly with
+                    /** Driver-cache budget in docs; 0 = no image — the 10^12-doc
+                      * serving tier, openable explicitly with
                       * [[QueryEngine.openUncached]] so the big-index paths are
                       * measurable on any snapshot (BENCH `query_latency_uncached`). */
                     val cacheDocLimit: Long = 1L << 22) {
     def dir: String = Snapshots.stagingDir(root, manifest.snapshotId).toString
-    lazy val termStats: DataFrame = spark.read.parquet(s"$dir/term_stats")
-    lazy val fwd: DataFrame = spark.read.parquet(s"$dir/fwd")
     private[graft] lazy val reader: BlockReader =
       new BlockReader(spark.sparkContext, dir, manifest.numBuckets)
-    def hasPrioTier: Boolean = manifest.stagesDone.contains("postings_prio")
     /** Priority-tier postings (docIds of flag-carrying occurrences), present
       * when the snapshot was built with IndexConf.buildPrioTier — the
       * budgeted query path reads it as a champion list (reference
       * SearchIndex.createQueries:93-157 scans the prio tier first). */
-    lazy val prioPostings: Option[DataFrame] =
-      if (hasPrioTier)
-        Some(spark.read.parquet(s"$dir/postings_prio"))
-      else None
-    /** Forward blocks pinned on the driver in kernel row form, keyed by
-      * doc_range — the Spark analog of the reference's always-in-RAM forward
-      * index (ForwardIndexReader.java:53-71). With this cache a query's
-      * prefetch or batch jobs collect ONLY its posting blobs, and its
-      * presence permits the one-job prefetch; bounded by docCount ≤ 4M
-      * (≈ tens of MB of encoded blocks). None at larger scale: each fetch
-      * batch then carries its ranges' forward blocks in the same job as
-      * their postings. */
-    lazy val fwdRowCache: Option[Map[Long, org.apache.spark.sql.Row]] =
-      if (manifest.docCount <= cacheDocLimit)
-        Some(reader.fwdBlocks.rows.map(r => r.getLong(1) -> r).toMap)
-      else None
-    /** (doc_range → doc count + doc-meta extremes) directory, cached on the
-      * driver when the range count is bounded (≤1M ranges) — gives the
-      * progressive-fetch planner real per-range block-max statistics (tight
-      * WAND bounds before anything is fetched). Read from the pinned
-      * forward blocks when the handle has them, so a fresh handle's first
-      * query reads `fwd` once. None at larger scale: the planner then falls
-      * back to optimistic bounds. */
-    lazy val fwdDir: Option[Map[Long, QueryEngine.FwdDirEntry]] =
-      if (cacheDocLimit > 0 && (manifest.docCount >> manifest.docRangeShift) <= (1L << 20)) {
-        val rows = fwdRowCache.map(_.values.toArray).getOrElse(fwd.select("doc_range", "n",
-          "min_rank", "max_asl", "min_quality", "max_topology").collect())
-        Some(rows.map { r =>
-          def int(c: String) = r.getInt(r.fieldIndex(c))
-          r.getLong(r.fieldIndex("doc_range")) -> QueryEngine.FwdDirEntry(int("n"),
-            QueryKernel.RangeStats(int("min_rank"), int("max_asl"), int("min_quality"), int("max_topology")))
-        }.toMap)
-      } else None
-    /** term_hash → (df_full, df_prio), pinned on the driver when the
-      * vocabulary is bounded — the reference keeps its lexicon in RAM the
-      * same way. Removes BOTH planner metadata jobs from small-df queries:
-      * selectivities and term liveness are answered without touching Spark. */
-    lazy val statsCache: Option[Map[Long, (Long, Long)]] =
-      if (manifest.docCount <= cacheDocLimit)
-        Some(termStats.select("term_hash", "df_full", "df_prio").collect()
-          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap)
-      else None
-    /** `near:` neighborhood table (repo, neighbor_id, neighbor_rank),
-      * present when the snapshot ran IndexBuilder.writeDomainNeighbors. A
+    def hasPrioTier: Boolean = manifest.stagesDone.contains("postings_prio")
+    /** The `near:` table ran (IndexBuilder.writeDomainNeighbors): a
       * post-build stage, so detected by its _DONE marker rather than the
       * manifest's stage list. */
+    private def hasNeighbors: Boolean =
+      Snapshots.isStageDone(root, manifest.snapshotId, "domain_neighbors")
+    /** `near:` neighborhood table (repo, neighbor_id, neighbor_rank). */
     lazy val domainNeighbors: Option[DataFrame] =
-      if (Snapshots.isStageDone(root, manifest.snapshotId, "domain_neighbors"))
-        Some(spark.read.parquet(s"$dir/domain_neighbors"))
+      if (hasNeighbors) Some(spark.read.parquet(s"$dir/domain_neighbors")) else None
+    /** The pinned snapshot image, or None: the handle serves uncached. */
+    private[graft] lazy val image: Option[SnapshotImage] =
+      if (cacheDocLimit > 0 && manifest.docCount <= cacheDocLimit && reader.postingBytes <= ImageMaxBytes)
+        Some(reader.image(hasPrioTier, hasNeighbors))
       else None
-    /** domain_id → posting-order rank, pinned on the driver when the
-      * snapshot is bounded (same ≤4M-doc budget as the other caches; one
-      * row per domain, far smaller than the forward cache). Lets EXPLICIT
-      * domain restrictions (search sets, site: resolution by id) prune the
-      * posting scan by rank prefix the same way `near:` does. None at
-      * larger scale — the kernel's per-doc filter still applies. */
-    lazy val domainRankCache: Option[Map[Int, Int]] =
-      if (manifest.docCount <= cacheDocLimit)
-        Some(spark.read.parquet(s"$dir/documents")
-          .select("domain_id", "rank").distinct()
-          .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap)
-      else None
-    /** term_hash → REAL doc_ranges holding priority-tier postings, pinned on
-      * the driver alongside the other bounded caches — answers the budgeted
-      * path's champion-range lookup (reference two-tier gating,
-      * SearchIndex.java:112-132) without a Spark job. Row count is bounded by
-      * the prio tier's block count (≪ df_prio). None when the snapshot has no
-      * prio tier or the handle is uncached (the scan fallback remains). */
-    lazy val prioDirCache: Option[Map[Long, Array[Long]]] =
-      if (manifest.docCount <= cacheDocLimit)
-        prioPostings.map(_.select("term_hash", "doc_range").collect()
-          .groupBy(_.getLong(0)).map { case (h, rs) => h -> rs.map(_.getLong(1)) })
-      else None
+    // Views of the image (None on an uncached handle).
+    /** doc_range → forward block (ForwardIndexReader.java:53-71). */
+    def fwdRowCache: Option[Map[Long, QueryKernel.FwdRange]] = image.map(_.fwd)
+    /** doc_range → doc-meta extremes: real per-range block-max statistics
+      * for the planner's WAND bounds before anything is evaluated. */
+    def fwdDir: Option[Map[Long, QueryKernel.RangeStats]] =
+      image.map(_.fwd.map { case (rg, f) => rg -> f.stats })
+    /** term_hash → (df_full, df_prio): the reference keeps its lexicon in RAM. */
+    def statsCache: Option[Long => Option[(Long, Long)]] = image.map(im => im.stats _)
+    /** domain_id → posting-order ranks: lets explicit domain restrictions
+      * prune the posting scan by rank prefix the same way `near:` does. */
+    def domainRankCache: Option[Map[Int, Array[Int]]] = image.map(_.domainRanks)
+    /** term_hash → real doc ranges holding prio-tier postings: the budgeted
+      * path's champion ranges (reference two-tier gating,
+      * SearchIndex.java:112-132). None without a prio tier. */
+    def prioDirCache: Option[Map[Long, Array[Long]]] = image.flatMap(_.prioDir)
+
+    /** `near:` neighbours (neighbor_id, neighbor_rank) of `repo` — from the
+      * image, or one filter + collect on the table when uncached; None when
+      * the snapshot has no table. */
+    private[graft] def neighborsOf(repo: String): Option[Array[(Int, Int)]] = image match {
+      case Some(im) => im.neighbors.map(_.getOrElse(repo, Array.empty))
+      case None => domainNeighbors.map(_.where(col("repo") === repo)
+        .select(col("neighbor_id"), col("neighbor_rank")).collect().map(r => (r.getInt(0), r.getInt(1))))
+    }
   }
 
-  /** One forward-directory entry: range doc count + doc-meta extremes. */
-  final case class FwdDirEntry(n: Int, stats: QueryKernel.RangeStats)
+  /** Posting bytes on disk a handle pins whole: about 4× the reference's
+    * 262,144-doc index. */
+  private[graft] final val ImageMaxBytes: Long = 256L << 20
 
   def open(root: String): Index = open(root, SparkSession.active)
 
@@ -285,14 +252,14 @@ object QueryEngine {
     new Index(root, m, spark)
   }
 
-  /** Open with every driver cache OFF — the code paths a >4M-doc snapshot
-    * takes: per query, three or more [[BlockReader]] jobs instead of pinned
-    * maps — a term-stats read, a block-directory read, and one read per
-    * fetch batch carrying the batch's posting and forward blocks (three
-    * single-stage jobs when the query fits one batch). Results are
-    * identical to a cached handle (RankIdentitySpec extends its path
-    * identity here); this exists so the big-index serving tier is
-    * measurable on any snapshot. */
+  /** Open with no snapshot image — the route a >4M-doc snapshot (or one
+    * whose postings exceed [[ImageMaxBytes]]) takes: per query, three or more
+    * [[BlockReader]] jobs instead of the image — a term-stats read, a
+    * block-directory read, and one read per fetch batch carrying the batch's
+    * posting and forward blocks (three single-stage jobs when the query fits
+    * one batch). Results are identical to a cached handle (RankIdentitySpec
+    * extends its path identity here); this exists so the big-index serving
+    * tier is measurable on any snapshot. */
   def openUncached(root: String, spark: SparkSession): Index = {
     val m = Snapshots.currentManifest(root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $root"))
@@ -322,17 +289,17 @@ object QueryEngine {
 
   private def search(spark: SparkSession, index: Index, specIn: QuerySpec,
                      liveStats: Option[LiveStats]): Seq[SearchResult] = {
-    val specNear = resolveNear(specIn, index.domainNeighbors).getOrElse(return Nil)
+    val specNear = resolveNear(specIn, index.neighborsOf).getOrElse(return Nil)
 
     // Explicit domain restrictions (search sets, S8) get the same rank-
-    // prefix scan pruning via the pinned domain→rank map: ranks of the
+    // prefix scan pruning via the image's domain→rank map: ranks of the
     // restricted domains that EXIST in the corpus (an absent domain holds
     // no documents, so dropping its unknown rank loses nothing).
     val spec0: QuerySpec =
       if (specNear.domains.isEmpty || specNear.domainRanks.nonEmpty) specNear
       else index.domainRankCache match {
         case Some(m) =>
-          val ranks = specNear.domains.flatMap(m.get).distinct
+          val ranks = specNear.domains.flatMap(d => m.getOrElse(d, Array.empty[Int])).distinct
           if (ranks.isEmpty) return Nil // none of the domains exist
           specNear.copy(domainRanks = ranks)
         case None => specNear
@@ -444,11 +411,9 @@ object QueryEngine {
     val statsHashes = termHash.values.toSeq.distinct
 
     // ---- planner metadata ---------------------------------------------------
-    // With the handle's pinned stats (small snapshots): df lookups are
-    // driver-local, and a query whose total posting volume fits the local
-    // budget skips the block-directory job entirely — ONE Spark job total.
-    // Without the cache (the 10^12-doc regime): one tiny pruned term_stats
-    // job answers selectivities BEFORE any directory data moves, so the
+    // With the handle's image (small snapshots): df lookups are driver-local.
+    // Without it (the 10^12-doc regime): one tiny pruned term_stats job
+    // answers selectivities BEFORE any directory data moves, so the
     // directory guard below can size its collect.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -460,8 +425,8 @@ object QueryEngine {
          statsHashes.flatMap(h => m.get(h).map(h -> _._2)).toMap)
       case None => index.statsCache match {
         case Some(m) =>
-          (statsHashes.flatMap(h => m.get(h).filter(_._1 > 0L).map(h -> _._1)).toMap,
-           statsHashes.flatMap(h => m.get(h).map(h -> _._2)).toMap)
+          (statsHashes.flatMap(h => m(h).filter(_._1 > 0L).map(h -> _._1)).toMap,
+           statsHashes.flatMap(h => m(h).map(h -> _._2)).toMap)
         case None =>
           val rows = index.reader.termStats(statsHashes).rows
           (rows.iterator.map(r => r._1 -> r._2).toMap, rows.iterator.map(r => r._1 -> r._3).toMap)
@@ -575,55 +540,38 @@ object QueryEngine {
     // threads (rank order spreads evenly), each thread runs its own Selection
     // seeded with the phase-start threshold (conservative — skips are exact),
     // per-thread emits are concatenated. Returns (candidates, scored count).
-    def evalRangesParallel(ranges: Array[Long],
-                           byRange: collection.Map[Long, Array[org.apache.spark.sql.Row]],
-                           fwdByRange: collection.Map[Long, org.apache.spark.sql.Row],
+    def evalRangesParallel(inputs: Array[QueryKernel.RangeInput],
                            seed: Double): (Array[Candidate], Long) = {
-      def evalChunk(chunk: Array[Long]): (Array[Candidate], Long) = {
+      def evalChunk(chunk: Array[QueryKernel.RangeInput]): (Array[Candidate], Long) = {
         val sel = new QueryKernel.Selection(spec.limitTotal, spec.limitByDomain, seed)
-        val rows = chunk.iterator.flatMap { rg =>
-          byRange.getOrElse(rg, Array.empty[org.apache.spark.sql.Row])
-            .sortBy(_.getLong(0)) ++ fwdByRange.get(rg)
-        }
-        QueryKernel.evaluateInto(kSpec, rows, sel)
+        chunk.foreach(QueryKernel.evaluate(kSpec, _, sel))
         (sel.emit().toArray, sel.scored)
       }
       val k = math.min(16, Runtime.getRuntime.availableProcessors())
-      if (ranges.length <= 4 || k <= 1) evalChunk(ranges.sorted)
+      val sorted = inputs.sortBy(_.range)
+      if (sorted.length <= 4 || k <= 1) evalChunk(sorted)
       else {
-        val sorted = ranges.sorted
-        val chunks = Array.fill(k)(scala.collection.mutable.ArrayBuffer.empty[Long])
-        var i = 0
-        while (i < sorted.length) { chunks(i % k) += sorted(i); i += 1 }
-        val futs = chunks.filter(_.nonEmpty).map(c => Future(evalChunk(c.toArray)))
+        val futs = sorted.indices.groupBy(_ % k).values.map(ix => Future(evalChunk(ix.map(sorted).toArray)))
         val rs = futs.map(Await.result(_, Duration.Inf))
         (rs.toArray.flatMap(_._1), rs.iterator.map(_._2).sum)
       }
     }
 
-    // ---- fetch source: one prefetch job, or a directory job + batch jobs ----
-    // A cached handle (stats and forward blocks pinned) whose query holds at
-    // most 16× the local cap postings fetches ALL of its posting blocks in
-    // ONE job up front — one job beats a directory job plus batched fetches
-    // at that size (a few tens of MB on the driver; the reference holds its
-    // whole index in RAM). The block directory is then derived from the
-    // fetched rows and every batch below is a driver-local lookup. Every
-    // other query reads the pruned directory in one job and fetches each
-    // batch in one more. Either way the same planner and loop run, so the
-    // choice moves job counts, never results.
-    val totalDf = hashes.iterator.map(h => dfFull.getOrElse(h, 0L)).sum
-    val singleFetchCap = capTimes(spec.localEvalMaxPostings, SingleFetchFactor)
-    val prefetched: Option[Prefetch] =
-      if (index.fwdRowCache.isDefined && totalDf <= singleFetchCap)
-        Some(new Prefetch(index.reader.blocks(hashes, rankRanges, fwd = None).rows, dirShift))
-      else None
+    // ---- fetch source: the image, or a directory job + batch jobs ----------
+    // A handle with an image slices the query's posting blocks out of it: the
+    // block directory is derived from the slice and every batch below is a
+    // driver-local lookup, so the query runs no Spark job. Any other handle
+    // reads the pruned directory in one job and fetches each batch, posting
+    // and forward blocks together, in one more. Either way the same planner
+    // and loop run, so the choice moves job counts, never results.
+    val slice = index.image.map(_.slice(hashes, rankRanges, dirShift))
 
     // (term, planning range, n, max_pos_count): the block directory —
     // everything the WAND planner needs, no blobs; the planning range is the
     // real range >> dirShift
-    val blockDir: Array[DirRow] = prefetched match {
-      case Some(p) => p.dir
-      case None    => index.reader.directory(hashes, rankRanges, dirShift).rows
+    val blockDir: Array[DirRow] = slice match {
+      case Some(sl) => sl.dir
+      case None     => index.reader.directory(hashes, rankRanges, dirShift).rows
     }
     QueryEngine.lastDirStats = (dirShift, blockDir.length)
 
@@ -673,7 +621,7 @@ object QueryEngine {
           // risk), so coarsened planning always uses the optimistic stats
           val rs =
             if (dirShift == 0)
-              index.fwdDir.flatMap(_.get(rg)).map(_.stats).getOrElse(optimisticStats)
+              index.image.flatMap(_.fwd.get(rg)).map(_.stats).getOrElse(optimisticStats)
             else optimisticStats
           val bound = kSpec.subqueries.iterator
             .map(sq => QueryKernel.variantBound(kSpec, sq,
@@ -694,29 +642,20 @@ object QueryEngine {
       index.reader.distributed(hashes, rankRanges, planned(rs), ks,
         spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
-    // one fetch batch: its real ranges with their posting rows and forward
-    // row. A prefetched query looks the ranges up in the rows already on
-    // the driver; otherwise the batch is ONE job — uncached handles fetch
-    // forward blocks with the postings, cached ones read the pinned cache.
-    def fetchBatch(rs: Array[Long]): (Array[Long],
-                                      collection.Map[Long, Array[org.apache.spark.sql.Row]],
-                                      collection.Map[Long, org.apache.spark.sql.Row]) =
-      prefetched match {
-        case Some(p) => (rs.flatMap(p.rangesOf), p.byRange, index.fwdRowCache.get)
-        case None =>
-          val batch = planned(rs)
-          val rows = index.reader.blocks(hashes, rankRanges :+ batch,
-            fwd = if (index.fwdRowCache.isDefined) None else Some(batch)).rows
-          val (fwdRows, postingRows) = rows.partition(r => !r.isNullAt(7))
-          val byRange = postingRows.groupBy(_.getLong(1))
-          (byRange.keys.toArray, byRange,
-           index.fwdRowCache.getOrElse(fwdRows.iterator.map(r => r.getLong(1) -> r).toMap))
-      }
+    // one fetch batch: the kernel inputs of its real ranges — a lookup in
+    // the slice, or ONE job reading the batch's posting and forward blocks
+    def fetchBatch(rs: Array[Long]): Array[QueryKernel.RangeInput] = slice match {
+      case Some(sl) => sl.inputs(rs)
+      case None =>
+        val batch = planned(rs)
+        index.reader.blocks(hashes, rankRanges :+ batch, fwd = Some(batch)).rows
+          .groupBy(_.range).values.flatMap(ps => QueryKernel.inputOf(ps.toSeq)).toArray
+    }
 
     if (spec.localEvalMaxPostings > 0) {
       // ---- progressive driver-local WAND fetch ----------------------------
       // Ranges in ascending-bound order; take a batch (first 16× the cap,
-      // so most queries take one) from the prefetch or in one job each,
+      // so most queries take one) from the slice or in one job each,
       // evaluate into ONE selection, drop every remaining range whose
       // optimistic bound can no longer beat the threshold. A head-term
       // query touches a few batches instead of shuffling its whole posting
@@ -733,13 +672,12 @@ object QueryEngine {
       // in budgeted mode, ranges holding PRIORITY-FLAGGED postings of the
       // query's terms (the prio tier, if built) are evaluated before the
       // plain rank order, so flag-carrying documents survive a tight fetch
-      // budget even when their domain rank puts them late. One tiny pruned
-      // scan of postings_prio (distinct planning ranges, no blobs).
+      // budget even when their domain rank puts them late: a lookup in the
+      // image's prio directory, or one tiny pruned scan of postings_prio
+      // (distinct planning ranges, no blobs).
       val championRanges: Set[Long] =
         if (!budgeted) Set.empty
         else index.prioDirCache match {
-          // pinned prio directory (cached handles): champion ranges are a
-          // driver-local lookup — no Spark job on the serving path
           case Some(m) =>
             hashes.iterator.flatMap(h => m.getOrElse(h, Array.empty[Long]).iterator)
               .map(_ >>> dirShift).toSet
@@ -753,7 +691,7 @@ object QueryEngine {
         else infos.sortBy(i => (i.bound, i.range))
       var batchVol: Long =
         if (budgeted) math.max(capTimes(spec.fetchBudget, 2), 32768L)
-        else singleFetchCap
+        else capTimes(spec.localEvalMaxPostings, FirstBatchFactor)
       var fetched = 0L
       var scoredTotal = 0L
       val fetchCap = capTimes(spec.localEvalMaxPostings, 64)
@@ -776,8 +714,7 @@ object QueryEngine {
             rest = rest.drop(cut)
             // evaluated per REAL range (batch ranges are planning ranges
             // when dirShift > 0)
-            val (ranges, byRange, fwdByRange) = fetchBatch(batch.map(_.range))
-            val (cands, scored) = evalRangesParallel(ranges, byRange, fwdByRange, th)
+            val (cands, scored) = evalRangesParallel(fetchBatch(batch.map(_.range)), th)
             cands.foreach(sel.add)
             sel.scored += scored - cands.length // adds counted once already
             scoredTotal += scored
@@ -802,20 +739,8 @@ object QueryEngine {
     * position count) — the planner's view of one posting block. */
   private[graft] final case class DirRow(term: Long, range: Long, n: Int, maxPc: Int)
 
-  /** Prefetch cap and first batch, in multiples of `localEvalMaxPostings`. */
-  private final val SingleFetchFactor = 16
-
-  /** A query's posting blocks fetched in one job, grouped once: by real doc
-    * range, the real ranges of each planning range (real range >> dirShift),
-    * and the block directory derived from them. */
-  private final class Prefetch(rows: Array[org.apache.spark.sql.Row], dirShift: Int) {
-    val byRange: Map[Long, Array[org.apache.spark.sql.Row]] = rows.groupBy(_.getLong(1))
-    val rangesOf: Map[Long, Array[Long]] = byRange.keys.toArray.groupBy(_ >>> dirShift)
-    val dir: Array[DirRow] = {
-      val d = rows.iterator.map(r => DirRow(r.getLong(0), r.getLong(1) >>> dirShift, r.getInt(2), r.getInt(3)))
-      if (dirShift == 0) d.toArray else BlockReader.DirEmit.merge(d)
-    }
-  }
+  /** First batch, in multiples of `localEvalMaxPostings`. */
+  private final val FirstBatchFactor = 16
 
   /** `v × k` saturating at Long.MaxValue (a cap near it means no cap). */
   private def capTimes(v: Long, k: Int): Long =
@@ -845,27 +770,26 @@ object QueryEngine {
   }
 
   /** `near:` resolution (reference DbNearDomainsQuery) against a snapshot's
-    * neighbors table: the repo's neighborhood (self + linked domains, ≤ the
-    * build-time cap) becomes the domain restriction, plus the neighbors'
-    * posting-order ranks for scan pruning — one filter+collect on the tiny
-    * table. Without a table the query degrades to the site restriction
-    * itself via the repo's synthetic advice term. None: the repo is
-    * unknown, so its neighborhood is empty. */
-  private def resolveNear(spec: QuerySpec, neighbors: => Option[DataFrame]): Option[QuerySpec] =
+    * neighbors table, through `neighborsOf` ([[Index.neighborsOf]]): the
+    * repo's neighborhood (self + linked domains, ≤ the build-time cap)
+    * becomes the domain restriction, plus the neighbors' posting-order ranks
+    * for scan pruning. Without a table the query degrades to the site
+    * restriction itself via the repo's synthetic advice term. None: the repo
+    * is unknown, so its neighborhood is empty. */
+  private def resolveNear(spec: QuerySpec,
+                          neighborsOf: String => Option[Array[(Int, Int)]]): Option[QuerySpec] =
     spec.nearRepo match {
       case None => Some(spec)
-      case Some(r) => neighbors match {
-        case Some(nb) =>
-          val rows = nb.where(col("repo") === r)
-            .select(col("neighbor_id"), col("neighbor_rank")).collect()
+      case Some(r) => neighborsOf(r) match {
+        case Some(rows) =>
           if (rows.isEmpty) None
           else Some(spec.copy(nearRepo = None,
-            domains = (spec.domains ++ rows.map(_.getInt(0))).distinct,
+            domains = (spec.domains ++ rows.map(_._1)).distinct,
             // rank pruning is sound only when the rank set covers ALL
             // restricted domains — i.e. when `near:` is the sole restriction
             domainRanks =
               if (spec.domains.nonEmpty) Nil
-              else rows.map(_.getInt(1)).distinct.toSeq))
+              else rows.map(_._2).distinct.toSeq))
         case None =>
           Some(spec.copy(nearRepo = None, subqueries = spec.subqueries.map(sq =>
             sq.copy(advice = (sq.advice :+ s"repo:$r").distinct))))
@@ -944,7 +868,7 @@ object QueryEngine {
     // it): the first part that has one, so every part sees the same
     // restriction
     val spec = resolveNear(specIn,
-      parts.iterator.flatMap(_.domainNeighbors).nextOption()).getOrElse(return Nil)
+      r => parts.iterator.flatMap(_.neighborsOf(r)).nextOption()).getOrElse(return Nil)
 
     // global stats = per-part sums for the query's hashes; memoized — every
     // part resolves the same term set, so the cross-part lookup runs once
@@ -953,7 +877,7 @@ object QueryEngine {
       memo.computeIfAbsent(hashes, { hs =>
         parts.map { p =>
           p.statsCache match {
-            case Some(m) => hs.flatMap(h => m.get(h).map(h -> _)).toMap
+            case Some(m) => hs.flatMap(h => m(h).map(h -> _)).toMap
             case None =>
               p.reader.termStats(hs).rows.map { case (h, f, pr) => h -> ((f, pr)) }.toMap
           }
@@ -1013,14 +937,14 @@ object Candidate {
 /** Per-partition evaluation: block-max WAND over doc ranges; surviving ranges
   * are intersected with skip-pointer group decode, filtered, and scored. */
 object QueryKernel {
-  import org.apache.spark.sql.Row
+  import scala.jdk.CollectionConverters._
 
   /** One encoded block inside a range, decoded lazily: membership / meta
     * lookups seek via the skip index and decode a single 128-posting group
     * (the reference's B-tree page reads, BTreeReader.java:52-71); the full
     * decode happens only when the block drives the intersection. */
-  final class Block(val n: Int, val maxPosCount: Int, blob: Array[Byte],
-                    skip: PostingCodec.SkipIndex) {
+  final class Block(val n: Int, val maxPosCount: Int, val blob: Array[Byte],
+                    val skip: PostingCodec.SkipIndex) {
     private[this] var fullDecoded: PostingCodec.Postings = null
     private[this] var probes: Int = 0
     def full: PostingCodec.Postings = {
@@ -1109,30 +1033,49 @@ object QueryKernel {
       else b.contains _
   }
 
-  /** Partition-local running selection: candidates ordered by the reference
-    * comparator with the per-domain cap applied greedily (a partition-matroid
-    * greedy — adding candidates can only improve the kept set, so the WAND
-    * threshold derived from it is monotonically tightening and skip decisions
-    * are final-safe). */
+  /** Running selection: the capped top-`limitTotal` under the reference
+    * comparator, at most `limitByDomain` per domain, kept sorted as
+    * candidates arrive (the greedy per-domain cap is a partition matroid, so
+    * adding candidates only improves the kept set: the WAND threshold it
+    * yields only tightens and skip decisions are final-safe). A candidate
+    * outside the kept set never re-enters it — the set only loses a member
+    * to a better one — so everything else is dropped on insert, and the
+    * threshold is current after every `add`, as in streaming top-k with an
+    * insert-maintained threshold (Top-K Frequent Term Queries on Streaming
+    * Data, ICDE 2019). */
   final class Selection(limitTotal: Int, limitByDomain: Int,
                         seed: Double = Double.PositiveInfinity) {
-    val all = scala.collection.mutable.ArrayBuffer.empty[Candidate]
-    /** total candidates ever scored into this selection (compaction-proof) */
+    /** total candidates ever scored into this selection, kept or not */
     var scored: Long = 0L
-    private var dirty = false
-    private var cachedThreshold = Double.PositiveInfinity
-    private var compactFloor = 1024
+    // entries order by the comparator, then by arrival, so equal candidates
+    // are distinct members
+    private final class Entry(val c: Candidate, val seq: Long)
+    private val order: java.util.Comparator[Entry] = (a, b) => {
+      val o = Candidate.Order.compare(a.c, b.c)
+      if (o != 0) o else java.lang.Long.compare(a.seq, b.seq)
+    }
+    private val top = new java.util.TreeSet[Entry](order)
+    private val byDomain = new java.util.HashMap[Int, java.util.TreeSet[Entry]]()
+    private var threshold = Double.PositiveInfinity
 
     def add(c: Candidate): Unit = {
-      all += c; dirty = true; scored += 1
-      // bound the buffer (and the threshold re-sort cost): dropping beyond
-      // the per-domain cap is exactly what emit() does anyway, so compaction
-      // never changes the output or the threshold
-      if (all.length > compactFloor * 2) {
-        val kept = emit().toBuffer
-        all.clear(); all ++= kept
-        compactFloor = math.max(1024, all.length)
+      scored += 1
+      if (limitTotal <= 0 || limitByDomain <= 0) return
+      if (top.size == limitTotal && Candidate.Order.compare(c, top.last.c) >= 0) return
+      var dom = byDomain.get(c.domainId)
+      if (dom == null) { dom = new java.util.TreeSet[Entry](order); byDomain.put(c.domainId, dom) }
+      if (dom.size == limitByDomain) {
+        // the domain's worst member gives way to a better one, or `c` is out
+        if (Candidate.Order.compare(c, dom.last.c) >= 0) return
+        top.remove(dom.pollLast())
       }
+      val e = new Entry(c, scored)
+      top.add(e); dom.add(e)
+      if (top.size > limitTotal) { val w = top.pollLast(); byDomain.get(w.c.domainId).remove(w) }
+      threshold =
+        if (top.size < limitTotal) Double.PositiveInfinity
+        else if (top.last.c.hasPrio) Double.NegativeInfinity
+        else top.last.c.score
     }
 
     /** Worst score a new NON-priority candidate must strictly beat to have any
@@ -1143,77 +1086,64 @@ object QueryKernel {
       *           non-prio candidates unconditionally);
       *   -inf  — top is entirely priority-hit (no non-prio can enter: skip
       *           every range without priority-term postings).
+      * Never above `seed`, the bound carried in from an earlier phase.
       */
-    def nonPrioThreshold: Double = {
-      if (limitTotal <= 0) return Double.NegativeInfinity // degenerate: nothing can enter
-      if (!dirty) return math.min(cachedThreshold, seed)
-      dirty = false
-      val ordered = all.sorted(Candidate.Order)
-      val perDomain = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
-      var kept = 0
-      var last: Candidate = null
-      val it = ordered.iterator
-      while (it.hasNext && kept < limitTotal) {
-        val c = it.next()
-        if (perDomain(c.domainId) < limitByDomain) {
-          perDomain(c.domainId) += 1; kept += 1; last = c
-        }
-      }
-      cachedThreshold =
-        if (kept < limitTotal) Double.PositiveInfinity
-        else if (last.hasPrio) Double.NegativeInfinity
-        else last.score
-      math.min(cachedThreshold, seed) // seed: bound carried in from an earlier phase
-    }
+    def nonPrioThreshold: Double =
+      if (limitTotal <= 0) Double.NegativeInfinity // degenerate: nothing can enter
+      else math.min(threshold, seed)
 
-    /** Emission: per domain only the local best `limitByDomain` can survive
-      * the global cap, so dropping the rest is exact for selection.
-      * results_from_domain counts beyond the cap are therefore clamped — the
-      * reference counts the full candidate list (IndexQueryService:252-282),
-      * which doesn't distribute; documented. */
-    def emit(): Iterator[Candidate] = {
-      val byScore = all.sorted(Candidate.Order)
-      val perDomain = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
-      val keep = scala.collection.mutable.ArrayBuffer.empty[Candidate]
-      byScore.foreach { c =>
-        if (perDomain(c.domainId) < limitByDomain) {
-          keep += c
-          perDomain(c.domainId) += 1
-        }
-      }
-      keep.iterator
-    }
+    /** The capped top-`limitTotal`, best first. Exact as one part of a wider
+      * selection (a distributed partition, a driver thread's chunk): a
+      * candidate outside it has `limitTotal` better candidates in capped
+      * domains, or `limitByDomain` better ones in its own domain, and a
+      * superset of candidates keeps those, so no selection over more
+      * candidates admits it either. results_from_domain counts beyond the
+      * cap are therefore clamped — the reference counts the full candidate
+      * list (IndexQueryService:252-282), which doesn't distribute; documented. */
+    def emit(): Iterator[Candidate] = top.iterator.asScala.map(_.c)
   }
 
-  def evaluatePartition(spec: KernelSpec)(rows: Iterator[Row]): Iterator[Candidate] = {
+  /** The distributed kernel's partition: `pieces` sorted by doc range. */
+  def evaluatePartition(spec: KernelSpec)(pieces: Iterator[Piece]): Iterator[Candidate] = {
     val sel = new Selection(spec.limitTotal, spec.limitByDomain, spec.seedThreshold)
-    evaluateInto(spec, rows, sel)
+    val it = pieces.buffered
+    while (it.hasNext) {
+      val rg = it.head.range
+      val buf = scala.collection.mutable.ArrayBuffer.empty[Piece]
+      while (it.hasNext && it.head.range == rg) buf += it.next()
+      inputOf(buf.toSeq).foreach(evaluate(spec, _, sel))
+    }
     sel.emit()
   }
 
-  /** Feed `rows` (range-contiguous) into an existing selection — lets the
-    * progressive-fetch driver evaluate range batches against ONE selection
-    * whose WAND threshold tightens across batches. */
-  def evaluateInto(spec: KernelSpec, rows: Iterator[Row], sel: Selection): Unit = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    var curRange = Long.MinValue
-    var first = true
-    def flush(): Unit = if (buf.nonEmpty) { evaluateRange(spec, buf.toSeq, curRange, sel); buf.clear() }
-    rows.foreach { r =>
-      val range = r.getLong(r.fieldIndex("doc_range"))
-      if (first || range != curRange) { flush(); curRange = range; first = false }
-      buf += r
-    }
-    flush()
+  /** One doc range's forward block: its docs' metas and domain ids (a fresh
+    * lazily decoded [[Block]] per read, so nothing decoded outlives a query)
+    * and the range's doc-meta extremes. */
+  final class FwdRange(val n: Int, meta: Array[Byte], metaSkip: PostingCodec.SkipIndex,
+                       domain: Array[Byte], domainSkip: PostingCodec.SkipIndex,
+                       val stats: RangeStats) extends Serializable {
+    def metaBlock: Block = new Block(n, -1, meta, metaSkip)
+    def domainBlock: Block = new Block(n, -1, domain, domainSkip)
+    /** The domain blob decoded: rank-encoded doc ids and their domain ids. */
+    def domains: PostingCodec.Postings = PostingCodec.decode(domain)
   }
 
-  private def blockOf(r: Row): Block = {
-    val skips = PostingCodec.SkipIndex(
-      r.getAs[scala.collection.Seq[Long]]("skip_docs").toArray,
-      r.getAs[scala.collection.Seq[Int]]("skip_offs").toArray)
-    new Block(r.getInt(r.fieldIndex("n")), r.getInt(r.fieldIndex("max_pos_count")),
-      r.getAs[Array[Byte]]("blob"), skips)
-  }
+  /** One doc range's kernel input: the query's posting blocks there, by
+    * term hash, and the range's forward block. */
+  final case class RangeInput(range: Long, postings: Seq[(Long, Block)], fwd: FwdRange)
+
+  /** One block a [[BlockReader]] read returns: a posting or a forward block
+    * of one doc range. */
+  sealed trait Piece extends Serializable { def range: Long }
+  final case class PostingPiece(term: Long, range: Long, n: Int, maxPosCount: Int,
+                                blob: Array[Byte], skip: PostingCodec.SkipIndex) extends Piece
+  final case class FwdPiece(range: Long, fwd: FwdRange) extends Piece
+
+  /** One range's pieces as kernel input; None without its forward block. */
+  def inputOf(pieces: Seq[Piece]): Option[RangeInput] =
+    pieces.collectFirst { case f: FwdPiece => f }.map(f => RangeInput(f.range,
+      pieces.collect { case p: PostingPiece => p.term -> new Block(p.n, p.maxPosCount, p.blob, p.skip) },
+      f.fwd))
 
   /** Optimistic (never-under) bound on the best score any candidate in this
     * range can reach for one VARIANT term set, from per-block max position
@@ -1272,37 +1202,20 @@ object QueryKernel {
     math.min(10.0, Scoring.normalize(raw, regular.size))  // lower = better
   }
 
-  private def evaluateRange(spec: KernelSpec, rows: Seq[Row], range: Long,
-                            sel: Selection): Unit = {
-    // split fwd row (blob_domain != null) from posting blocks — WITHOUT
-    // decoding anything yet
-    var fwdMeta: Block = null
-    var fwdDom: Block = null
-    var rangeStats = RangeStats(0, 3, 0, 255) // optimistic fallback (never skips wrongly)
+  /** Evaluates one range into `sel`: the WAND gate, then intersection,
+    * filters and scoring of every subquery. Nothing is decoded before the
+    * gate passes. */
+  def evaluate(spec: KernelSpec, in: RangeInput, sel: Selection): Unit = {
+    val fwdMeta = in.fwd.metaBlock
+    val fwdDom = in.fwd.domainBlock
+    val rangeStats = in.fwd.stats
     val byTerm = scala.collection.mutable.Map.empty[Long, Block]
-    rows.foreach { r =>
-      val blobDomain = r.getAs[Array[Byte]]("blob_domain")
-      if (blobDomain != null) {
-        fwdMeta = blockOf(r)
-        fwdDom = new Block(r.getInt(r.fieldIndex("n")), -1, blobDomain,
-          PostingCodec.SkipIndex(
-            r.getAs[scala.collection.Seq[Long]]("dom_skip_docs").toArray,
-            r.getAs[scala.collection.Seq[Int]]("dom_skip_offs").toArray))
-        rangeStats = RangeStats(
-          r.getInt(r.fieldIndex("min_rank")),
-          r.getInt(r.fieldIndex("max_asl")),
-          r.getInt(r.fieldIndex("min_quality")),
-          r.getInt(r.fieldIndex("max_topology")))
-      } else {
-        val th = r.getLong(r.fieldIndex("term_hash"))
-        val b = blockOf(r)
-        byTerm.get(th) match {
-          case Some(prev) => byTerm(th) = prev.merged(b)
-          case None       => byTerm(th) = b
-        }
+    in.postings.foreach { case (th, b) =>
+      byTerm.get(th) match {
+        case Some(prev) => byTerm(th) = prev.merged(b)
+        case None       => byTerm(th) = b
       }
     }
-    if (fwdMeta == null) return // no forward data for this range (empty)
 
     val rangeHasPrio = spec.subqueries.exists(_.priority.exists(byTerm.contains))
 

@@ -25,12 +25,14 @@ class DirectoryGuardSpec extends AnyFunSuite {
   /** factors journal at docRangeShift 0 — every doc its own range, so the
     * head term "1" (df 511) spans 511 directory ranges: a miniature of the
     * 10^12-doc stopword regime. */
-  private lazy val index: QueryEngine.Index = {
-    val root = Files.createTempDirectory(java.nio.file.Paths.get("target"), "dirguard").toString
-    IndexBuilder.buildFromJournal(spark, Fixtures.factorsJournal(spark), root, "snap-1",
+  private lazy val root: String = {
+    val r = Files.createTempDirectory(java.nio.file.Paths.get("target"), "dirguard").toString
+    IndexBuilder.buildFromJournal(spark, Fixtures.factorsJournal(spark), r, "snap-1",
       IndexConf(numBuckets = 4, docRangeShift = 0))
-    QueryEngine.open(root, spark)
+    r
   }
+
+  private lazy val index: QueryEngine.Index = QueryEngine.open(root, spark)
 
   private def spec(budget: Long, localMax: Long): QuerySpec = QuerySpec(
     subqueries = Seq(Subquery(include = Seq("2", "3"), exclude = Seq("32"))),
@@ -48,25 +50,34 @@ class DirectoryGuardSpec extends AnyFunSuite {
     assert(s2 > s)
   }
 
-  test("coarsened directory: bounded driver collect, identical results") {
-    // ground truth: one prefetch job (the directory derived from its rows)
-    val oneJob = QueryEngine.search(spark, index, spec(1L << 20, 262144L))
-    assert(oneJob.nonEmpty)
+  /** Ground truth on the cached handle at dirShift 0 and the default cap,
+    * then the same query on `idx` through the progressive fetch (a cap small
+    * enough that its first batch can't swallow the query) at full
+    * granularity and with a budget far below the head terms' range span —
+    * there the directory must coarsen and stay within budget. */
+  private def coarsenedDirectory(idx: QueryEngine.Index): Unit = {
+    val oneBatch = QueryEngine.search(spark, index, spec(1L << 20, 262144L))
+    assert(oneBatch.nonEmpty)
 
-    // directory path at full granularity (localEval small enough that the
-    // prefetch's 16× cap can't swallow the query, forcing the directory job
-    // and batch jobs; budget large keeps dirShift 0)
-    val full = QueryEngine.search(spark, index, spec(1L << 20, 16L))
+    val full = QueryEngine.search(spark, idx, spec(1L << 20, 16L))
     assert(QueryEngine.lastDirStats._1 === 0)
-    assert(full === oneJob)
+    assert(full === oneBatch)
 
-    // directory path with a budget far below the head terms' range span —
-    // the collect must coarsen and stay within budget
-    val coarse = QueryEngine.search(spark, index, spec(40L, 16L))
+    val coarse = QueryEngine.search(spark, idx, spec(40L, 16L))
     val (shift, rows) = QueryEngine.lastDirStats
     assert(shift > 0, "guard must engage below the head-term range span")
     assert(rows <= 40, s"collected $rows directory rows for budget 40")
-    assert(coarse === oneJob)
+    assert(coarse === oneBatch)
+  }
+
+  test("coarsened directory: bounded driver collect, identical results") {
+    // a cached handle derives the directory from its snapshot image's slice
+    coarsenedDirectory(index)
+  }
+
+  test("coarsened directory on an uncached handle: the directory job, identical results") {
+    // the directory read runs on the executors, coarsened per task
+    coarsenedDirectory(QueryEngine.openUncached(root, spark))
   }
 
   test("coarsened directory: distributed kernel path identical too") {

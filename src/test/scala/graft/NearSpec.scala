@@ -125,6 +125,24 @@ class NearSpec extends AnyFunSuite {
     assert(got.exists(_.domain_id == 20))
   }
 
+  test("a pinned cached handle resolves near: from its image: no job, no SQL execution") {
+    val near = wide.copy(nearRepo = Some("domain5"))
+    // the uncached handle reads the neighbors table with a DataFrame query
+    val want = QueryEngine.search(spark, QueryEngine.openUncached(index.root, spark), near)
+    assert(want.nonEmpty)
+    QueryEngine.search(spark, index, wide) // pins the image
+    var got, again, unknown = Seq.empty[SearchResult]
+    val jobs = JobCounter.jobsDuring(spark) { got = QueryEngine.search(spark, index, near) }
+    val sql = JobCounter.sqlExecutionsDuring(spark) {
+      again = QueryEngine.search(spark, index, near)
+      unknown = QueryEngine.search(spark, index, wide.copy(nearRepo = Some("domain99")))
+    }
+    assert(got === want && again === want)
+    assert(unknown.isEmpty)
+    assert(jobs === 0, s"$jobs Spark jobs")
+    assert(sql === 0, s"$sql Spark SQL executions")
+  }
+
   test("live view: near: resolves on the part that has the table, as on the union") {
     // two staged parts split by url_id, so each holds every domain; only the
     // second carries domain_neighbors

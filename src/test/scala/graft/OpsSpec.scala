@@ -118,10 +118,10 @@ class OpsSpec extends AnyFunSuite {
     assert(cosAC < 0.8, s"fixture broken: cos(a,c)=$cosAC")
   }
 
-  // "one-shot local" is a cached handle with the cap lifted (one prefetch
-  // job, the directory derived from it); the "progressive WAND fetch" covers
-  // both the single-batch directory route of an uncached handle and the
-  // multi-batch route under a small cap
+  // "one-shot local" is a cached handle with the cap lifted (every block a
+  // slice of its snapshot image); the "progressive WAND fetch" covers both
+  // the single-batch directory route of an uncached handle and the
+  // multi-batch route under a small cap, on either handle
   test("query paths agree: one-shot local, progressive WAND fetch, distributed") {
     import graft.build.{IndexBuilder, IndexConf}
     import graft.fixtures.Fixtures
@@ -146,25 +146,31 @@ class OpsSpec extends AnyFunSuite {
     assert(idx.fwdRowCache.isDefined && idx.statsCache.isDefined && idx.fwdDir.isDefined)
     queries.foreach { q =>
       val base = QueryParser.parse(q)
-      // a cached handle with the cap lifted: one prefetch job
+      // a cached handle with the cap lifted: no job
       val oneJob = key(QueryEngine.search(spark, idx,
         base.copy(localEvalMaxPostings = Long.MaxValue)))
       // an uncached handle at the default cap: stats, directory, one batch
       val singleBatch = key(QueryEngine.search(spark, uncached, base))
-      var progressive: Seq[(Int, Int, Int, Boolean, Double)] = Nil
-      // on a cached handle the route runs the directory job, then one job per batch
+      val progressive = key(QueryEngine.search(spark, idx,
+        base.copy(localEvalMaxPostings = progressiveCap)))
+      // on an uncached handle the route runs the stats and directory jobs,
+      // then one job per batch; it plans with optimistic range stats, so
+      // at cap 16 the head-term query would spill past 64x the cap, and
+      // its batches are counted at twice the cap
+      var progressiveUncached: Seq[(Int, Int, Int, Boolean, Double)] = Nil
       batchJobs += q -> JobCounter.stagesPerJob(spark) {
-        progressive = key(QueryEngine.search(spark, idx,
-          base.copy(localEvalMaxPostings = progressiveCap)))
-      }.drop(1)
+        progressiveUncached = key(QueryEngine.search(spark, uncached,
+          base.copy(localEvalMaxPostings = 2 * progressiveCap)))
+      }.drop(2)
+      assert(progressiveUncached === progressive, s"progressive, uncached vs cached, for '$q'")
       val progressiveUnpruned = key(QueryEngine.search(spark, idx,
         base.copy(localEvalMaxPostings = progressiveCap, pruning = false)))
       val distributed = key(QueryEngine.search(spark, idx,
         base.copy(localEvalMaxPostings = 0L)))
-      assert(singleBatch === oneJob, s"single-batch directory route vs prefetch for '$q'")
-      assert(progressive === oneJob, s"progressive vs prefetch for '$q'")
+      assert(singleBatch === oneJob, s"single-batch directory route vs the image for '$q'")
+      assert(progressive === oneJob, s"progressive vs the image for '$q'")
       assert(progressiveUnpruned === oneJob, s"unpruned progressive for '$q'")
-      assert(distributed === oneJob, s"distributed vs prefetch for '$q'")
+      assert(distributed === oneJob, s"distributed vs the image for '$q'")
       // budgeted mode must return a rank-order-consistent PREFIX-quality
       // subset: every budgeted hit must be a real doc of the exact result's
       // candidate universe (same subquery semantics), and ids are unique
@@ -199,23 +205,24 @@ class OpsSpec extends AnyFunSuite {
       rs.map(r => (r.url_id, r.domain_id, r.ranking, r.has_priority_term, r.score,
         r.results_from_domain))
     val queries = Seq("tok000", "tok000 tok001", "tok002 ?rl_3_0", "f64 tok002")
-    // 1) identity: for a budgeted query the local cap only decides whether
-    //    it prefetches. At cap 2^20 (16x holds every query's postings) it
-    //    runs ONE prefetch job; at cap 1 a directory job and batch jobs.
-    //    Both must return EXACTLY the same (same champion ordering, same
-    //    batch cuts, same early termination) under a budget that bites.
+    // 1) identity: for a budgeted query the local cap decides nothing. At
+    //    cap 2^20 a cached handle serves it from its snapshot image with NO
+    //    job; at cap 1 an uncached handle runs a directory job and batch
+    //    jobs. Both must return EXACTLY the same (same champion ordering,
+    //    same batch cuts, same early termination) under a budget that bites.
+    val uncached = QueryEngine.openUncached(root, spark)
     queries.foreach { q =>
       val spec = QueryParser.parse(q).copy(fetchBudget = 32L)
-      var prefetched, perBatch = Seq.empty[(Int, Int, Int, Boolean, Double, Long)]
-      val prefetchJobs = JobCounter.jobsDuring(spark) {
-        prefetched = key(QueryEngine.search(spark, idx, spec.copy(localEvalMaxPostings = 1L << 20)))
+      var fromImage, perBatch = Seq.empty[(Int, Int, Int, Boolean, Double, Long)]
+      val imageJobs = JobCounter.jobsDuring(spark) {
+        fromImage = key(QueryEngine.search(spark, idx, spec.copy(localEvalMaxPostings = 1L << 20)))
       }
       val batchJobs = JobCounter.jobsDuring(spark) {
-        perBatch = key(QueryEngine.search(spark, idx, spec.copy(localEvalMaxPostings = 1L)))
+        perBatch = key(QueryEngine.search(spark, uncached, spec.copy(localEvalMaxPostings = 1L)))
       }
-      assert(prefetchJobs === 1, s"'$q': the prefetch route ran $prefetchJobs jobs")
+      assert(imageJobs === 0, s"'$q': the image route ran $imageJobs jobs")
       assert(batchJobs >= 2, s"'$q': the batch route ran $batchJobs jobs")
-      assert(prefetched === perBatch, s"prefetch vs directory path for '$q'")
+      assert(fromImage === perBatch, s"image vs directory path for '$q'")
     }
     // 2) job budget (VERDICT r3 task #2 done-criterion): at SERVING settings
     //    (default spec), a budgeted query must launch no more Spark jobs

@@ -96,7 +96,10 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(postings.files.map(f => new org.apache.hadoop.fs.Path(f).getName).sorted === files("postings"))
     assert(postings.files.forall(_.contains(s"/postings/bucket=$bucket/")), postings.files)
     val want = spark.read.parquet(s"${idx.dir}/postings").where(col("term_hash") === h).count()
-    assert(postings.rows.length === want && postings.rows.forall(_.getLong(0) == h))
+    assert(postings.rows.length === want && postings.rows.forall {
+      case p: QueryKernel.PostingPiece => p.term == h
+      case _ => false
+    })
     val stats = idx.reader.termStats(Seq(h))
     assert(stats.files.nonEmpty && stats.files.forall(_.contains(s"/term_stats/bucket=$bucket/")),
       stats.files)
@@ -114,12 +117,12 @@ class PlanQualitySpec extends AnyFunSuite {
 
     // a rank prefix (near:/site: restriction) as a doc_range interval
     val rankPrefix = 32 - 6
-    val ranks = term.rows.map(_.getLong(1) >>> rankPrefix).distinct.sorted
+    val ranks = term.rows.map(_.range >>> rankPrefix).distinct.sorted
     val rank = ranks(ranks.length / 2)
     val prefix = Ranges.of(Seq(rank), rankPrefix)
     val narrowed = idx.reader.blocks(Seq(h), Seq(prefix), fwd = None)
-    assert(narrowed.rows.map(_.getLong(1)).sorted.toSeq ===
-      term.rows.map(_.getLong(1)).filter(prefix.contains).sorted.toSeq)
+    assert(narrowed.rows.map(_.range).sorted.toSeq ===
+      term.rows.map(_.range).filter(prefix.contains).sorted.toSeq)
     assert(narrowed.rowGroupsRead < term.rowGroupsRead,
       s"rank prefix pruned no posting row group: ${narrowed.rowGroupsRead}/${term.rowGroupsRead}")
 
@@ -128,7 +131,7 @@ class PlanQualitySpec extends AnyFunSuite {
     val wantFwd = spark.read.parquet(s"${idx.dir}/fwd")
       .where(col("doc_range") >= (rank << rankPrefix) && col("doc_range") < ((rank + 1) << rankPrefix))
       .select("doc_range").collect().map(_.getLong(0)).sorted.toSeq
-    assert(fwd.rows.map(_.getLong(1)).sorted.toSeq === wantFwd)
+    assert(fwd.rows.map(_.range).sorted.toSeq === wantFwd)
     assert(fwd.rowGroupsRead < fwd.rowGroups,
       s"rank prefix pruned no forward row group: ${fwd.rowGroupsRead}/${fwd.rowGroups}")
   }

@@ -4,20 +4,16 @@ import graft.build.{IndexBuilder, IndexConf}
 import graft.fixtures.Fixtures
 import graft.query._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** Per-query index reads are prepared RDD jobs: a search without `near:`
   * runs no Spark SQL execution on any route — cached and uncached handles,
   * the progressive, distributed and budgeted routes, and a multi-part live
-  * view. (The one-time driver-cache pins still read whole tables with
-  * DataFrames; the handles here are pinned before counting.) */
+  * view. (A cached handle pins its snapshot image on its first query; the
+  * handles here are pinned before counting.) */
 class PreparedReadSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -37,27 +33,7 @@ class PreparedReadSpec extends AnyFunSuite {
     r
   }
 
-  /** Spark SQL executions that ended while `f` ran. Listener events arrive
-    * asynchronously but in order, so a tagged sentinel query run after `f`
-    * marks the end of `f`'s events. */
-  private def sqlExecutions(f: => Unit): Int = {
-    val tag = s"sentinel_${System.nanoTime()}"
-    val seen = new AtomicInteger(0)
-    val sentinel = new CountDownLatch(1)
-    val l = new QueryExecutionListener {
-      private def record(qe: QueryExecution): Unit =
-        if (qe.logical.toString.contains(tag)) sentinel.countDown() else { seen.incrementAndGet(); () }
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = record(qe)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = record(qe)
-    }
-    spark.listenerManager.register(l)
-    try {
-      f
-      spark.range(1).select(col("id").as(tag)).collect()
-      assert(sentinel.await(30, TimeUnit.SECONDS), "sentinel execution never reported")
-      seen.get
-    } finally spark.listenerManager.unregister(l)
-  }
+  private def sqlExecutions(f: => Unit): Int = JobCounter.sqlExecutionsDuring(spark)(f)
 
   private val queries = Seq("tok000", "tok000 tok001", "tok042 -tok001", "tok004 ?rl_4_0",
     "\"alpha beta\" tok000", "lang:scala tok003", "tok011 q>2 rank>50")

@@ -77,9 +77,10 @@ class PrioTierSpec extends AnyFunSuite {
   }
 
   test("a fetch budget bites the same on every route: the local cap only picks the fetch") {
-    // cap 2^20: a cached handle prefetches the query's 48 Ki postings in one
-    // job; cap 1024: 16x the cap is below them, so the cached handle runs
-    // batch jobs; an uncached handle always runs batch jobs
+    // cap 2^20: the query's 48 Ki postings fit one batch; cap 1024: 16x the
+    // cap is below them, so the loop takes several batches. A cached handle
+    // takes its batches from its snapshot image, an uncached one runs a job
+    // per batch
     val big = spec.copy(localEvalMaxPostings = 1L << 20)
     val cachedBig = QueryEngine.search(spark, QueryEngine.open(rootPlain, spark), big)
     val cachedSmall = QueryEngine.search(spark, QueryEngine.open(rootPlain, spark), spec)

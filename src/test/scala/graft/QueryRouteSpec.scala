@@ -62,7 +62,7 @@ class QueryRouteSpec extends AnyFunSuite {
       val base = QueryParser.parse(q)
       val want = key(QueryEngine.search(spark, cached, base))
       val lifted = base.copy(localEvalMaxPostings = Long.MaxValue)
-      Seq(cached -> 1, uncached -> 3).foreach { case (idx, routeJobs) =>
+      Seq(cached -> 0, uncached -> 3).foreach { case (idx, routeJobs) =>
         var got: Seq[SearchResult] = Nil
         // a wrapped cap would loop forever: bound the wait
         val jobs = Await.result(Future(JobCounter.jobsDuring(spark) {

@@ -10,6 +10,7 @@ import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Statist
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.{ColumnIOFactory, MessageColumnIO, RecordReader}
+import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.{HashPartitioner, Partition, SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
@@ -96,19 +97,22 @@ private[graft] final class BlockReader(sc: SparkContext, dir: String, numBuckets
   private def fwdTasks(ranges: Seq[Ranges]): Seq[(String, Emit[Piece], Filter)] =
     fwdFiles.map(f => (f.path, FwdEmit, Filter(Nil, ranges)))
 
-  /** The whole snapshot as a [[SnapshotImage]], read in ONE job: every
-    * posting file, the prio-tier files with `prio`, every forward file and,
-    * with `neighbors`, the domain_neighbors files — a task per file, each
-    * returning its file as one part. */
-  def image(prio: Boolean, neighbors: Boolean): SnapshotImage = {
-    def all(files: Iterable[Listed], emit: Emit[SnapshotImage.Part]) =
-      files.toSeq.map(f => (f.path, emit, Filter(Nil, Nil)))
-    SnapshotImage(run(all(postingFiles.values.flatten, PostingPartEmit) ++
-      (if (prio) all(prioFiles.values.flatten, PrioPartEmit) else Nil) ++
-      all(fwdFiles, FwdPartEmit) ++
-      (if (neighbors) all(tableFiles("domain_neighbors"), NeighborPartEmit) else Nil)).rows,
-      prio, neighbors)
-  }
+  /** Every posting and forward block of the snapshot, read in ONE job — a
+    * task per file — for its [[SnapshotImage]]. */
+  def allBlocks(): Scan[Piece] =
+    run(postingFiles.values.flatten.toSeq.map(f => (f.path, PostingEmit: Emit[Piece], Filter(Nil, Nil))) ++
+      fwdTasks(Nil))
+
+  /** doc_range → doc-meta extremes of every forward block: the forward
+    * directory alone, no blobs. */
+  def rangeStats(): Scan[(Long, QueryKernel.RangeStats)] =
+    run(fwdFiles.map(f => (f.path, FwdStatsEmit, Filter(Nil, Nil))))
+
+  /** `near:` neighbours (repo, neighbor_id, neighbor_rank) of `repo`, or of
+    * every repo with None; empty when the snapshot has no domain_neighbors
+    * table. */
+  def neighbors(repo: Option[String]): Scan[(String, Int, Int)] =
+    run(tableFiles("domain_neighbors").map(f => (f.path, NeighborEmit, Filter(Nil, Nil, repo))))
 
   /** Distinct planning ranges (doc_range >>> shift) holding priority-tier
     * blocks of `hashes`. */
@@ -182,9 +186,9 @@ private[graft] object BlockReader {
     override def inverseCanDrop(s: Statistics[java.lang.Long]): Boolean = false
   }
 
-  /** A read's record filter: `term_hash IN hashes` (none when empty) and
-    * `doc_range` inside every one of `ranges`. */
-  final case class Filter(hashes: Seq[Long], ranges: Seq[Ranges]) {
+  /** A read's record filter: `term_hash IN hashes` (none when empty),
+    * `doc_range` inside every one of `ranges` and, with `repo`, that repo. */
+  final case class Filter(hashes: Seq[Long], ranges: Seq[Ranges], repo: Option[String] = None) {
     def predicate: Option[FilterPredicate] = {
       val terms =
         if (hashes.isEmpty) Nil
@@ -192,7 +196,8 @@ private[graft] object BlockReader {
           hashes.map(java.lang.Long.valueOf).toSet.asJava))
       val docRanges = ranges.map(r =>
         FilterApi.userDefined(FilterApi.longColumn("doc_range"), new InRanges(r)))
-      (terms ++ docRanges).reduceOption(FilterApi.and)
+      val repos = repo.map(r => FilterApi.eq(FilterApi.binaryColumn("repo"), Binary.fromString(r)))
+      (terms ++ docRanges ++ repos).reduceOption(FilterApi.and)
     }
   }
 
@@ -229,11 +234,12 @@ private[graft] object BlockReader {
   }
 
   case object PostingEmit extends Emit[Piece] {
-    val columns = Seq("term_hash", "doc_range", "n", "max_pos_count", "blob", "skip_docs", "skip_offs")
-    def apply(records: Iterator[Group]): Array[Piece] = records.map(piece(_): Piece).toArray
-    def piece(g: Group): PostingPiece =
+    val columns = Seq("term_hash", "doc_range", "n", "max_pos_count", "blob", "skip_docs", "skip_offs",
+      "n_prio")
+    def apply(records: Iterator[Group]): Array[Piece] = records.map(g =>
       PostingPiece(g.getLong(0, 0), g.getLong(1, 0), g.getInteger(2, 0), g.getInteger(3, 0),
-        g.getBinary(4, 0).getBytes, PostingCodec.SkipIndex(longArray(g, 5), intArray(g, 6)))
+        g.getBinary(4, 0).getBytes, PostingCodec.SkipIndex(longArray(g, 5), intArray(g, 6)),
+        g.getInteger(7, 0)): Piece).toArray
   }
 
   case object FwdEmit extends Emit[Piece] {
@@ -249,41 +255,17 @@ private[graft] object BlockReader {
     }.toArray
   }
 
-  /** A whole posting file as one part of the image. */
-  case object PostingPartEmit extends Emit[SnapshotImage.Part] {
-    val columns: Seq[String] = PostingEmit.columns :+ "n_prio"
-    def apply(records: Iterator[Group]): Array[SnapshotImage.Part] = {
-      val rows = records.map(g => (PostingEmit.piece(g), g.getInteger(7, 0))).toArray
-      Array(SnapshotImage.PostingPart(rows.map(_._1), rows.map(_._2)))
-    }
+  case object FwdStatsEmit extends Emit[(Long, QueryKernel.RangeStats)] {
+    val columns = Seq("doc_range", "min_rank", "max_asl", "min_quality", "max_topology")
+    def apply(records: Iterator[Group]): Array[(Long, QueryKernel.RangeStats)] = records.map(g =>
+      g.getLong(0, 0) -> QueryKernel.RangeStats(g.getInteger(1, 0), g.getInteger(2, 0),
+        g.getInteger(3, 0), g.getInteger(4, 0))).toArray
   }
 
-  case object PrioPartEmit extends Emit[SnapshotImage.Part] {
-    val columns = Seq("term_hash", "doc_range")
-    def apply(records: Iterator[Group]): Array[SnapshotImage.Part] = {
-      val rows = records.map(g => (g.getLong(0, 0), g.getLong(1, 0))).toArray
-      Array(SnapshotImage.PrioPart(rows.map(_._1), rows.map(_._2)))
-    }
-  }
-
-  /** A forward file's blocks, and the (domain, rank) pairs of its docs. */
-  case object FwdPartEmit extends Emit[SnapshotImage.Part] {
-    val columns: Seq[String] = FwdEmit.columns
-    def apply(records: Iterator[Group]): Array[SnapshotImage.Part] = {
-      val pieces = FwdEmit(records).collect { case f: FwdPiece => f }
-      val domainRanks = pieces.iterator.flatMap { f =>
-        val p = f.fwd.domains
-        p.docIds.indices.iterator.map(i => (p.metas(i) << 32) | (p.docIds(i) >>> 32))
-      }.toArray.distinct
-      Array(SnapshotImage.FwdPart(pieces, domainRanks))
-    }
-  }
-
-  case object NeighborPartEmit extends Emit[SnapshotImage.Part] {
+  case object NeighborEmit extends Emit[(String, Int, Int)] {
     val columns = Seq("repo", "neighbor_id", "neighbor_rank")
-    def apply(records: Iterator[Group]): Array[SnapshotImage.Part] =
-      Array(SnapshotImage.NeighborPart(records.map(g =>
-        (g.getString(0, 0), g.getInteger(1, 0), g.getInteger(2, 0))).toArray))
+    def apply(records: Iterator[Group]): Array[(String, Int, Int)] =
+      records.map(g => (g.getString(0, 0), g.getInteger(1, 0), g.getInteger(2, 0))).toArray
   }
 
   /** A parquet LIST column (list → element) as an array. */

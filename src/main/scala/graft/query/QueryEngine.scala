@@ -175,16 +175,18 @@ object QueryEngine {
   private val OmittableWords: Set[String] = PosSegments.OmittableWords
 
   /** Loaded handle on one snapshot. A handle within the driver-cache
-    * budget (`docCount ≤ cacheDocLimit`, posting files ≤ [[ImageMaxBytes]])
+    * budget (`docCount ≤ cacheDocLimit`, posting files ≤ [[imageMaxBytes]])
     * pins one [[SnapshotImage]] on its first query — posting and forward
     * blocks, term stats, domain ranks, the prio directory and the `near:`
-    * neighbours, read in one job — and serves every query from it without a
-    * Spark job, as the reference serves from its in-RAM index; only the
-    * distributed kernel (a cap of 0, or the spill past 64× the cap) still
-    * reads the files. Any other handle serves as [[openUncached]] does: its
-    * [[BlockReader]] lists each table's files once and runs each per-query
-    * read as a prepared RDD job (the reference's always-open readers,
-    * SearchIndexReader, Spark-style). */
+    * neighbours, read in one job (two with a neighbours table) — and serves
+    * every query from it without a Spark job, as the reference serves from
+    * its in-RAM index; only the distributed kernel (a cap of 0, or the spill
+    * past 64× the cap) still reads the files. Any other handle serves as
+    * [[openUncached]] does — its [[BlockReader]] lists each table's files
+    * once and runs each per-query read as a prepared RDD job (the
+    * reference's always-open readers, SearchIndexReader, Spark-style) —
+    * except that an `open` handle past the budget still pins the forward
+    * directory ([[fwdDir]]) for its planner. */
   final class Index(val root: String, val manifest: Snapshots.Manifest,
                     spark: SparkSession,
                     /** Driver-cache budget in docs; 0 = no image — the 10^12-doc
@@ -203,23 +205,31 @@ object QueryEngine {
     /** The `near:` table ran (IndexBuilder.writeDomainNeighbors): a
       * post-build stage, so detected by its _DONE marker rather than the
       * manifest's stage list. */
-    private def hasNeighbors: Boolean =
+    lazy val hasNeighbors: Boolean =
       Snapshots.isStageDone(root, manifest.snapshotId, "domain_neighbors")
-    /** `near:` neighborhood table (repo, neighbor_id, neighbor_rank). */
-    lazy val domainNeighbors: Option[DataFrame] =
-      if (hasNeighbors) Some(spark.read.parquet(s"$dir/domain_neighbors")) else None
     /** The pinned snapshot image, or None: the handle serves uncached. */
     private[graft] lazy val image: Option[SnapshotImage] =
-      if (cacheDocLimit > 0 && manifest.docCount <= cacheDocLimit && reader.postingBytes <= ImageMaxBytes)
-        Some(reader.image(hasPrioTier, hasNeighbors))
+      if (cacheDocLimit > 0 && manifest.docCount <= cacheDocLimit &&
+          reader.postingBytes <= imageMaxBytes(spark))
+        Some(SnapshotImage(reader.allBlocks().rows, hasPrioTier,
+          if (hasNeighbors) Some(reader.neighbors(None).rows) else None))
       else None
     // Views of the image (None on an uncached handle).
     /** doc_range → forward block (ForwardIndexReader.java:53-71). */
     def fwdRowCache: Option[Map[Long, QueryKernel.FwdRange]] = image.map(_.fwd)
     /** doc_range → doc-meta extremes: real per-range block-max statistics
-      * for the planner's WAND bounds before anything is evaluated. */
-    def fwdDir: Option[Map[Long, QueryKernel.RangeStats]] =
-      image.map(_.fwd.map { case (rg, f) => rg -> f.stats })
+      * for the planner's WAND bounds before anything is evaluated. From the
+      * image; on an `open` handle past the image budget, read alone in one
+      * job while the snapshot has at most 2^20 ranges; None on an
+      * [[openUncached]] handle, whose planner bounds every range
+      * optimistically. */
+    lazy val fwdDir: Option[Map[Long, QueryKernel.RangeStats]] = image match {
+      case Some(im) => Some(im.fwd.map { case (rg, f) => rg -> f.stats })
+      case None =>
+        if (cacheDocLimit > 0 && (manifest.docCount >> manifest.docRangeShift) <= (1L << 20))
+          Some(reader.rangeStats().rows.toMap)
+        else None
+    }
     /** term_hash → (df_full, df_prio): the reference keeps its lexicon in RAM. */
     def statsCache: Option[Long => Option[(Long, Long)]] = image.map(im => im.stats _)
     /** domain_id → posting-order ranks: lets explicit domain restrictions
@@ -231,18 +241,33 @@ object QueryEngine {
     def prioDirCache: Option[Map[Long, Array[Long]]] = image.flatMap(_.prioDir)
 
     /** `near:` neighbours (neighbor_id, neighbor_rank) of `repo` — from the
-      * image, or one filter + collect on the table when uncached; None when
+      * image, or one filtered read of the table when uncached; None when
       * the snapshot has no table. */
     private[graft] def neighborsOf(repo: String): Option[Array[(Int, Int)]] = image match {
       case Some(im) => im.neighbors.map(_.getOrElse(repo, Array.empty))
-      case None => domainNeighbors.map(_.where(col("repo") === repo)
-        .select(col("neighbor_id"), col("neighbor_rank")).collect().map(r => (r.getInt(0), r.getInt(1))))
+      case None =>
+        if (!hasNeighbors) None
+        else Some(reader.neighbors(Some(repo)).rows.map(r => (r._2, r._3)))
     }
   }
 
-  /** Posting bytes on disk a handle pins whole: about 4× the reference's
-    * 262,144-doc index. */
-  private[graft] final val ImageMaxBytes: Long = 256L << 20
+  /** Posting bytes on disk a handle may pin whole: a tenth of the driver's
+    * heap, and a quarter of `spark.driver.maxResultSize` (0 = no cap), the
+    * cap on the one job that reads them. Measured on the Bench corpus
+    * (IndexConf(32, 12), 4 local cores): the job returns about 2.5× the
+    * posting files' bytes and the pinned image retains 2.0–2.3×. At the
+    * reference's 262,144 docs (51.7 MB of posting files) the image pinned in
+    * a 537 MB heap and kept 113 MB; at 1,048,576 docs (206.6 MB) it pinned
+    * in a 2,147 MB heap and kept 407 MB, and its job returned 512 MB. Both
+    * sit at a tenth of the heap; a quarter of a 1 GiB result cap keeps that
+    * job at under two thirds of it. */
+  private[graft] def imageMaxBytes(spark: SparkSession): Long = {
+    val results = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val heap = Runtime.getRuntime.maxMemory / ImageHeapShare
+    if (results > 0) math.min(heap, results / ImageResultShare) else heap
+  }
+  private final val ImageHeapShare = 10
+  private final val ImageResultShare = 4
 
   def open(root: String): Index = open(root, SparkSession.active)
 
@@ -252,8 +277,8 @@ object QueryEngine {
     new Index(root, m, spark)
   }
 
-  /** Open with no snapshot image — the route a >4M-doc snapshot (or one
-    * whose postings exceed [[ImageMaxBytes]]) takes: per query, three or more
+  /** Open with no snapshot image and no forward directory — the route of a
+    * snapshot past every driver budget: per query, three or more
     * [[BlockReader]] jobs instead of the image — a term-stats read, a
     * block-directory read, and one read per fetch batch carrying the batch's
     * posting and forward blocks (three single-stage jobs when the query fits
@@ -621,7 +646,7 @@ object QueryEngine {
           // risk), so coarsened planning always uses the optimistic stats
           val rs =
             if (dirShift == 0)
-              index.image.flatMap(_.fwd.get(rg)).map(_.stats).getOrElse(optimisticStats)
+              index.fwdDir.flatMap(_.get(rg)).getOrElse(optimisticStats)
             else optimisticStats
           val bound = kSpec.subqueries.iterator
             .map(sq => QueryKernel.variantBound(kSpec, sq,
@@ -693,6 +718,7 @@ object QueryEngine {
         if (budgeted) math.max(capTimes(spec.fetchBudget, 2), 32768L)
         else capTimes(spec.localEvalMaxPostings, FirstBatchFactor)
       var fetched = 0L
+      var batches = 0
       var scoredTotal = 0L
       val fetchCap = capTimes(spec.localEvalMaxPostings, 64)
       var spill: Array[RInfo] = Array.empty
@@ -719,10 +745,12 @@ object QueryEngine {
             sel.scored += scored - cands.length // adds counted once already
             scoredTotal += scored
             fetched += volAcc
+            batches += 1
             batchVol = capTimes(batchVol, 4) // fewer, bigger jobs when pruning can't converge
           }
         }
       }
+      QueryEngine.lastBatches = batches
       val local = sel.emit().toArray
       if (spill.isEmpty) return selectBest(local, spec)
       // pathological residue (fetch cap blown): finish distributed, seeding
@@ -749,6 +777,10 @@ object QueryEngine {
   /** Diagnostics for specs: (dirShift, directory rows collected) by the most
     * recent directory-path query in this JVM. */
   @volatile private[graft] var lastDirStats: (Int, Int) = (0, 0)
+
+  /** Diagnostics for specs: fetch batches of the most recent progressive
+    * query in this JVM, not counting a distributed spill. */
+  @volatile private[graft] var lastBatches: Int = 0
 
   /** Diagnostics for specs: champion (prio-tier) range count of the most
     * recent budgeted directory-path query in this JVM. */
@@ -1136,7 +1168,8 @@ object QueryKernel {
     * of one doc range. */
   sealed trait Piece extends Serializable { def range: Long }
   final case class PostingPiece(term: Long, range: Long, n: Int, maxPosCount: Int,
-                                blob: Array[Byte], skip: PostingCodec.SkipIndex) extends Piece
+                                blob: Array[Byte], skip: PostingCodec.SkipIndex,
+                                nPrio: Int) extends Piece
   final case class FwdPiece(range: Long, fwd: FwdRange) extends Piece
 
   /** One range's pieces as kernel input; None without its forward block. */

@@ -2,7 +2,7 @@ package graft.query
 
 import graft.core.PostingCodec
 import QueryEngine.DirRow
-import QueryKernel.{Block, FwdPiece, FwdRange, PostingPiece, RangeInput}
+import QueryKernel.{Block, FwdPiece, FwdRange, Piece, PostingPiece, RangeInput}
 
 import java.util.Arrays.{binarySearch, copyOfRange}
 
@@ -17,7 +17,8 @@ import java.util.Arrays.{binarySearch, copyOfRange}
   * (IndexBuilder.writeTermStats: Σ n and Σ n_prio per term); domain ranks
   * read off the forward blocks' doc ids (rank = doc id >>> 32); the prio
   * directory; and the `near:` neighbours when the snapshot has them. No
-  * `Row` is kept. Built by one [[BlockReader.image]] job. */
+  * `Row` is kept. Built from one [[BlockReader.allBlocks]] job, plus the
+  * neighbours read when the snapshot has that table. */
 private[graft] final class SnapshotImage(
     terms: Array[Long], termAt: Array[Int], dfFull: Array[Long], dfPrio: Array[Long],
     ranges: Array[Long], ns: Array[Int], maxPcs: Array[Int],
@@ -73,55 +74,51 @@ private[graft] final class SnapshotImage(
 
 private[graft] object SnapshotImage {
 
-  /** One task's share of the image job: the content of one file. */
-  sealed trait Part extends Serializable
-
-  /** A posting file's blocks and each block's n_prio. */
-  final case class PostingPart(blocks: Array[PostingPiece], nPrios: Array[Int]) extends Part
-
-  /** A prio-tier file's (term_hash, doc_range) keys. */
-  final case class PrioPart(terms: Array[Long], ranges: Array[Long]) extends Part
-
-  /** A forward file's blocks, and its docs' distinct (domain_id, rank)
-    * packed as `domain << 32 | rank`. */
-  final case class FwdPart(blocks: Array[FwdPiece], domainRanks: Array[Long]) extends Part
-
-  /** A domain_neighbors file's (repo, neighbor_id, neighbor_rank) rows. */
-  final case class NeighborPart(rows: Array[(String, Int, Int)]) extends Part
-
-  /** Assembles the parts of one image job. `prio`/`neighbors`: whether the
-    * snapshot has those tables, so an empty one still reads as present. */
-  def apply(parts: Array[Part], prio: Boolean, neighbors: Boolean): SnapshotImage = {
-    val bs = parts.collect { case p: PostingPart => p.blocks.zip(p.nPrios) }.flatten
-      .sortBy { case (b, _) => (b.term, b.range) }
+  /** Assembles an image from every posting and forward block of a snapshot
+    * ([[BlockReader.allBlocks]]). With `prio` (the snapshot has a prio
+    * tier), the prio directory holds each term's ranges whose block has
+    * `n_prio > 0`: both tiers are cut from the same postings by the same
+    * flag mask (IndexBuilder), so that is the set of the prio tier's blocks.
+    * `neighbors`: the domain_neighbors rows, when the snapshot has them. */
+  def apply(pieces: Array[Piece], prio: Boolean,
+            neighbors: Option[Array[(String, Int, Int)]]): SnapshotImage = {
+    val bs = pieces.collect { case p: PostingPiece => p }
+    java.util.Arrays.sort(bs, ByKey)
+    val fwds = pieces.collect { case f: FwdPiece => f }
     val n = bs.length
-    val blobAt = bs.scanLeft(0)(_ + _._1.blob.length)
-    val skipAt = bs.scanLeft(0)(_ + _._1.skip.docIds.length)
+    val blobAt = bs.scanLeft(0)(_ + _.blob.length)
+    val skipAt = bs.scanLeft(0)(_ + _.skip.docIds.length)
     val blob = new Array[Byte](blobAt(n))
     val (skipDocs, skipOffs) = (new Array[Long](skipAt(n)), new Array[Int](skipAt(n)))
-    for (k <- 0 until n; b = bs(k)._1) {
+    for (k <- 0 until n; b = bs(k)) {
       System.arraycopy(b.blob, 0, blob, blobAt(k), b.blob.length)
       System.arraycopy(b.skip.docIds, 0, skipDocs, skipAt(k), b.skip.docIds.length)
       System.arraycopy(b.skip.offsets, 0, skipOffs, skipAt(k), b.skip.offsets.length)
     }
     // each term's run of blocks, and its stats summed over the run
-    val termAt = (0 until n).filter(k => k == 0 || bs(k)._1.term != bs(k - 1)._1.term).toArray :+ n
-    def sum(t: Int, f: ((PostingPiece, Int)) => Int): Long =
-      (termAt(t) until termAt(t + 1)).map(k => f(bs(k)).toLong).sum
+    val termAt = ((0 until n).iterator.filter(k => k == 0 || bs(k).term != bs(k - 1).term) ++
+      Iterator.single(n)).toArray
     val nTerms = termAt.length - 1
-
-    val fwdParts = parts.collect { case f: FwdPart => f }
-    val prioParts = parts.collect { case p: PrioPart => p }
-    new SnapshotImage(Array.tabulate(nTerms)(t => bs(termAt(t))._1.term), termAt,
-      Array.tabulate(nTerms)(t => sum(t, _._1.n)), Array.tabulate(nTerms)(t => sum(t, _._2)),
-      bs.map(_._1.range), bs.map(_._1.n), bs.map(_._1.maxPosCount),
+    def runSums(at: Array[Long]): Array[Long] = Array.tabulate(nTerms)(t => at(termAt(t + 1)) - at(termAt(t)))
+    // (domain << 32 | rank) of every doc, sorted: each distinct pair once
+    val drs = fwds.flatMap { f =>
+      val p = f.fwd.domains
+      Array.tabulate(p.docIds.length)(i => (p.metas(i) << 32) | (p.docIds(i) >>> 32))
+    }
+    java.util.Arrays.sort(drs)
+    new SnapshotImage(Array.tabulate(nTerms)(t => bs(termAt(t)).term), termAt,
+      runSums(bs.scanLeft(0L)(_ + _.n)), runSums(bs.scanLeft(0L)(_ + _.nPrio)),
+      bs.map(_.range), bs.map(_.n), bs.map(_.maxPosCount),
       blob, blobAt, skipDocs, skipOffs, skipAt,
-      fwd = fwdParts.flatMap(_.blocks).map(f => f.range -> f.fwd).toMap,
-      domainRanks = fwdParts.flatMap(_.domainRanks).distinct
-        .groupBy(dr => (dr >>> 32).toInt).map { case (d, drs) => d -> drs.map(_.toInt) },
-      prioDir = if (!prio) None else Some(prioParts.flatMap(p => p.terms.zip(p.ranges))
-        .groupBy(_._1).map { case (h, rs) => h -> rs.map(_._2).distinct }),
-      neighbors = if (!neighbors) None else Some(parts.collect { case nb: NeighborPart => nb }
-        .flatMap(_.rows).groupBy(_._1).map { case (r, rows) => r -> rows.map(x => (x._2, x._3)) }))
+      fwd = fwds.map(f => f.range -> f.fwd).toMap,
+      domainRanks = drs.indices.filter(i => i == 0 || drs(i) != drs(i - 1)).map(drs)
+        .groupBy(dr => (dr >>> 32).toInt).map { case (d, ds) => d -> ds.map(_.toInt).toArray },
+      prioDir = if (!prio) None else Some(bs.filter(_.nPrio > 0).groupBy(_.term)
+        .map { case (h, ps) => h -> ps.map(_.range).distinct }),
+      neighbors = neighbors.map(_.groupBy(_._1).map { case (r, rows) => r -> rows.map(x => (x._2, x._3)) }))
   }
+
+  /** (term_hash, doc_range) order. */
+  private val ByKey: java.util.Comparator[PostingPiece] = (a, b) =>
+    if (a.term != b.term) java.lang.Long.compare(a.term, b.term) else java.lang.Long.compare(a.range, b.range)
 }

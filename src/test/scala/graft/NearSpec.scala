@@ -154,7 +154,7 @@ class NearSpec extends AnyFunSuite {
       commitSnapshot = false)
     IndexBuilder.writeDomainNeighbors(spark, root, "hi", links)
     val parts = Seq("lo", "hi").map(QueryEngine.openSnapshot(root, _, spark))
-    assert(parts.map(_.domainNeighbors.isDefined) === Seq(false, true))
+    assert(parts.map(_.hasNeighbors) === Seq(false, true))
     val near = wide.copy(nearRepo = Some("domain5"))
     val live = QueryEngine.searchParts(spark, parts, near)
     assert(live.nonEmpty)

@@ -142,6 +142,7 @@ class OpsSpec extends AnyFunSuite {
     // postings, below the head-term queries' candidate volume
     val progressiveCap = 16L
     var batchJobs = Map.empty[String, Seq[Int]]
+    var cachedBatches = Map.empty[String, (Int, Int)]
     // pin the handle's driver caches before any job counting
     assert(idx.fwdRowCache.isDefined && idx.statsCache.isDefined && idx.fwdDir.isDefined)
     queries.foreach { q =>
@@ -151,8 +152,13 @@ class OpsSpec extends AnyFunSuite {
         base.copy(localEvalMaxPostings = Long.MaxValue)))
       // an uncached handle at the default cap: stats, directory, one batch
       val singleBatch = key(QueryEngine.search(spark, uncached, base))
-      val progressive = key(QueryEngine.search(spark, idx,
-        base.copy(localEvalMaxPostings = progressiveCap)))
+      var progressive: Seq[(Int, Int, Int, Boolean, Double)] = Nil
+      // on the cached handle every batch is a lookup: no job, no spill
+      val progressiveJobs = JobCounter.jobsDuring(spark) {
+        progressive = key(QueryEngine.search(spark, idx,
+          base.copy(localEvalMaxPostings = progressiveCap)))
+      }
+      cachedBatches += q -> ((QueryEngine.lastBatches, progressiveJobs))
       // on an uncached handle the route runs the stats and directory jobs,
       // then one job per batch; it plans with optimistic range stats, so
       // at cap 16 the head-term query would spill past 64x the cap, and
@@ -188,6 +194,9 @@ class OpsSpec extends AnyFunSuite {
     val headBatches = batchJobs("tok000 tok001")
     assert(headBatches.size >= 2 && headBatches.forall(_ == 1),
       s"the progressive cap must leave the head-term query several batches: $batchJobs")
+    val (headCached, headCachedJobs) = cachedBatches("tok000 tok001")
+    assert(headCached >= 2 && headCachedJobs === 0,
+      s"cached, cap 16: the head-term query must take several batches and no job: $cachedBatches")
   }
 
   test("budgeted single-fetch path: identical results, no more jobs than exact") {

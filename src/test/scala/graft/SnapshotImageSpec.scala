@@ -134,6 +134,28 @@ class SnapshotImageSpec extends AnyFunSuite {
     assert(distributed > 0, "a cap of 0 runs the distributed kernel")
   }
 
+  test("an open handle past the image budget pins the forward directory and serves the same") {
+    val over = new QueryEngine.Index(index.root, index.manifest, spark, cacheDocLimit = 1L)
+    assert(over.image.isEmpty && over.statsCache.isEmpty)
+    assert(over.fwdDir === index.fwdDir)
+    def key(rs: Seq[SearchResult]) = rs.map(r => (r.url_id, r.domain_id, r.ranking, r.has_priority_term, r.score))
+    // same range stats, same plan: the same batches, and a distributed
+    // spill exactly where the pinned handle spills — never for the head
+    // pair, which spills on an uncached handle's optimistic stats
+    val spilled = ReferenceShapes.filter { q =>
+      val s = QueryParser.parse(q).copy(localEvalMaxPostings = 16L)
+      var fromOver, fromImage: Seq[(Int, Int, Int, Boolean, Double)] = Nil
+      val stages = JobCounter.stagesPerJob(spark) { fromOver = key(QueryEngine.search(spark, over, s)) }
+      val overBatches = QueryEngine.lastBatches
+      val imageJobs = JobCounter.jobsDuring(spark) { fromImage = key(QueryEngine.search(spark, index, s)) }
+      assert(fromOver === fromImage, s"'$q'")
+      assert(overBatches === QueryEngine.lastBatches, s"'$q': batches")
+      assert(stages.contains(2) === (imageJobs > 0), s"'$q': $stages against $imageJobs jobs on the image")
+      imageJobs > 0
+    }
+    assert(!spilled.contains("tok000 tok001"), s"spilled: $spilled")
+  }
+
   test("Selection agrees with a brute-force sort under the cap after every add and at emit") {
     /** Greedy over `cs` in comparator order (ties in arrival order):
       * at most `perDomain` per domain, at most `total` overall. */

@@ -11,7 +11,7 @@ import pandas as pd
 sf_dir, out_dir = sys.argv[1], sys.argv[2]
 con = duckdb.connect()
 for t in ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]:
+          "lineitem", "events", "documents"]:
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
 oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))

@@ -39,8 +39,7 @@ object Bench {
   private def session(cores: Int): SparkSession = SparkSession.builder()
     .master(s"local[$cores]")
     .appName(s"graft-bench-$cores")
-    .config("spark.sql.shuffle.partitions", sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS")
-      .map(_.toInt).getOrElse(math.max(cores, 8)))
+    .config("spark.sql.shuffle.partitions", math.max(cores, 8))
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     // shuffle/spill files on the same tmpfs as the data: the benchmark
@@ -112,8 +111,7 @@ object Bench {
     // rows over all 32 reducers. The file-count cost the IndexConf doc
     // warns about does not bind here: the bench writes to tmpfs.
     val m = IndexBuilder.buildFromCorpus(spark, spark.read.parquet(corpusPath), root, "snap-1",
-      IndexConf(numBuckets = 32, docRangeShift = 12,
-        saltByRange = !sys.env.contains("SPARK_GRAFT_BENCH_NO_SALT")))
+      IndexConf(numBuckets = 32, docRangeShift = 12, saltByRange = true))
     val wall = (System.nanoTime() - t0) / 1e9
     if (sys.env.contains("SPARK_GRAFT_BUILD_DETAIL")) {
       // per-stage busy time (sum) and straggler (max) from the lineage rows —
@@ -260,8 +258,8 @@ object Bench {
     // 9.2 s warm — a first sample in the 20-30 s band is still cold-session
     // cost on this suite (no slot's real warm work exceeds ~10 s), so it
     // must earn its second run too
-    val resampleUnder = sys.env.getOrElse("SPARK_GRAFT_BENCH_RESAMPLE_UNDER", "30.0").toDouble
-    val episodeOver = sys.env.getOrElse("SPARK_GRAFT_BENCH_EPISODE_OVER", "60.0").toDouble
+    val resampleUnder = 30.0
+    val episodeOver = 60.0
     // Recorded suite warm-up (VERDICT r4 task #1): the iterative-graph
     // operators pay a large first-use cost (JIT of the codegen compiler,
     // AQE machinery, shuffle paths — measured 12.6 s cold vs 2.5 s warm for
@@ -322,13 +320,11 @@ object Bench {
         s"$work/warm-idx", "snap-1", IndexConf(32, 12))
       warm.stop()
     }
-    // affinity-faithful mode (DEFAULT; opt out with SPARK_GRAFT_NO_PIN):
-    // each side's JVM owns exactly its core count for the duration of its
-    // build — GC and Spark aux threads included, like a real executor's
-    // container. Without pinning the lo side borrows idle host cores for
+    // affinity-faithful: each side's JVM owns exactly its core count for the
+    // duration of its build — GC and Spark aux threads included, like a real
+    // executor's container. Without pinning the lo side borrows idle host cores for
     // free and the measured ratio understates true scaling by ~10-15%
     // (measured on this VM: hi 16.0k → 17.4-19.3k docs/s pinned).
-    val pinCores = !sys.env.contains("SPARK_GRAFT_NO_PIN")
     // capture before any pinning: availableProcessors() reflects the current
     // affinity mask once restricted
     val allCores = Runtime.getRuntime.availableProcessors()
@@ -336,9 +332,9 @@ object Bench {
     def sideBuild(cores: Int, root: String, corpus: String, n: Long): Double = {
       val s = session(cores)
       s.sparkContext.setLogLevel("ERROR")
-      if (pinCores) setAffinity(cores)
+      setAffinity(cores)
       val v = timedBuild(s, corpus, n, root)
-      if (pinCores) setAffinity(allCores)
+      setAffinity(allCores)
       s.stop() // one session per side: getOrCreate ignores a new master
       v
     }
@@ -429,13 +425,7 @@ object Bench {
     val idx = QueryEngine.open(rootHi)
     val specs = refQueries.map(q => QueryParser.parse(q, limitByDomain = 10, limitTotal = 10))
     specs.take(4).foreach(QueryEngine.search(sparkHi, idx, _)) // warm
-    val latByQuery = refQueries.zip(specs).map { case (q, s) =>
-      q -> median3(QueryEngine.search(sparkHi, idx, s))
-    }
-    if (sys.env.contains("SPARK_GRAFT_LAT_DETAIL"))
-      latByQuery.sortBy(-_._2).foreach { case (q, ms) =>
-        System.err.println(f"LAT $ms%9.1f ms  $q") }
-    val lat = latByQuery.map(_._2).toArray.sorted
+    val lat = specs.map(s => median3(QueryEngine.search(sparkHi, idx, s))).toArray.sorted
     val p50 = percentile(lat, 0.50)
     val p95 = percentile(lat, 0.95)
     // budgeted latency: the reference serves its 250 ms budget through
@@ -507,7 +497,7 @@ object Bench {
       }.mkString("[", ",", "]")
       s"""{"docs":$n,"cores_low":$lowCores,"cores_high":$highCores,""" +
       s""""docs_per_sec_low":${r1(median(prs.map(_._1)))},"docs_per_sec_high":${r1(median(prs.map(_._2)))},"efficiency":${r4(effOf(prs))},""" +
-      s""""pinned":$pinCores,"pairs":$pj}"""
+      s""""pinned":true,"pairs":$pj}"""
     }
     val scaling = scalingJson(pairResults, nDocs)
     val scaling2m = scalingJson(pair2mResults, nDocs2m)

@@ -7,10 +7,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** The operator suite — one [[Slot]] per implemented operator from SURVEY.md §2
-  * (+ the training-data ops). A slot declares, side by side, its Spark
-  * definition and the DuckDB SQL that recomputes its result from the same
-  * tables (the oracle gate). [[slots]] is the one registry; [[queries]] and
+/** The operator suite — one [[Slot]] per implemented operator from SURVEY.md
+  * §2 and §8. A slot declares, side by side, its Spark definition and the
+  * DuckDB SQL that recomputes its result from the same tables (the oracle
+  * gate). [[slots]] is the one registry; [[queries]] and
   * [[oracleSql]] are views of it.
   */
 object SparkEntry {
@@ -29,33 +29,13 @@ object SparkEntry {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
-  private def emb(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** mm3/mm4 fixture: real WAV/MP4 container bytes with layout planted from
-    * doc_id (testdata carries no media) — even ids get 8-bit mono WAV at
-    * 1-4 kHz, odd ids an mvhd with timescale 600; the oracles recompute the
-    * planted sample layout / duration in SQL. */
-  private def avFixture(s: SparkSession, dir: String) = {
-    import s.implicits._
-    docs(s, dir).select(col("doc_id").cast("long").as("doc_id"))
-      .as[Long].map { id =>
-        val payload =
-          if (id % 2 == 0)
-            MultiModalOps.wavBytes(
-              sampleRate = (1000 + ((id / 2) % 4) * 1000).toInt, channels = 1,
-              bits = 8, nSamples = (500 + id % 12000).toInt)
-          else
-            MultiModalOps.mp4Bytes(600, 60 + id % 7200)
-        MultiModalOps.MediaRow(id, payload)
-      }
-  }
-
-  /** Scratch root for the slots that build an index/IVF snapshot inside the
-    * query (e1/e2/e3, n1_near, q_phrase_engine, v4c) — reclaimed at JVM exit
-    * so repeated bench/verify runs don't strand gigabytes under /tmp. */
+  /** Scratch root for the slots that build an index snapshot inside the
+    * query (e1/e2/e3, d9, n1_near, q_phrase_engine, q_resegment) — reclaimed
+    * at JVM exit so repeated bench/verify runs don't strand gigabytes under
+    * /tmp. */
   private def tempDir(prefix: String): String = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
@@ -69,10 +49,10 @@ object SparkEntry {
 
   /** JVM-wide memo of prebuilt snapshot roots, keyed by (sf dir, fixture
     * variant). An index is a prebuilt artifact — a real deployment builds it
-    * once and serves many queries — so the query-side slots (e2,
-    * q_phrase_engine, n1_near, v4c, and e3's input halves) reuse one build
-    * per variant instead of re-running the whole pipeline inside every
-    * query slot. The slots whose MEASURED operation is itself a build
+    * once and serves many queries — so the query-side slots (e2, d9,
+    * q_phrase_engine, q_resegment, n1_near, and e3's input halves) reuse
+    * one build per variant instead of re-running the whole pipeline inside
+    * every query slot. The slots whose MEASURED operation is itself a build
     * (e1's full build, e3's block-level merge) still do that work on every
     * call. A cache miss builds, so each entry remains a standalone function
     * of (spark, dir) no matter which order the driver invokes them in. */
@@ -219,19 +199,6 @@ object SparkEntry {
 
   // -- oracle SQL shared by several slots (DuckDB dialect) ---------------------
 
-  /** DuckDB expression for the `rPlanes`-bit signature of band `band` —
-    * oracle-side mirror of [[VectorOps.bandSignature]]. */
-  private def BandSigSqlExpr(band: Int, rPlanes: Int): String =
-    (0 until rPlanes).map { j =>
-      val w = VectorOps.hyperplaneWeights(64, band * rPlanes + j)
-        .map(v => s"CAST($v AS DOUBLE)").mkString("[", ", ", "]")
-      s"CASE WHEN list_dot_product(embedding::DOUBLE[], $w) > 0 THEN ${1L << j} ELSE 0 END"
-    }.mkString(" + ")
-
-  /** DuckDB expression for the 4-plane sign bucket of `embedding` —
-    * oracle-side mirror of [[VectorOps.bucketExpr]] (= band 0 at 4 planes). */
-  private val LshBucketSqlExpr: String = BandSigSqlExpr(0, 4)
-
   /** j9 similarity oracle, shared verbatim with j12 (which ranks over the
     * graph this query produces) and x1. */
   private val J9SimilaritySql =
@@ -278,41 +245,6 @@ object SparkEntry {
   private def topicLexiconValues: String =
     TopicLexicon.toSeq.sortBy(_._1)
       .map { case (t, v) => s"('$t', ${v}::DOUBLE)" }.mkString(", ")
-
-  /** Exact cosine top-20 against vec_id 0 — the oracle of v1 and of the
-    * IVF slots at full probe (v4b, v4c), where they must equal brute force. */
-  private val CosineTopKSql =
-    """WITH q AS (SELECT embedding::DOUBLE[] AS qe FROM embeddings WHERE vec_id = 0)
-      |SELECT vec_id, round(list_cosine_similarity(embedding::DOUBLE[], qe), 4) AS cos
-      |FROM embeddings CROSS JOIN q WHERE vec_id <> 0
-      |ORDER BY list_cosine_similarity(embedding::DOUBLE[], qe) DESC, vec_id LIMIT 20""".stripMargin
-
-  /** v5/v5b shared oracle: SQ8 quantize → reconstruct → symmetric cosine
-    * top-k, the same expression order as VectorOps' SqReExpr so the doubles
-    * are bit-identical. */
-  private val SqTopKOracleSql: String =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-      |u AS (SELECT vec_id, unnest(e) AS x, generate_subscripts(e, 1) AS d FROM e),
-      |dm AS (SELECT d, min(x) AS mn, max(x) AS mx FROM u GROUP BY d),
-      |b AS (SELECT list(mn ORDER BY d) AS mns, list(mx ORDER BY d) AS mxs FROM dm),
-      |r AS (SELECT vec_id, list_transform(generate_series(1, len(e)), i ->
-      |        mns[i] + (CASE WHEN mxs[i] = mns[i] THEN CAST(0.0 AS DOUBLE)
-      |          ELSE round((e[i] - mns[i]) / (mxs[i] - mns[i]) * CAST(255.0 AS DOUBLE), 0) END)
-      |          * (mxs[i] - mns[i]) / CAST(255.0 AS DOUBLE)) AS re
-      |      FROM e CROSS JOIN b),
-      |q AS (SELECT re AS qe FROM r WHERE vec_id = 0)
-      |SELECT vec_id, round(list_cosine_similarity(re, qe), 4) AS cos
-      |FROM r CROSS JOIN q WHERE vec_id <> 0
-      |ORDER BY round(list_cosine_similarity(re, qe), 4) DESC, vec_id LIMIT 20""".stripMargin
-
-  /** d6/d13: the v2b bucketed near-pair CTEs feeding the shared
-    * label-propagation chain. */
-  private val EmbeddingPairCtes =
-    s"""s AS (SELECT vec_id, embedding::DOUBLE[] AS e,
-       |  CAST($LshBucketSqlExpr AS BIGINT) AS bucket FROM embeddings),
-       |prs AS MATERIALIZED (SELECT a.vec_id AS a_id, b.vec_id AS b_id
-       |  FROM s a JOIN s b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-       |  WHERE round(list_cosine_similarity(a.e, b.e), 4) >= CAST(0.35 AS DOUBLE))""".stripMargin
 
   /** e1/e3: df per term = distinct-doc count over the same tokenization,
     * top 100 — the full-corpus term_stats a build or a merge must carry. */
@@ -1051,19 +983,6 @@ object SparkEntry {
          |FROM bits GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     Slot("d5_dedup_components", (s, dir) => DedupOps.dedupComponents(docs(s, dir)),
       DedupOps.dedupComponentsOracleSql(8)),
-    // d6: embedding-cosine near-dup groups — v2b's bucketed pair CTE feeding
-    // the shared label-propagation chain.
-    Slot("d6_embedding_dedup", (s, dir) => DedupOps.embeddingDedup(emb(s, dir), 0.35),
-      DedupOps.labelPropagationSql(EmbeddingPairCtes, 8,
-        "SELECT doc_id AS vec_id, component, doc_id = component AS is_canonical FROM l8 ORDER BY vec_id")),
-    // d13: SemDeDup-style purge — d6's semantic clusters reduced to one
-    // min-id representative each, survivors handed back (non-canonical
-    // members anti-joined away)
-    Slot("d13_semantic_purge", (s, dir) => DedupOps.semanticPurge(emb(s, dir), 0.35),
-      DedupOps.labelPropagationSql(EmbeddingPairCtes, 8,
-        """SELECT e2.vec_id, e2.label FROM embeddings e2
-          |WHERE e2.vec_id NOT IN (SELECT doc_id FROM l8 WHERE doc_id <> component)
-          |ORDER BY e2.vec_id""".stripMargin)),
     Slot("d4_jaccard_pairs", (s, dir) => DedupOps.jaccardPairs(docs(s, dir), 100L, 0.8),
       s"""WITH $TokCte,
          |t AS (SELECT DISTINCT doc_id, term FROM tok WHERE term <> '' AND doc_id < 100),
@@ -1515,102 +1434,6 @@ object SparkEntry {
          |WHERE sc.lm_logppl <= CAST(3.45 AS DOUBLE)
          |ORDER BY sc.doc_id""".stripMargin),
 
-    // -- similarity search over embeddings -----------------------------------
-    Slot("v1_ann_topk", (s, dir) => VectorOps.annTopK(emb(s, dir), 0L, 20), CosineTopKSql),
-    // v6: batched ANN — four queries answered in ONE corpus pass through a
-    // bounded map-side top-k aggregator (never a Q×N rank-window shuffle);
-    // the oracle ranks per query over the same rounded cosine, with the same
-    // (cos DESC, vec_id) tie-break the bounded aggregator uses
-    Slot("v6_batch_topk", (s, dir) =>
-      VectorOps.annTopKBatch(emb(s, dir), Seq(0L, 1L, 2L, 3L), 20),
-      """WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS qe FROM embeddings WHERE vec_id IN (0, 1, 2, 3)),
-        |s AS (SELECT q_id, vec_id, round(list_cosine_similarity(embedding::DOUBLE[], qe), 4) AS cos
-        |      FROM embeddings CROSS JOIN q WHERE vec_id <> q_id),
-        |r AS (SELECT q_id, vec_id, cos, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk FROM s)
-        |SELECT q_id, vec_id, cos, rnk FROM r WHERE rnk <= 20 ORDER BY q_id, rnk""".stripMargin),
-    Slot("v2_cosine_pairs", (s, dir) => VectorOps.cosinePairs(emb(s, dir), 200L, 0.35),
-      """WITH s AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings WHERE vec_id < 200)
-        |SELECT a.vec_id AS a_id, b.vec_id AS b_id, round(list_cosine_similarity(a.e, b.e), 4) AS cos
-        |FROM s a JOIN s b ON a.vec_id < b.vec_id
-        |WHERE round(list_cosine_similarity(a.e, b.e), 4) >= CAST(0.35 AS DOUBLE)
-        |ORDER BY a_id, b_id""".stripMargin),
-    Slot("v2b_cosine_verify", (s, dir) => VectorOps.cosineVerify(emb(s, dir), 0.35),
-      s"""WITH s AS (SELECT vec_id, embedding::DOUBLE[] AS e,
-         |  CAST($LshBucketSqlExpr AS BIGINT) AS bucket FROM embeddings)
-         |SELECT a.vec_id AS a_id, b.vec_id AS b_id, round(list_cosine_similarity(a.e, b.e), 4) AS cos
-         |FROM s a JOIN s b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-         |WHERE round(list_cosine_similarity(a.e, b.e), 4) >= CAST(0.35 AS DOUBLE)
-         |ORDER BY a_id, b_id""".stripMargin),
-    Slot("v3_lsh_bucket", (s, dir) => VectorOps.lshBuckets(emb(s, dir)),
-      s"SELECT vec_id, CAST($LshBucketSqlExpr AS BIGINT) AS bucket FROM embeddings ORDER BY vec_id"),
-    // banded sign-LSH near-pairs (VERDICT r3 task #4): 4 bands x 4 planes —
-    // occupancy and recall tunable independently; the verify join fans out
-    // only within (band, signature) buckets. Oracle candidates agree on ALL
-    // bits of ANY of the 4 bands.
-    Slot("v2c_banded_verify", (s, dir) =>
-      VectorOps.bandedCosineVerify(emb(s, dir), 0.35, bands = 4, rPlanes = 4),
-      s"""WITH s AS (SELECT vec_id, embedding::DOUBLE[] AS e,
-         |  CAST(${BandSigSqlExpr(0, 4)} AS BIGINT) AS s0,
-         |  CAST(${BandSigSqlExpr(1, 4)} AS BIGINT) AS s1,
-         |  CAST(${BandSigSqlExpr(2, 4)} AS BIGINT) AS s2,
-         |  CAST(${BandSigSqlExpr(3, 4)} AS BIGINT) AS s3 FROM embeddings)
-         |SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-         |  round(list_cosine_similarity(a.e, b.e), 4) AS cos
-         |FROM s a JOIN s b ON a.vec_id < b.vec_id AND
-         |  (a.s0 = b.s0 OR a.s1 = b.s1 OR a.s2 = b.s2 OR a.s3 = b.s3)
-         |WHERE round(list_cosine_similarity(a.e, b.e), 4) >= CAST(0.35 AS DOUBLE)
-         |ORDER BY a_id, b_id""".stripMargin),
-    Slot("v4_ivf_topk", (s, dir) => VectorOps.ivfTopK(emb(s, dir), 0L, 20),
-      s"""WITH s AS (SELECT vec_id, embedding::DOUBLE[] AS e,
-         |  CAST($LshBucketSqlExpr AS BIGINT) AS bucket FROM embeddings),
-         |q AS (SELECT e AS qe, bucket AS qb FROM s WHERE vec_id = 0)
-         |SELECT vec_id, round(list_cosine_similarity(e, qe), 4) AS cos
-         |FROM s CROSS JOIN q WHERE bit_count(xor(bucket, qb)) <= 1 AND vec_id <> 0
-         |ORDER BY round(list_cosine_similarity(e, qe), 4) DESC, vec_id LIMIT 20""".stripMargin),
-    // v5: SQ8 scalar quantization — per-dim bounds from one aggregate, brute
-    // top-k over reconstructed codes (symmetric SQ distance); the oracle
-    // runs identical quantize → reconstruct → cosine math (same expression
-    // order, so bit-identical doubles), ORDER BY the same rounded key
-    Slot("v5_sq_topk", (s, dir) => VectorOps.sqTopK(emb(s, dir), 0L, 20), SqTopKOracleSql),
-    // v5b: persisted IVF-SQ (FAISS IVFx,SQ8 shape) — oracle-checked at
-    // nProbe = k where the probe set covers every cell, so the result must
-    // equal the SQ8 brute force, the exact v5 oracle (validates codes,
-    // decode, probe pruning); pruned-probe recall and partition pruning are
-    // pinned in specs
-    Slot("v5b_ivf_sq", (s, dir) => {
-      val e = emb(s, dir)
-      val root = cachedSnapshot(dir, "ivfsq") { r =>
-        VectorOps.buildIvfSqIndex(e, r, k = 8, iters = 4)
-      }
-      val q = e.where(col("vec_id") === 0L).select(col("embedding"))
-        .collect()(0).getSeq[Float](0).toArray
-      VectorOps.ivfSqIndexTopK(s, root, q, 21, nProbe = 8)
-        .where(col("vec_id") =!= 0L)
-    }, SqTopKOracleSql),
-    // trained-centroid IVF, oracle-checked at nProbe = k where it must equal
-    // exact brute force (validates centroids, assignment map, probe
-    // selection, cosine); pruned-probe recall is pinned in OpsSpec
-    Slot("v4b_ivf_trained", (s, dir) => {
-      val e = emb(s, dir)
-      VectorOps.ivfCentroidTopK(e, VectorOps.kmeansCentroids(e, k = 8, iters = 4),
-        0L, 20, nProbe = 8)
-    }, CosineTopKSql),
-    // persisted cell-partitioned IVF snapshot, searched by vector; the
-    // oracle checks the full-probe degeneracy (== brute force); pruned-probe
-    // equivalence and partition pruning are spec-pinned
-    Slot("v4c_ivf_persisted", (s, dir) => {
-      val e = emb(s, dir)
-      val root = cachedSnapshot(dir, "ivf") { r =>
-        VectorOps.buildIvfIndex(e, r, k = 8, iters = 4)
-      }
-      val q = e.where(col("vec_id") === 0L).select(col("embedding"))
-        .collect()(0).getSeq[Float](0).map(_.toDouble).toArray
-      // k+1 then drop the query's own row (searched by vector, so it
-      // matches itself at cos 1.0)
-      VectorOps.ivfIndexTopK(s, root, q, 21, nProbe = 8)
-        .where(col("vec_id") =!= 0L)
-    }, CosineTopKSql),
-
     // -- text analysis (T1-T4) ------------------------------------------------
     Slot("t1_langid", (s, dir) => TextOps.langId(docs(s, dir)),
       s"""WITH $TokCte,
@@ -1935,70 +1758,6 @@ object SparkEntry {
          |  regexp_replace(t2, '${TextOps.PhoneRe}', '<PHONE>', 'g') AS t3 FROM s2)
          |SELECT doc_id, n_emails, n_ips, n_phones, md5(t3) AS clean_md5
          |FROM s3 ORDER BY doc_id""".stripMargin),
-
-    // -- multimodal container decode ------------------------------------------
-    // mm2: REAL container decode (VERDICT r3 task #5) — the fixture builds
-    // actual PNG (signature + IHDR + CRC32) and JPEG (SOI + APP0 + SOF0)
-    // bytes with dimensions planted from doc_id, and the engine-side parser
-    // walks the real byte layout; the oracle recomputes the planted fields.
-    // Pixel decode is out of scope (no codec library is a dependency).
-    Slot("mm2_decode_headers", (s, dir) => {
-      import s.implicits._
-      val media = docs(s, dir).select(col("doc_id").cast("long").as("doc_id"))
-        .as[Long].map { id =>
-          val w = (16 + id % 640).toInt
-          val h = (16 + (id * 7) % 480).toInt
-          val payload =
-            if (id % 2 == 0) MultiModalOps.pngBytes(w, h, Seq(0, 2, 6)((id % 3).toInt))
-            else MultiModalOps.jpegBytes(w, h, (1 + id % 3).toInt)
-          MultiModalOps.MediaRow(id, payload)
-        }
-      MultiModalOps.decodeImageMeta(s, media).toDF().orderBy("doc_id")
-    },
-      """SELECT doc_id,
-        |CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END AS format,
-        |(16 + doc_id % 640)::BIGINT AS width,
-        |(16 + (doc_id * 7) % 480)::BIGINT AS height,
-        |(CASE WHEN doc_id % 2 = 0
-        |  THEN (CASE doc_id % 3 WHEN 0 THEN 0 WHEN 1 THEN 2 ELSE 6 END)
-        |  ELSE 1 + doc_id % 3 END)::BIGINT AS color
-        |FROM documents ORDER BY doc_id""".stripMargin),
-
-    // mm3: REAL audio/video container decode (round 4) — actual WAV
-    // (RIFF/WAVE fmt+data, LE chunk walk) and MP4 (ftyp+moov/mvhd, BE box
-    // walk) bytes with layout planted from doc_id; the parser walks the real
-    // container structure, the oracle recomputes the planted layout (WAV
-    // duration = floor(nSamples*1000/rate) — byteRate cancels the blockAlign
-    // factor; MP4 duration = floor(ticks*1000/timescale)). Sample decode is
-    // out of scope — headers need no codec library.
-    Slot("mm3_av_headers", (s, dir) =>
-      MultiModalOps.decodeAvMeta(s, avFixture(s, dir)).toDF().orderBy("doc_id"),
-      """SELECT doc_id,
-        |CASE WHEN doc_id % 2 = 0 THEN 'wav' ELSE 'mp4' END AS format,
-        |(CASE WHEN doc_id % 2 = 0 THEN 1000 + ((doc_id // 2) % 4) * 1000
-        |      ELSE -1 END)::BIGINT AS sample_rate,
-        |(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE -1 END)::BIGINT AS channels,
-        |(CASE WHEN doc_id % 2 = 0
-        |  THEN ((500 + doc_id % 12000) * 1000) // (1000 + ((doc_id // 2) % 4) * 1000)
-        |  ELSE ((60 + doc_id % 7200) * 1000) // 600 END)::BIGINT AS duration_ms
-        |FROM documents ORDER BY doc_id""".stripMargin),
-
-    // mm4: frame-sample plumbing over the REAL parsed duration — one row per
-    // sampled frame, n = min(8, ceil(seconds)), ts = i*D/n in integer ms; a
-    // row-local flatMap (no shuffle, output bounded by maxFrames x rows).
-    Slot("mm4_frame_sample", (s, dir) =>
-      MultiModalOps.sampleFrames(s, avFixture(s, dir)).toDF()
-        .orderBy("doc_id", "frame_idx"),
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN doc_id % 2 = 0
-        |      THEN ((500 + doc_id % 12000) * 1000) // (1000 + ((doc_id // 2) % 4) * 1000)
-        |      ELSE ((60 + doc_id % 7200) * 1000) // 600 END)::BIGINT AS dur
-        |  FROM documents),
-        |n AS (SELECT doc_id, dur, LEAST(8, (dur + 999) // 1000) AS nf FROM d WHERE dur > 0)
-        |SELECT doc_id, i::BIGINT AS frame_idx, ((i * dur) // nf)::BIGINT AS ts_ms
-        |FROM (SELECT doc_id, dur, nf, UNNEST(range(0, nf)) AS i FROM n) t
-        |ORDER BY doc_id, frame_idx""".stripMargin),
 
     // -- the snapshot index engine itself, oracle-checked over the
     // space-tokenized journal fixture (plainJournal): e1 = term_stats df,

@@ -21,11 +21,10 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
-  /** Hard cap on the O(n²) brute-force pair twins ([[jaccardPairs]],
-    * `VectorOps.cosinePairs`). They exist as oracle aids and verify
-    * baselines; past ~10⁴ ids the quadratic pair universe stops being a
-    * sane Spark job and the banded/LSH paths are the only correct call
-    * (VERDICT r3 "what's wrong #4"). */
+  /** Hard cap on the O(n²) brute-force pair twin ([[jaccardPairs]]). It
+    * exists as an oracle aid and verify baseline; past ~10⁴ ids the
+    * quadratic pair universe stops being a sane Spark job and the LSH path
+    * is the only correct call (VERDICT r3 "what's wrong #4"). */
   final val BrutePairBound: Long = 10000L
 
   /** Exact dedup: md5 content groups with a deterministic survivor
@@ -220,7 +219,7 @@ object DedupOps {
   /** DuckDB min-label-propagation chain over a candidate-pair CTE: the caller
     * supplies WITH-clause CTEs ending in `prs(a_id, b_id)` and the final
     * SELECT (reading `l<iters>(doc_id, component)`). Shared by the d5
-    * (MinHash-LSH) and d6 (embedding-cosine) component oracles. */
+    * component oracle and the d11 purge oracle. */
   def labelPropagationSql(prsCtes: String, iters: Int, select: String): String = {
     // MATERIALIZED: each l_i references l_{i-1} twice — without the hint
     // DuckDB inlines CTEs, re-expanding the whole chain 2^iters times (at
@@ -238,46 +237,6 @@ object DedupOps {
          |  GROUP BY l.doc_id, l.component)""".stripMargin
     }
     (base +: steps).mkString(",\n") + s"\n$select"
-  }
-
-  /** Embedding-cosine near-duplicate groups — sign-LSH buckets propose
-    * (occupancy-bounded same-bucket join, never corpus²), exact cosine ≥
-    * `threshold` verifies ([[VectorOps.cosineVerify]]), fixpoint min-label
-    * propagation groups. `component` is the group's min vec_id;
-    * `is_canonical` marks the one vector per group a dedup pass keeps.
-    * Vectors with no near-duplicate are omitted (they trivially keep
-    * themselves) — same contract as [[dedupComponents]]. Cross-bucket near
-    * pairs are sign-LSH's tunable recall trade (see cosineVerify). */
-  def embeddingDedup(emb: DataFrame, threshold: Double, planes: Int = 4,
-                     maxIters: Int = 64): DataFrame =
-    componentsFromPairs(
-      VectorOps.cosineVerify(emb, threshold, planes).select(col("a_id"), col("b_id")),
-      maxIters)
-      .select(col("doc_id").as("vec_id"), col("component"),
-        (col("doc_id") === col("component")).as("is_canonical"))
-      .orderBy("vec_id")
-
-  /** D13: SemDeDup-style semantic purge (Abbas et al. 2023, "SemDeDup:
-    * Data-efficient learning at web-scale through semantic deduplication"):
-    * embedding-space near-duplicate groups ([[embeddingDedup]]: sign-LSH
-    * buckets propose, exact cosine ≥ `threshold` verifies, min-label
-    * propagation clusters), then keep ONE representative per semantic
-    * cluster and purge the rest — the "hand the corpus back" artifact, the
-    * embedding twin of [[fuzzyDedupPurge]]. Representative = min vec_id
-    * (the paper keeps the member with lowest similarity to the cluster
-    * centroid; min-id is the deterministic oracle-checkable analog —
-    * divergence documented). Returns the surviving (vec_id, label).
-    *
-    * Scale: inherits d6's shape (bucketed pair proposal, pair-volume-bounded
-    * propagation); the final purge is a LEFT ANTI against the dropped-id
-    * set, which AQE broadcasts at semantic-dup rates — the corpus itself
-    * never shuffles. */
-  def semanticPurge(emb: DataFrame, threshold: Double,
-                    maxIters: Int = 64): DataFrame = {
-    val dropped = embeddingDedup(emb, threshold, maxIters = maxIters)
-      .where(!col("is_canonical")).select("vec_id")
-    emb.join(dropped, Seq("vec_id"), "left_anti")
-      .select("vec_id", "label").orderBy("vec_id")
   }
 
   /** Exact token-set Jaccard for a CANDIDATE PAIR table (a_id, b_id) — the

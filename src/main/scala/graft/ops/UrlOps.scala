@@ -281,6 +281,14 @@ object UrlOps {
     *     null (the reference's `createURI`/EdgeUrl `Optional.empty`) are
     *     dropped.
     *
+    * Known divergences, kept because no copy of the reference is at hand to
+    * check a fix against:
+    *   - the `rel` attribute is never read, so an anchor with
+    *     `rel="noindex"`, which the reference skips, is extracted here;
+    *   - a relative frame `src` keeps its raw spaces, where the reference's
+    *     `resolveRelativeUrl` writes them as `%20` (only anchors pass
+    *     through `getUrl`'s space stripping).
+    *
     * Output: one row per surviving href/src — (doc_id, src_domain, kind
     * ('a' | 'frame'), href, url, proto…canonical), unordered: a caller
     * that needs an order sorts (w5 does; w7/w8 need none). `src_domain` is the

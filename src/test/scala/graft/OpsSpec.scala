@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Training-data operator properties that the DuckDB oracles can't express:
   * fixpoint convergence on deep duplicate chains, zero-shuffle physical plans
   * for the row-local rewrites, LSH→exact-verify composition equivalence, and
-  * IVF recall against the brute-force baseline. */
+  * query-path agreement across the engine's evaluation routes. */
 class OpsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -85,37 +85,6 @@ class OpsSpec extends AnyFunSuite {
     // every verified pair was proposed by LSH (composition, not all-pairs)
     val proposed = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.keySet.subsetOf(proposed))
-  }
-
-  test("cosineVerify equals cosinePairs restricted to same-bucket pairs") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val viaLsh = VectorOps.cosineVerify(emb, 0.35).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val buckets = VectorOps.lshBuckets(emb).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bounded = VectorOps.cosinePairs(emb, DedupOps.BrutePairBound, 0.35).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .filter { case (a, b, _) => buckets(a) == buckets(b) }.toSet
-    assert(viaLsh === bounded)
-    assert(viaLsh.nonEmpty)
-  }
-
-  test("embeddingDedup groups transitively and flags one canonical per group") {
-    import spark.implicits._
-    // three vectors on a chain: a≈b, b≈c, cos(a,c) lower but all in one sign
-    // bucket → one component via transitivity; d is orthogonal, no near-dup
-    val a = Array(1.0f, 0.0f, 0.05f, 0.0f)
-    val b = Array(0.9f, 0.0f, 0.45f, 0.0f)
-    val c = Array(0.6f, 0.0f, 0.8f, 0.0f)
-    val d = Array(0.0f, -1.0f, 0.0f, 0.1f)
-    val emb = Seq((0L, a), (1L, b), (2L, c), (7L, d)).toDF("vec_id", "embedding")
-    val out = DedupOps.embeddingDedup(emb, threshold = 0.8).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    assert(out.toSeq == Seq((0L, 0L, true), (1L, 0L, false), (2L, 0L, false)),
-      s"got ${out.toSeq}")
-    // sanity: a·c alone is below the threshold — only the chain connects them
-    val cosAC = VectorOps.cosinePairs(emb.where($"vec_id".isin(0L, 2L)), DedupOps.BrutePairBound, 0.0)
-      .collect().head.getDouble(2)
-    assert(cosAC < 0.8, s"fixture broken: cos(a,c)=$cosAC")
   }
 
   // "one-shot local" is a cached handle with the cap lifted (every block a
@@ -283,245 +252,6 @@ class OpsSpec extends AnyFunSuite {
     val docsT = spark.read.parquet(s"$root/snapshots/snap-1/documents")
     assert(docsT.columns.contains("fingerprint"))
     assert(docsT.where(col("fingerprint") =!= 0L).count() > 0L)
-  }
-
-  test("image header parser round-trips real PNG/JPEG bytes and rejects junk") {
-    // PNG: every color type the fixture plants, plus edge dims
-    for ((w, h, c) <- Seq((16, 16, 0), (654, 495, 2), (1, 1, 6), (65535, 2, 2))) {
-      val parsed = MultiModalOps.parseImageMeta(MultiModalOps.pngBytes(w, h, c))
-      assert(parsed === Some(("png", w, h, c)))
-    }
-    // JPEG: the APP0 walk must skip to SOF0 correctly for 1-3 components
-    for ((w, h, n) <- Seq((16, 16, 1), (654, 495, 3), (1, 1, 2))) {
-      val parsed = MultiModalOps.parseImageMeta(MultiModalOps.jpegBytes(w, h, n))
-      assert(parsed === Some(("jpeg", w, h, n)))
-    }
-    // junk, truncation, JPEG with no SOF before EOI
-    assert(MultiModalOps.parseImageMeta("not an image".getBytes) === None)
-    assert(MultiModalOps.parseImageMeta(MultiModalOps.pngBytes(4, 4, 2).take(20)) === None)
-    assert(MultiModalOps.parseImageMeta(Array(0xFF, 0xD8, 0xFF, 0xD9).map(_.toByte)) === None)
-    // PNG CRC is real: an independent reader (java ImageIO would) sees the
-    // same IHDR CRC32 the spec recomputes here
-    val png = MultiModalOps.pngBytes(100, 50, 2)
-    val crc = new java.util.zip.CRC32()
-    crc.update(png.slice(12, 29)) // "IHDR" + 13-byte payload
-    val stored = java.nio.ByteBuffer.wrap(png.slice(29, 33)).getInt & 0xFFFFFFFFL
-    assert(stored === crc.getValue)
-  }
-
-  test("av header parser round-trips real WAV/MP4 bytes and rejects junk") {
-    // WAV: rate/channels/bits grids; duration must floor like dataLen/byteRate
-    for ((rate, ch, bits, n) <- Seq((8000, 1, 8, 4000), (44100, 2, 16, 44100),
-                                    (1000, 1, 8, 1500), (48000, 6, 24, 12000))) {
-      val parsed = MultiModalOps.parseWavMeta(MultiModalOps.wavBytes(rate, ch, bits, n))
-      assert(parsed === Some((rate, ch, n.toLong * 1000L / rate)))
-    }
-    // MP4: v0 mvhd duration in ms, including a >32s duration
-    for ((ts, dur) <- Seq((600, 600L), (600, 90000L), (1000, 1L), (90000, 123456L))) {
-      val parsed = MultiModalOps.parseMp4Meta(MultiModalOps.mp4Bytes(ts, dur))
-      assert(parsed === Some(dur * 1000L / ts))
-    }
-    // junk, truncation, RIFF that is not WAVE, mp4 without a moov
-    assert(MultiModalOps.parseWavMeta("RIFFxxxxAVI LIST".getBytes ++ new Array[Byte](40)) === None)
-    assert(MultiModalOps.parseWavMeta(MultiModalOps.wavBytes(8000, 1, 8, 100).take(30)) === None)
-    assert(MultiModalOps.parseMp4Meta(MultiModalOps.mp4Bytes(600, 600).take(16)) === None)
-    assert(MultiModalOps.parseMp4Meta("free".getBytes) === None)
-    // decodeAvMeta routes by container and degrades to unknown
-    import spark.implicits._
-    val rows = Seq(
-      MultiModalOps.MediaRow(0L, MultiModalOps.wavBytes(2000, 1, 8, 5000)),
-      MultiModalOps.MediaRow(1L, MultiModalOps.mp4Bytes(600, 3000)),
-      MultiModalOps.MediaRow(2L, "garbage".getBytes)).toDS()
-    val metas = MultiModalOps.decodeAvMeta(spark, rows).collect().sortBy(_.doc_id)
-    assert(metas.map(m => (m.format, m.sample_rate, m.channels, m.duration_ms)).toSeq ===
-      Seq(("wav", 2000L, 1L, 2500L), ("mp4", -1L, -1L, 5000L), ("unknown", -1L, -1L, -1L)))
-    // frame sampling: n = min(8, ceil(seconds)), even integer-ms spacing
-    val frames = MultiModalOps.sampleFrames(spark, rows).collect()
-      .groupBy(_.doc_id).view.mapValues(_.sortBy(_.frame_idx)).toMap
-    assert(frames(0L).map(f => (f.frame_idx, f.ts_ms)).toSeq ===
-      (0L until 3L).map(i => (i, i * 2500L / 3L)).toSeq)
-    assert(frames(1L).length === 5) // 5.0 s -> 5 frames
-    assert(!frames.contains(2L))    // unparseable payloads yield no frames
-  }
-
-  test("container parsers survive hostile bytes: fuzz never throws or hangs") {
-    // at corpus scale malformed media is a certainty — every parser must
-    // return an Option in bounded time on arbitrary bytes, including
-    // mutations of REAL containers (lying sizes, truncations)
-    val rng = new scala.util.Random(1234)
-    val seeds = Seq(
-      MultiModalOps.wavBytes(8000, 2, 16, 1000),
-      MultiModalOps.mp4Bytes(600, 90000),
-      MultiModalOps.pngBytes(640, 480, 6),
-      MultiModalOps.jpegBytes(320, 200, 3))
-    val cases = Iterator.fill(300) {
-      val pick = rng.nextInt(4)
-      if (pick == 0) { // pure noise
-        val a = new Array[Byte](rng.nextInt(256)); rng.nextBytes(a); a
-      } else {
-        val base = seeds(rng.nextInt(seeds.length)).clone()
-        if (pick == 1) base.take(rng.nextInt(base.length + 1)) // truncation
-        else { // byte flips — frequently corrupts a size field
-          (0 until 8).foreach(_ => base(rng.nextInt(base.length)) = rng.nextInt(256).toByte)
-          base
-        }
-      }
-    }.toSeq
-    for (c <- cases) {
-      MultiModalOps.parseWavMeta(c)
-      MultiModalOps.parseMp4Meta(c)
-      MultiModalOps.parseImageMeta(c)
-    }
-    // specifically: a WAV whose data-chunk size field claims 0xFFFFFFFF must
-    // terminate (the Int-wrap bug this guards: 8 + size.toInt walked i
-    // BACKWARDS into an infinite loop before the Long-arithmetic fix)
-    val lying = MultiModalOps.wavBytes(8000, 1, 8, 100)
-    java.nio.ByteBuffer.wrap(lying).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .putInt(40, 0xFFFFFFFF)
-    assert(MultiModalOps.parseWavMeta(lying).isEmpty
-      || MultiModalOps.parseWavMeta(lying).nonEmpty) // terminated = passed
-  }
-
-  test("stubbed media embeddings feed the ANN ops end-to-end") {
-    val docs = chainDocs
-    val emb = MultiModalOps.extractEmbeddings(spark, docs).toDF()
-    assert(emb.count() === 9)
-    // deterministic: same payload → same vector
-    val twice = MultiModalOps.extractEmbeddings(spark, docs).toDF()
-    assert(emb.collect().map(_.toString).sorted.toSeq ===
-      twice.collect().map(_.toString).sorted.toSeq)
-    // composes with the vector ops (bucket join path, no crossJoin)
-    val buckets = VectorOps.lshBuckets(emb)
-    assert(buckets.count() === 9)
-    val pairs = VectorOps.cosineVerify(emb, -1.0) // keep all same-bucket pairs
-    assert(!planOf(pairs).contains("CartesianProduct"))
-  }
-
-  test("banded LSH: occupancy shrinks with rPlanes, recall holds, no crossJoin") {
-    // 512 pseudo-random vectors with 256 planted near-dup pairs (i, i+256):
-    // the twin is the base plus a small deterministic perturbation
-    // hash-based coordinates, NOT sinusoids — sin(a·i + b·j) puts every
-    // vector on one 2-D circle and collapses any sign-LSH scheme
-    val emb = spark.range(0, 512).selectExpr(
-      "id AS vec_id",
-      "transform(sequence(0, 63), j -> cast(" +
-        "pmod(xxhash64(concat(cast(id % 256 as string), ':', cast(j as string))), 1000) / 500.0d - 1.0d" +
-        " + (id div 256) * 0.02d * (pmod(xxhash64(concat(cast(id as string), '!', cast(j as string))), 100) / 50.0d - 1.0d)" +
-        " as float)) AS embedding")
-      .cache()
-    // occupancy: 8-plane bands spread the same corpus over 2^8 buckets per
-    // band — max bucket must be well under the single 4-plane table's
-    // (the round-3 default whose 16 buckets fan out corpus/16 per bucket)
-    def maxBucket(bands: Int, r: Int): Long =
-      VectorOps.bandOccupancy(emb, bands, r).agg(max(col("n"))).collect()(0).getLong(0)
-    val coarse = maxBucket(1, 4)
-    val fine = maxBucket(8, 8)
-    assert(coarse > 40L, s"fixture too uniform for the test: coarse max $coarse")
-    assert(fine < coarse / 2, s"8-plane bands should halve occupancy: $fine vs $coarse")
-    // recall vs brute force at the near-dup threshold: the planted twins sit
-    // at cos ≈ 0.99 and 8 bands × 8 planes must recover them all
-    val brute = VectorOps.cosinePairs(emb, DedupOps.BrutePairBound, 0.95).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(brute.size >= 256, s"fixture must plant >= 256 near-dup pairs, got ${brute.size}")
-    val banded = VectorOps.bandedCosineVerify(emb, 0.95, bands = 8, rPlanes = 8)
-    assert(!planOf(banded).contains("CartesianProduct"))
-    val got = banded.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got.subsetOf(brute), "banded verify must never invent pairs")
-    val recall = got.size.toDouble / brute.size
-    assert(recall >= 0.95, s"banded recall $recall (${got.size}/${brute.size})")
-    // the occupancy guard is observational only: results identical with it on
-    val guarded = VectorOps.bandedCosineVerify(emb, 0.95, bands = 8, rPlanes = 8,
-      occupancyWarn = 1L).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(guarded === got)
-    emb.unpersist()
-    ()
-  }
-
-  test("SQ8: codes in range, reconstruction within per-dim error bound, recall high") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val bounds = VectorOps.sqBounds(emb)
-    val Array(brow) = bounds.collect()
-    val mns = brow.getSeq[Double](0); val mxs = brow.getSeq[Double](1)
-    // codes are genuine 8-bit
-    val codes = VectorOps.sqQuantize(emb.where(col("vec_id") < 50), bounds).collect()
-    assert(codes.forall(_.getSeq[Int](1).forall(c => c >= 0 && c <= 255)))
-    // reconstruction error ≤ half a quantization step per dimension
-    val joined = VectorOps.sqReconstruct(emb.where(col("vec_id") < 50), bounds).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val orig = emb.where(col("vec_id") < 50).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    orig.foreach { case (id, xs) =>
-      joined(id).zip(xs).zipWithIndex.foreach { case ((rec, x), d) =>
-        val step = (mxs(d) - mns(d)) / 255.0
-        assert(math.abs(rec - x) <= step / 2 + 1e-9,
-          s"vec $id dim $d: |${rec} - $x| > ${step / 2}")
-      }
-    }
-    // SQ8 search ranks ≈ exact search: recall@20 stays high on the fixture
-    val brute = VectorOps.annTopK(emb, 0L, 20).collect().map(_.getLong(0)).toSet
-    val sq = VectorOps.sqTopK(emb, 0L, 20).collect().map(_.getLong(0)).toSet
-    val recall = (brute & sq).size.toDouble / brute.size
-    assert(recall >= 0.8, s"SQ8 recall@20 too low: $recall")
-    // bounds aggregate broadcasts; the corpus is never joined to itself
-    assert(!planOf(VectorOps.sqTopK(emb, 0L, 20)).contains("CartesianProduct"))
-  }
-
-  test("ivfTopK recall@20 vs brute force is the expected deterministic value") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val brute = VectorOps.annTopK(emb, 0L, 20).collect().map(_.getLong(0)).toSet
-    val ivf = VectorOps.ivfTopK(emb, 0L, 20).collect().map(_.getLong(0)).toSet
-    val recall = (brute & ivf).size.toDouble / brute.size
-    // deterministic fixture ⇒ recall is a fixed number; pin a floor so a
-    // probe-structure regression (wrong bucket, correlated planes, broken
-    // multi-probe) fails loudly
-    assert(recall >= 0.5, s"IVF recall@20 collapsed: $recall (ivf=${ivf.size})")
-    // every IVF result must come from a probed cell (Hamming ≤ 1 from the
-    // query's bucket)
-    val buckets = VectorOps.lshBuckets(emb).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val qb = buckets(0L)
-    assert(ivf.forall(id => java.lang.Long.bitCount(buckets(id) ^ qb) <= 1))
-  }
-
-  test("trained-centroid IVF: deterministic k-means, recall beats nProbe/k corpus fraction") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val centers = VectorOps.kmeansCentroids(emb, k = 8, iters = 4)
-    assert(centers.length === 8)
-    // deterministic seeding: retraining reproduces the same centroids
-    val again = VectorOps.kmeansCentroids(emb, k = 8, iters = 4)
-    assert(centers.zip(again).forall { case (a, b) =>
-      a.zip(b).forall { case (x, y) => math.abs(x - y) < 1e-9 } })
-    val brute = VectorOps.annTopK(emb, 0L, 20).collect().map(_.getLong(0)).toSet
-    val ivf = VectorOps.ivfCentroidTopK(emb, centers, 0L, 20, nProbe = 3)
-      .collect().map(_.getLong(0)).toSet
-    val recall = (brute & ivf).size.toDouble / brute.size
-    // probing 3/8 cells must recover well over 3/8 of the true top-20 —
-    // that is the whole point of TRAINED cells over random partitioning
-    assert(recall >= 0.6, s"trained IVF recall@20 too low: $recall")
-    // nProbe = k degenerates to exact brute force
-    val full = VectorOps.ivfCentroidTopK(emb, centers, 0L, 20, nProbe = 8)
-      .collect().map(_.getLong(0)).toSet
-    assert(full === brute, "probing every cell must equal brute force")
-  }
-
-  test("persisted IVF index: probed search equals the inline path") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "ivf").toString
-    VectorOps.buildIvfIndex(emb, dir, k = 8, iters = 4)
-    val q = emb.where(col("vec_id") === 0L)
-      .select(col("embedding")).collect()(0)
-      .getSeq[Float](0).map(_.toDouble).toArray
-    val centers = VectorOps.kmeansCentroids(emb, k = 8, iters = 4)
-    for (nProbe <- Seq(3, 8)) {
-      val persisted = VectorOps.ivfIndexTopK(spark, dir, q, 21, nProbe)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val inline = VectorOps.ivfCentroidTopK(emb, centers, 0L, 21, nProbe)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      // ivfIndexTopK searches by vector so it returns the query itself at
-      // cos=1.0; drop it before comparing against the by-id inline path
-      assert(persisted.filter(_._1 != 0L).take(20) === inline.take(20),
-        s"persisted != inline at nProbe=$nProbe")
-    }
   }
 
   test("repetition computes the Gopher signals on a hand-checked fixture") {
@@ -769,27 +499,6 @@ class OpsSpec extends AnyFunSuite {
     assert(setPos === seenPos)
   }
 
-  test("ivfSqIndexTopK at nProbe=all equals sqTopK; probes prune cell partitions") {
-    import java.nio.file.Files
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "ivfsq").toString
-    VectorOps.buildIvfSqIndex(emb, dir, k = 8, iters = 2)
-    val q = emb.where(col("vec_id") === 0L)
-      .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
-    val full = VectorOps.ivfSqIndexTopK(spark, dir, q, 21, nProbe = 8)
-      .where(col("vec_id") =!= 0L).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val brute = VectorOps.sqTopK(emb, 0L, 20).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(full === brute, "all-cell probe must equal SQ8 brute force")
-    // pruned probe: partition pruning at the scan + decent recall
-    val pruned = VectorOps.ivfSqIndexTopK(spark, dir, q, 21, nProbe = 3)
-    assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(planOf(pruned)).isDefined,
-      s"cell not a partition filter:\n${planOf(pruned)}")
-    val prunedIds = pruned.where(col("vec_id") =!= 0L).collect().map(_.getLong(0)).toSet
-    val recall = (brute.map(_._1).toSet & prunedIds).size
-    assert(recall >= 10, s"IVF-SQ recall@20 at nProbe=3/8 collapsed: $recall")
-  }
-
   test("lmLogPpl and bloomDedup plans: no cartesian, no window, bitset side broadcast") {
     import spark.implicits._
     val docs = Seq((0L, "a b c", "en"), (1L, "b c d", "fr")).toDF("doc_id", "text", "lang")
@@ -800,104 +509,6 @@ class OpsSpec extends AnyFunSuite {
     // never a shuffled or sort-merge join
     assert(bPlan.contains("BroadcastNestedLoopJoin"), bPlan)
     assert(!bPlan.contains("SortMergeJoin") && !bPlan.contains("ShuffledHashJoin"), bPlan)
-  }
-
-  test("PQ: codes bounded, ADC matches reconstruction, training partition-independent, recall pinned") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val books = VectorOps.pqTrain(emb, m = 8, k = 32, iters = 4)
-    assert(books.length === 8 && books.forall(_.length === 32))
-    val codes = VectorOps.pqEncode(emb, books).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    assert(codes.values.forall(_.forall(c => c >= 0 && c < 32)))
-    // ADC identity: the LUT-decomposed cosine equals cos(q, explicit PQ
-    // reconstruction) — the decomposition is algebraically exact; one
-    // rounding step of slack for the different summation order
-    val q = emb.where(col("vec_id") === 0L).select(col("embedding"))
-      .collect()(0).getSeq[Float](0).map(_.toDouble).toArray
-    val qn = math.sqrt(q.map(x => x * x).sum)
-    val sub = 64 / 8
-    val top = VectorOps.pqTopK(emb, books, 0L, 20).collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-    top.foreach { case (id, cosLut) =>
-      val re = codes(id).zipWithIndex.flatMap { case (c, mi) => books(mi)(c) }.toArray
-      val dot = q.zip(re).map { case (a, b) => a * b }.sum
-      val rn = math.sqrt(re.map(x => x * x).sum)
-      val expl = math.rint(dot / (qn * rn) * 1e4) / 1e4
-      assert(math.abs(cosLut - expl) <= 1.0001e-4, s"vec $id: $cosLut vs $expl")
-    }
-    // seeded training is independent of the input partitioning
-    val books7 = VectorOps.pqTrain(emb.repartition(7), m = 8, k = 32, iters = 4)
-    assert(books.flatten.flatten.toSeq === books7.flatten.flatten.toSeq)
-    // 8 bytes/vector instead of 256 still ranks usefully on the fixture
-    val brute = VectorOps.annTopK(emb, 0L, 20).collect().map(_.getLong(0)).toSet
-    val recall = (top.map(_._1).toSet & brute).size
-    assert(recall >= 8, s"PQ recall@20 collapsed: $recall/20")
-  }
-
-  test("annTopKBatch: each query's slice equals the single-query operator; partial agg bounded") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val batch = VectorOps.annTopKBatch(emb, Seq(0L, 5L, 9L), 20).collect()
-      .groupBy(_.getLong(0))
-    Seq(0L, 5L, 9L).foreach { qid =>
-      val single = VectorOps.annTopK(emb, qid, 20).collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val slice = batch(qid).sortBy(_.getLong(3))
-        .map(r => (r.getLong(1), r.getDouble(2))).toSeq
-      // identical rounded-score multiset; membership may differ only at a
-      // rounded-cos tie on the k boundary (annTopK breaks ties on the
-      // unrounded cosine, the batch aggregator on the rounded one)
-      assert(slice.map(_._2).sorted === single.map(_._2).sorted, s"query $qid scores")
-      assert((slice.map(_._1).toSet & single.map(_._1).toSet).size >= 19, s"query $qid members")
-    }
-    // ranks are 1..k dense per query
-    batch.values.foreach(rows => assert(rows.map(_.getLong(3)).sorted.toSeq === (1L to 20L)))
-    // the plan aggregates through the bounded UDAF (ObjectHashAggregate),
-    // never a rank window over the scored stream
-    val plan = planOf(VectorOps.annTopKBatch(emb, Seq(0L, 1L), 5))
-    assert(plan.contains("ObjectHashAggregate") && !plan.contains("Window"), plan)
-  }
-
-  test("appendIvfSqIndex: appended vectors serve identically to a stored-bounds full scan") {
-    import java.nio.file.Files
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "ivfsqapp").toString
-    VectorOps.buildIvfSqIndex(emb.where(col("vec_id") % 2 === 0), dir, k = 8, iters = 2)
-    VectorOps.appendIvfSqIndex(emb.where(col("vec_id") % 2 === 1), dir)
-    // nothing lost, nothing rewritten: one code row per corpus vector
-    assert(spark.read.parquet(s"$dir/codes").count() === emb.count())
-    val q = emb.where(col("vec_id") === 0L)
-      .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
-    val got = VectorOps.ivfSqIndexTopK(spark, dir, q, 21, nProbe = 8)
-      .where(col("vec_id") =!= 0L).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // expected: brute cosine over the WHOLE corpus reconstructed with the
-    // STORED (even-half-trained) bounds — appended rows must be
-    // indistinguishable from built rows at probe-all
-    val bounds = spark.read.parquet(s"$dir/bounds")
-    val rec = VectorOps.sqReconstruct(emb, bounds)
-    val qe = rec.where(col("vec_id") === 0L).select(col("re").as("qe"))
-    val exp = rec.where(col("vec_id") =!= 0L)
-      .crossJoin(broadcast(qe))
-      .select(col("vec_id"), round(VectorOps.cosine(col("re"), col("qe")), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id")).limit(20)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(got === exp)
-  }
-
-  test("semanticPurge: keeps one representative per d6 cluster, survivors complete") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val groups = DedupOps.embeddingDedup(emb, 0.35).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    val dropped = groups.filter(!_._3).map(_._1).toSet
-    val survivors = DedupOps.semanticPurge(emb, 0.35).collect().map(_.getLong(0)).toSet
-    val all = emb.select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(survivors === (all -- dropped))
-    assert(dropped.nonEmpty, "fixture should contain semantic near-dups")
-    // every cluster retains exactly its min-id member
-    groups.groupBy(_._2).foreach { case (comp, members) =>
-      val ids = members.map(_._1)
-      assert((ids.toSet & survivors) === Set(ids.min), s"cluster $comp")
-    }
-    assert(!planOf(DedupOps.semanticPurge(emb, 0.35)).contains("CartesianProduct"))
   }
 
   test("curateModelBased: composition identity with its three stages") {
@@ -1065,107 +676,5 @@ class OpsSpec extends AnyFunSuite {
     assert(r(2L) === (("a", 3L)))
     val plan = planOf(TextOps.lineDedup(docs))
     assert(!plan.contains("Join") && !plan.contains("Window"), plan)
-  }
-
-  test("ivfPqIndexTopK: probe-all ADC equals explicit reconstruction; probes prune partitions") {
-    import java.nio.file.Files
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "ivfpq").toString
-    VectorOps.buildIvfPqIndex(emb, dir, k = 8, iters = 2, m = 8, kSub = 32)
-    val q = emb.where(col("vec_id") === 0L)
-      .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
-    // independent expected ranking: reconstruct x̂ = centroid + Σ book codes
-    // from the STORED sidecars in plain Scala, cosine against the raw query
-    val centers = spark.read.parquet(s"$dir/centroids").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
-    val books = spark.read.parquet(s"$dir/books").collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
-    val codes = spark.read.parquet(s"$dir/codes").collect()
-      .map(r => (r.getLong(0), r.getSeq[Int](1).toArray,
-        r.getAs[Int]("cell")))
-    val qd = q.map(_.toDouble)
-    val qn = math.sqrt(qd.map(x => x * x).sum)
-    val expected = codes.map { case (id, cs, cell) =>
-      val re = centers(cell).clone()
-      val sub = re.length / cs.length
-      for (mi <- cs.indices; i <- 0 until sub)
-        re(mi * sub + i) += books((mi, cs(mi)))(i)
-      val dot = qd.zip(re).map { case (a, b) => a * b }.sum
-      val rn = math.sqrt(re.map(x => x * x).sum)
-      (id, math.rint(dot / (qn * rn) * 1e4) / 1e4)
-    }.sortBy { case (id, c) => (-c, id) }.take(20).toSeq
-    val got = VectorOps.ivfPqIndexTopK(spark, dir, q, 20, nProbe = 8)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // the LUT decomposition is algebraically exact; allow one rounding step
-    assert(got.map(_._1) === expected.map(_._1),
-      s"probe-all ADC ids diverge\n got=$got\n exp=$expected")
-    got.zip(expected).foreach { case ((_, g), (_, e)) =>
-      assert(math.abs(g - e) <= 1.0001e-4, s"$g vs $e") }
-    // pruned probes: partition pruning at the scan
-    val pruned = VectorOps.ivfPqIndexTopK(spark, dir, q, 21, nProbe = 4)
-    assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(planOf(pruned)).isDefined,
-      s"cell not a partition filter:\n${planOf(pruned)}")
-    val prunedIds = pruned.where(col("vec_id") =!= 0L).collect().map(_.getLong(0)).toSet
-    // probe loss isolated from coding loss: the pruned scan must recover
-    // most of what the SAME codes rank at probe-all (nearest cells first)
-    val adcIds = got.map(_._1).filter(_ != 0L).toSet
-    val probeRecall = (adcIds & prunedIds).size
-    assert(probeRecall >= 14,
-      s"probe recall vs probe-all ADC collapsed: $probeRecall/${adcIds.size}")
-    // end-to-end sanity vs exact brute force — bounded by PQ coding quality
-    // (the raw-PQ v7 test floors at 8/20 on this fixture); deterministic
-    val brute = VectorOps.annTopK(emb, 0L, 20).collect().map(_.getLong(0)).toSet
-    val recall = (brute & prunedIds).size
-    assert(recall >= 6, s"IVF-PQ recall@20 at nProbe=4/8 collapsed: $recall")
-  }
-
-  test("appendIvfPqIndex: an empty append batch is a no-op") {
-    import java.nio.file.Files
-    import spark.implicits._
-    val emb = (0 until 64).map(i =>
-      (i.toLong, Array.tabulate(16)(j => math.sin(i * 7.0 + j).toFloat))).toDF("vec_id", "embedding")
-    val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "ivfpqe").toString
-    VectorOps.buildIvfPqIndex(emb, dir, k = 4, iters = 1, m = 8, kSub = 16)
-    val before = spark.read.parquet(s"$dir/codes").count()
-    VectorOps.appendIvfPqIndex(emb.where(lit(false)), dir)
-    assert(spark.read.parquet(s"$dir/codes").count() === before)
-  }
-
-  test("appendIvfPqIndex: no-retrain append serves identically from stored artifacts") {
-    import java.nio.file.Files
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "ivfpqa").toString
-    // build on the even half, append the odd half with stored centroids/books
-    VectorOps.buildIvfPqIndex(emb.where(col("vec_id") % 2 === 0), dir,
-      k = 8, iters = 2, m = 8, kSub = 16)
-    VectorOps.appendIvfPqIndex(emb.where(col("vec_id") % 2 === 1), dir)
-    val codes = spark.read.parquet(s"$dir/codes").collect()
-      .map(r => (r.getLong(0), r.getSeq[Int](1).toArray, r.getAs[Int]("cell")))
-    // every vector present exactly once, both halves
-    assert(codes.map(_._1).distinct.length === codes.length)
-    assert(codes.length === emb.count())
-    // probe-all serving over the merged index equals the ADC ranking
-    // recomputed from the stored sidecars (same identity as the build test)
-    val centers = spark.read.parquet(s"$dir/centroids").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
-    val books = spark.read.parquet(s"$dir/books").collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
-    val q = emb.where(col("vec_id") === 1L) // an APPENDED vector as the query
-      .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
-    val qd = q.map(_.toDouble)
-    val qn = math.sqrt(qd.map(x => x * x).sum)
-    val expected = codes.map { case (id, cs, cell) =>
-      val re = centers(cell).clone()
-      val sub = re.length / cs.length
-      for (mi <- cs.indices; i <- 0 until sub)
-        re(mi * sub + i) += books((mi, cs(mi)))(i)
-      val dot = qd.zip(re).map { case (a, b) => a * b }.sum
-      val rn = math.sqrt(re.map(x => x * x).sum)
-      (id, math.rint(dot / (qn * rn) * 1e4) / 1e4)
-    }.sortBy { case (id, c) => (-c, id) }.take(20).toSeq
-    val got = VectorOps.ivfPqIndexTopK(spark, dir, q, 20, nProbe = 8)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(got.map(_._1) === expected.map(_._1),
-      s"post-append ADC ids diverge\n got=$got\n exp=$expected")
   }
 }

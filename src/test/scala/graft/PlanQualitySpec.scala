@@ -136,20 +136,6 @@ class PlanQualitySpec extends AnyFunSuite {
       s"rank prefix pruned no forward row group: ${fwd.rowGroupsRead}/${fwd.rowGroups}")
   }
 
-  test("persisted IVF probe scan prunes cell partitions") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "ivfplan").toString
-    graft.ops.VectorOps.buildIvfIndex(emb, dir, k = 8, iters = 2)
-    val q = emb.where(col("vec_id") === 0L)
-      .select(col("embedding")).collect()(0)
-      .getSeq[Float](0).map(_.toDouble).toArray
-    val plan = planOf(graft.ops.VectorOps.ivfIndexTopK(spark, dir, q, 20, nProbe = 3))
-    // the whole point of the persisted layout: a probe reads nProbe/k of the
-    // corpus because `cell` is a partition column pruned at the scan
-    assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan).isDefined,
-      s"cell not a partition filter:\n$plan")
-  }
-
   test("term_stats planner lookup reads only the stats columns") {
     val df = spark.read.parquet(s"$indexDir/term_stats")
       .where(col("bucket") === 1)

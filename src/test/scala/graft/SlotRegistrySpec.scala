@@ -17,8 +17,8 @@ class SlotRegistrySpec extends AnyFunSuite {
   test("every slot has a query and a non-empty oracle, under one name") {
     assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
     assert(SparkEntry.slots.map(_.name).toSet === SparkEntry.queries.keySet)
-    assert(SparkEntry.slots.size === 107)
-    assert(SparkEntry.queries.size === 107)
+    assert(SparkEntry.slots.size === 91)
+    assert(SparkEntry.queries.size === 91)
     SparkEntry.oracleSql.foreach { case (name, sql) => assert(sql.trim.nonEmpty, name) }
   }
 
